@@ -4,26 +4,38 @@ import Model.BeamAnalysis
 
 /** Per-record image kernels (SURVEY §2.4 K1–K10), re-implemented from the
   * reference's numpy/scikit-image semantics as deterministic pure-Scala
-  * functions. They run inside Spark UDFs over `Array[Float]` image columns;
-  * each is row-local so the pipeline stays embarrassingly parallel — these
-  * never break the partitioning of the repetition table, only codegen
-  * (which is why stages isolate them in dedicated projections, SURVEY §4).
+  * functions. The stages call them through the native Catalyst expressions
+  * of [[ImageExprs]], which read the `array<float>` image columns in place;
+  * each kernel is row-local, so the pipeline stays embarrassingly parallel
+  * and never breaks the partitioning of the repetition table.
   *
-  * Images are flattened row-major float arrays with explicit (h, w).
+  * Images are flattened row-major float arrays with explicit (h, w). The
+  * kernels loop over primitive arrays only — no boxed elements or closures
+  * per pixel, which on 1 Mpx frames would dominate the run time and GC.
   */
 object ImageKernels {
 
   /** K2 `prepare_eiger_image`: zero-out invalid pixels (keep 0 <= v <= 2e7)
     * — `/root/reference/src/utilities.py:119-134`. The mean-collapse of
     * leading axes (K1) happens at ingest; 2-D input assumed here. */
-  def prepareImage(img: Array[Float]): Array[Float] =
-    img.map(v => if (v >= 0f && v <= 2e7f) v else 0f)
+  def prepareImage(img: Array[Float]): Array[Float] = {
+    val out = new Array[Float](img.length)
+    var i = 0
+    while (i < img.length) {
+      val v = img(i)
+      if (v >= 0f && v <= 2e7f) out(i) = v
+      i += 1
+    }
+    out
+  }
 
   /** Per-pixel 4-connected component root (compressed union-find root index;
     * -1 on background). Shared by K3's labeling and both morphology passes. */
   private def componentRoots(fg: Array[Boolean], h: Int, w: Int): Array[Int] = {
     val n = h * w
-    val parent = Array.tabulate(n)(identity)
+    val parent = new Array[Int](n)
+    var p = 0
+    while (p < n) { parent(p) = p; p += 1 }
     def find(x: Int): Int = {
       var r = x
       while (parent(r) != r) r = parent(r)
@@ -56,10 +68,11 @@ object ImageKernels {
 
   /** Component size per pixel (0 on background), from `componentRoots`. */
   private def componentSizes(roots: Array[Int]): Array[Int] = {
-    val counts = new scala.collection.mutable.HashMap[Int, Int]()
+    // roots are pixel indices, so a dense count array replaces a map
+    val counts = new Array[Int](roots.length)
     var i = 0
     while (i < roots.length) {
-      if (roots(i) >= 0) counts.update(roots(i), counts.getOrElse(roots(i), 0) + 1)
+      if (roots(i) >= 0) counts(roots(i)) += 1
       i += 1
     }
     val out = new Array[Int](roots.length)
@@ -76,7 +89,10 @@ object ImageKernels {
     * pixel count is strictly below `minSize`. */
   def removeSmallObjects(fg: Array[Boolean], h: Int, w: Int, minSize: Int): Array[Boolean] = {
     val sizes = componentSizes(componentRoots(fg, h, w))
-    Array.tabulate(fg.length)(i => fg(i) && sizes(i) >= minSize)
+    val out = new Array[Boolean](fg.length)
+    var i = 0
+    while (i < fg.length) { out(i) = fg(i) && sizes(i) >= minSize; i += 1 }
+    out
   }
 
   /** `morphology.remove_small_holes(mask, area_threshold)` (skimage
@@ -86,9 +102,14 @@ object ImageKernels {
     * qualifying background pockets touching the border, so no border
     * special-case here either. */
   def removeSmallHoles(fg: Array[Boolean], h: Int, w: Int, areaThreshold: Int): Array[Boolean] = {
-    val inv = fg.map(!_)
+    val inv = new Array[Boolean](fg.length)
+    var i = 0
+    while (i < fg.length) { inv(i) = !fg(i); i += 1 }
     val sizes = componentSizes(componentRoots(inv, h, w))
-    Array.tabulate(fg.length)(i => fg(i) || sizes(i) <= areaThreshold)
+    val out = new Array[Boolean](fg.length)
+    i = 0
+    while (i < fg.length) { out(i) = fg(i) || sizes(i) <= areaThreshold; i += 1 }
+    out
   }
 
   /** `morphology.convex_hull_image(mask)`: smallest convex polygon covering
@@ -152,7 +173,12 @@ object ImageKernels {
     hull.remove(hull.length - 1) // last point == first
 
     // rasterize: center inside-or-on every hull half-plane (skimage counts
-    // boundary pixels as inside; 1e-10 mirrors its tolerance)
+    // boundary pixels as inside; 1e-10 mirrors its tolerance). The edge
+    // test is `cross` over primitive vertex arrays: it runs per pixel.
+    val m = hull.length
+    val hy = new Array[Double](m + 1); val hx = new Array[Double](m + 1)
+    var k = 0
+    while (k <= m) { hy(k) = hull(k % m)._1; hx(k) = hull(k % m)._2; k += 1 }
     val tol = 1e-10
     val out = new Array[Boolean](n)
     val yMin = math.max(0, math.ceil(sorted.head._1 - tol).toInt)
@@ -161,11 +187,11 @@ object ImageKernels {
     while (y <= yMax) {
       x = 0
       while (x < w) {
-        val p = (y.toDouble, x.toDouble)
         var inside = true
-        var k = 0
-        while (inside && k < hull.length) {
-          if (cross(hull(k), hull((k + 1) % hull.length), p) < -tol) inside = false
+        k = 0
+        while (inside && k < m) {
+          val c = (hy(k + 1) - hy(k)) * (x - hx(k)) - (hx(k + 1) - hx(k)) * (y - hy(k))
+          if (c < -tol) inside = false
           k += 1
         }
         if (inside) out(y * w + x) = true
@@ -397,8 +423,12 @@ object ImageKernels {
 
   /** K7 flux image: img/duration - darkcurrent per pixel
     * — `.../processstep_calc_beam_flux_and_transmissions.py:208-209`. */
-  def fluxImage(img: Array[Float], duration: Double, darkcurrent: Double): Array[Float] =
-    img.map(v => (v / duration - darkcurrent).toFloat)
+  def fluxImage(img: Array[Float], duration: Double, darkcurrent: Double): Array[Float] = {
+    val out = new Array[Float](img.length)
+    var i = 0
+    while (i < img.length) { out(i) = (img(i) / duration - darkcurrent).toFloat; i += 1 }
+    out
+  }
 
   /** K8 masked NaN-skipping sum — `.py:211-214`. Dimension mismatch fails
     * loudly (numpy broadcasting would too) instead of truncating or

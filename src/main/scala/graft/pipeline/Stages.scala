@@ -5,16 +5,14 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.operators.AsOfJoin
-
 /** The reference pipeline's process steps as a registry of composable
   * DataFrame transforms (SURVEY §2.10: step plugin contract ->
   * `Map[String, Stage]` + `Dataset.transform`).
   *
   * Execution model translation (SURVEY §3.1): the reference's ordered
   * step-name list becomes a fold over this registry; Catalyst pipelines all
-  * pure-column stages into fused codegen stages, the per-image UDF kernels
-  * are isolated in dedicated projections, and cross-row steps (joins,
+  * stages into fused codegen stages — the per-image kernels included, as
+  * the native expressions of [[ImageExprs]] — and cross-row steps (joins,
   * windows, stacking) are the only shuffles. Each step's `can_run`
   * precondition is encoded as null-gating or a filter inside the stage.
   *
@@ -55,36 +53,11 @@ object Stages {
 
   type Stage = (DataFrame, Context) => DataFrame
 
-  // ---- UDF wrappers over the pure kernels (isolated from codegen stages) --
-
-  private val prepareUdf = udf(ImageKernels.prepareImage _)
-  private val mainFeatureCentroidUdf =
-    udf { (img: Array[Float], h: Int, w: Int) =>
-      val prepared = ImageKernels.prepareImage(img)
-      val labels = ImageKernels.labelMainFeature(prepared, h, w)
-      val (cy, cx) = ImageKernels.weightedCentroid(prepared, labels, h, w)
-      // no beam found (reference raises ValueError, utilities.py:165-166):
-      // a null beam_center routes the row to the canStack quarantine —
-      // NaN coordinates would slip through the isNotNull gate and poison
-      // the stacked statistics instead
-      if (cy.isNaN || cx.isNaN) null else Array(cy, cx)
-    }
-  private val circularMaskUdf =
-    udf { (h: Int, w: Int, cy: Double, cx: Double, r: Double) =>
-      ImageKernels.circularMask(h, w, cy, cx, r)
-    }
-  private val beamAnalysisUdf =
-    udf { (img: Array[Float], h: Int, w: Int) =>
-      ImageKernels.dynamicBeamAnalysis(img, h, w)
-    }
-  private val fluxImageUdf =
-    udf { (img: Array[Float], duration: Double, dark: Double) =>
-      ImageKernels.fluxImage(img, duration, dark)
-    }
-  private val nanSumUdf = udf(ImageKernels.nanSum _)
-  private val maskedNanSumUdf = udf(ImageKernels.maskedNanSum _)
+  /** The logbook composition parser — the pipeline's only row UDF. */
+  private[pipeline] val CompositionUdfName = "composition_parse"
   private val compositionUdf =
     udf { (formula: String) => Composition.parse(formula).map(_.toArray).orNull }
+      .withName(CompositionUdfName)
 
   /** §1.2 pint-equivalent: fixed conversions to meters. */
   def toMeters(value: Column, units: Column): Column =
@@ -124,20 +97,41 @@ object Stages {
   }
 
   /** J2 + J5: backward as-of mask selection per configuration, carrying the
-    * mask payload (`processstep_add_mask_file.py:34-81,99-129`). */
+    * mask payload (`processstep_add_mask_file.py:34-81,99-129`).
+    *
+    * The mask library becomes validity intervals `[mask_date, next
+    * mask_date)` per configuration, broadcast and range-joined, so the
+    * repetition frame keeps its partitioning — a window over the union
+    * would put every repetition of a configuration in one task. Result
+    * equals `AsOfJoin.backward` keyed on configuration with `mask_path` as
+    * tie-break: a dated-before-or-on mask matches, the greatest `mask_path`
+    * wins a date tie, configurations match null-safe, undated masks are
+    * dropped, each row gets at most one mask (null payload if none), and
+    * the columns come out as `configuration`, the other input columns, then
+    * the mask payload.
+    *
+    * Ties need no extra pass: ordered by (date, path), every mask but the
+    * last of its date gets the empty interval `[date, date)`. */
   val addMaskFile: Stage = (df, ctx) => {
     val masks = ctx.masks.select(
-      col("configuration"),
-      to_date(col("maskYmd"), "yyyyMMdd").as("mask_date"),
-      col("mask"), col("maskH"), col("maskW"), col("path").as("mask_path"))
-    AsOfJoin.backward(
-      df.withColumn("__meas_date", to_date(col("ymd"), "yyyyMMdd")),
-      masks,
-      keys = Seq("configuration"),
-      leftTime = "__meas_date", rightTime = "mask_date",
-      joinType = "left",
-      tieBreak = Seq("mask_path")
-    ).drop("__meas_date")
+        col("configuration").as("__mask_config"),
+        to_date(col("maskYmd"), "yyyyMMdd").as("mask_date"),
+        col("mask"), col("maskH"), col("maskW"), col("path").as("mask_path"))
+      .filter(col("mask_date").isNotNull)
+    val byDateAndPath = Window.partitionBy(col("__mask_config"))
+      .orderBy(col("mask_date"), col("mask_path"))
+    val intervals = masks
+      .withColumn("__valid_to", lead(col("mask_date"), 1).over(byDateAndPath))
+    val measDate = to_date(col("ymd"), "yyyyMMdd")
+    val payload = Seq("mask_date", "mask", "maskH", "maskW", "mask_path")
+    df.join(broadcast(intervals),
+        col("configuration") <=> col("__mask_config") &&
+          measDate >= col("mask_date") &&
+          (col("__valid_to").isNull || measDate < col("__valid_to")),
+        "left")
+      .select((col("configuration") +:
+        df.columns.toSeq.filter(_ != "configuration").map(col)) ++
+        payload.map(col): _*)
   }
 
   /** K2–K4: beam center of the direct-beam profile
@@ -145,7 +139,7 @@ object Stages {
   val determineBeamCenter: Stage = (df, _) =>
     df.withColumn("beam_center",
       when(col("directBeam").isNotNull,
-        mainFeatureCentroidUdf(col("directBeam"), col("directH"), col("directW"))))
+        ImageExprs.beamCentroid(col("directBeam"), col("directH"), col("directW"))))
 
   /** K5: circular beam mask, radius scaled by distance
     * (`processstep_make_beam_mask.py:19-35,85-90`). */
@@ -157,7 +151,7 @@ object Stages {
         lit(ctx.refBeamDiameterPx / 2.0) * col("beam_center_distance_m") / lit(ctx.refDistanceM))
       .withColumn("beam_mask",
         when(col("beam_center").isNotNull && col("beam_center_distance_m") > 0,
-          circularMaskUdf(col("directH"), col("directW"),
+          ImageExprs.circularMask(col("directH"), col("directW"),
             col("beam_center")(0), col("beam_center")(1), col("beam_mask_radius"))))
   }
 
@@ -171,37 +165,34 @@ object Stages {
     * quotient is the correction factor (>= 1 for scattering samples). The
     * scattering-probability estimate compares the raw sample image's total
     * intensity with its intensity under the direct beam's TIGHT 0.997-
-    * coverage dynamic-analysis mask. All image UDFs are null-gated (F2):
+    * coverage dynamic-analysis mask. All image kernels are null-gated (F2):
     * a repetition missing an image flows to the canStack quarantine
-    * instead of NPE-ing the task. */
+    * instead of failing the task.
+    *
+    * The four flux sums read the raw frames and form each flux pixel
+    * `(float)(v / t - dark)` on the fly (K7 + K8 fused), so no flux image
+    * is materialized; the per-pixel rounding is the same, so are the sums. */
   val calcFluxAndTransmissions: Stage = (df, _) => {
-    val withFlux = df
-      .withColumn("direct_flux_img",
-        when(col("directBeam").isNotNull && col("directFrameTime").isNotNull,
-          fluxImageUdf(col("directBeam"), col("directFrameTime"), col("darkcurrent"))))
-      .withColumn("sample_flux_img",
-        when(col("sampleBeam").isNotNull && col("sampleFrameTime").isNotNull,
-          fluxImageUdf(col("sampleBeam"), col("sampleFrameTime"), col("darkcurrent"))))
-    val analyzed = withFlux
+    val dark = col("darkcurrent")
+    def fluxOverImage(img: String, time: String): Column =
+      when(col(img).isNotNull && col(time).isNotNull,
+        ImageExprs.fluxSum(col(img), col(time), dark))
+    def beamFlux(img: String, time: String): Column =
+      when(col(img).isNotNull && col(time).isNotNull && col("beam_mask").isNotNull,
+        ImageExprs.maskedFluxSum(col(img), col(time), dark, col("beam_mask")))
+    df
       // tight-mask analysis runs on the RAW direct image, as the reference's
       // dynamic_beam_analysis(DirectBeamData) does
       .withColumn("direct_analysis",
         when(col("directBeam").isNotNull,
-          beamAnalysisUdf(col("directBeam"), col("directH"), col("directW"))))
-    analyzed
+          ImageExprs.beamAnalysis(col("directBeam"), col("directH"), col("directW"))))
       // whole-image flux sums (reference *FluxOverImage)
-      .withColumn("direct_flux_over_image",
-        when(col("direct_flux_img").isNotNull, nanSumUdf(col("direct_flux_img"))))
-      .withColumn("sample_flux_over_image",
-        when(col("sample_flux_img").isNotNull, nanSumUdf(col("sample_flux_img"))))
+      .withColumn("direct_flux_over_image", fluxOverImage("directBeam", "directFrameTime"))
+      .withColumn("sample_flux_over_image", fluxOverImage("sampleBeam", "sampleFrameTime"))
       // beam-masked flux sums (reference DirectFlux/SampleFlux) under the
       // circular mask built by makeBeamMask — NOT the tight ellipse
-      .withColumn("direct_flux",
-        when(col("direct_flux_img").isNotNull && col("beam_mask").isNotNull,
-          maskedNanSumUdf(col("direct_flux_img"), col("beam_mask"))))
-      .withColumn("sample_flux",
-        when(col("sample_flux_img").isNotNull && col("beam_mask").isNotNull,
-          maskedNanSumUdf(col("sample_flux_img"), col("beam_mask"))))
+      .withColumn("direct_flux", beamFlux("directBeam", "directFrameTime"))
+      .withColumn("sample_flux", beamFlux("sampleBeam", "sampleFrameTime"))
       // K9: transmissions + correction factor
       .withColumn("transmission_image",
         col("sample_flux_over_image") / col("direct_flux_over_image"))
@@ -211,16 +202,16 @@ object Stages {
       // K10: scattering probability — raw sample intensity outside the
       // tight direct-beam region, as a fraction of the total
       .withColumn("__sample_total",
-        when(col("sampleBeam").isNotNull, nanSumUdf(col("sampleBeam"))))
+        when(col("sampleBeam").isNotNull, ImageExprs.nanSum(col("sampleBeam"))))
       .withColumn("__sample_tight",
         when(col("sampleBeam").isNotNull && col("direct_analysis").isNotNull,
-          maskedNanSumUdf(col("sampleBeam"), col("direct_analysis.mask"))))
+          ImageExprs.maskedNanSum(col("sampleBeam"), col("direct_analysis.mask"))))
       .withColumn("scattering_probability_estimate",
         (col("__sample_total") - col("__sample_tight")) / col("__sample_total"))
       .withColumn("sigma_minor", col("direct_analysis.sigmaMinor"))
       .withColumn("sigma_major", col("direct_analysis.sigmaMajor"))
       .withColumn("beam_theta", col("direct_analysis.theta"))
-      .drop("direct_flux_img", "sample_flux_img", "__sample_total", "__sample_tight")
+      .drop("__sample_total", "__sample_tight")
   }
 
   /** J3 + K12–K14: background link on (background_identifier, configuration)
@@ -229,7 +220,7 @@ object Stages {
     * (`processstep_thickness_from_absorption.py:36-52,90-108,167-202`). */
   val thicknessFromAbsorption: Stage = (df, ctx) => {
     // bgStats branches off `df` itself — persist the frame so the upstream
-    // plan (including the UDF image kernels) evaluates ONCE: the aggregate
+    // plan (including the image kernels) evaluates ONCE: the aggregate
     // stage fills the cache, the probe side of the join reads it back.
     // Tracked in ctx.caches: the driver calls ctx.caches.release() after
     // its action, so long-lived sessions don't accumulate cache entries.
@@ -290,12 +281,12 @@ object Stages {
           .otherwise(col("transmission")))
 
   /** K15 + F6 + S12: rescale averaged frames back to counts, guarded on
-    * n_frames != 0 (`processstep_average_to_counts.py:47-73`). Pure
-    * higher-order function — stays in codegen. */
+    * n_frames != 0 (`processstep_average_to_counts.py:47-73`). Each pixel
+    * becomes `(float)(v * n)` in one native loop; null pixels stay null. */
   val averageToCounts: Stage = (df, _) => {
     def rescale(c: Column): Column =
       when(col("averagedNumberOfFrames").isNull || col("averagedNumberOfFrames") === 0, c)
-        .otherwise(transform(c, x => (x * col("averagedNumberOfFrames")).cast("float")))
+        .otherwise(ImageExprs.rescale(c, col("averagedNumberOfFrames")))
     df.withColumn("sampleBeam", rescale(col("sampleBeam")))
       .withColumn("directBeam", rescale(col("directBeam")))
   }
@@ -386,7 +377,7 @@ object Stages {
     else df
       .withColumn("__shape",
         when(col("directBeam").isNotNull,
-          beamAnalysisUdf(col("directBeam"), col("directH"), col("directW"))))
+          ImageExprs.beamAnalysis(col("directBeam"), col("directH"), col("directW"))))
       .withColumn("sigma_minor", col("__shape.sigmaMinor"))
       .withColumn("sigma_major", col("__shape.sigmaMajor"))
       .withColumn("beam_theta", col("__shape.theta"))

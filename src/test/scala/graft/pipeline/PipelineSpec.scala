@@ -1,6 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -314,5 +320,47 @@ class PipelineSpec extends SparkSpec {
     // derived keys fall back exactly like DefaultsCarrier defaults
     assert(c.dataDir == c.saxsDir + "/data")
     assert(c.loggingLevel == "INFO")
+  }
+
+  /** Every expression the optimized plan evaluates, including the plans of
+    * the frames it reads from the cache (the thickness step persists its
+    * input, so the upstream stages sit behind an `InMemoryRelation`). */
+  private def planExpressions(plan: LogicalPlan): Seq[Expression] = {
+    def physical(p: SparkPlan): Seq[Expression] = p.collect {
+      case a: AdaptiveSparkPlanExec => physical(a.inputPlan)
+      case n => n.expressions
+    }.flatten
+    plan.collect {
+      case m: InMemoryRelation => physical(m.cacheBuilder.cachedPlan)
+      case n => n.expressions
+    }.flatten.flatMap(_.collect { case e => e })
+  }
+
+  test("plan guard: image kernels are native expressions, masks join by broadcast") {
+    val ctx2 = ctx.copy(caches = new Stages.CacheRegistry)
+    try {
+      val out = Stages.run(Fixtures.repetitions(spark), ctx2, Stages.referenceSteps)
+      val exprs = planExpressions(out.queryExecution.optimizedPlan)
+      assert(exprs.exists(_.isInstanceOf[ImageKernelExpr]))
+      assert(!exprs.exists(_.isInstanceOf[ArrayTransform]), "no interpreted transform")
+      val udfs = exprs.collect { case u: ScalaUDF => u.udfName }
+      assert(udfs.nonEmpty && udfs.forall(_.contains(Stages.CompositionUdfName)),
+        s"the composition parser is the only row UDF: $udfs")
+    } finally ctx2.caches.release()
+
+    // add_mask_file: the only shuffle is on the mask side of the broadcast
+    val key = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val plan = Stages.addMaskFile(Fixtures.repetitions(spark), ctx).queryExecution.executedPlan
+      def shufflesOverInput(p: SparkPlan): Int = p match {
+        case _: BroadcastExchangeExec => 0
+        case s: ShuffleExchangeExec => 1 + shufflesOverInput(s.child)
+        case o => o.children.map(shufflesOverInput).sum
+      }
+      assert(shufflesOverInput(plan) == 0, plan.toString)
+      assert(plan.collectFirst { case b: BroadcastExchangeExec => b }.nonEmpty, plan.toString)
+    } finally spark.conf.set(key, old)
   }
 }

@@ -6,7 +6,7 @@ The base probes (make_scale_probe.py) rewrite every copied word, so no
 shingle's posting list ever crosses copies — candidate work stays linear
 by construction, which is exactly why they CANNOT exercise the
 hot-shingle m²/2 output-skew hazard (DedupQueries d04's measured risk,
-D04SkewProbe). This variant injects the hazard deliberately: doc_id %
+BENCH_NOTES "d04 hot-shingle skew"). This variant injects the hazard deliberately: doc_id %
 100 == 0 gets ' <8 hot tokens>' appended, so
 
   - d04/d17's shingle self-/train×held-joins see six hot 3-shingles

@@ -131,8 +131,7 @@ object PlanDump {
     // codegen'd pushdown_barrier filter above it (no CollectMetrics).
     sb.append("\n# Appendix: d04 engaged-salt executed plan\n\n")
     sb.append("`spark.graft.d04.salt=8, hotMin=1, sampleInv=1` at sf0.001\n")
-    sb.append("(exact detection, hot branch engaged). Default barrier\n")
-    sb.append("(`spark.graft.d04.salt.barrier=expr`): the a-side salt\n")
+    sb.append("(exact detection, hot branch engaged). The a-side salt\n")
     sb.append("filter is a codegen'd pushdown_barrier above the ONE shared\n")
     sb.append("salt exchange both join sides read.\n")
     spark.conf.set("spark.graft.d04.salt", "8")

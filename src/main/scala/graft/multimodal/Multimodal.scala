@@ -56,14 +56,14 @@ object Multimodal {
     * for pixel values in [0, 255]. */
   object ImageCodec {
 
-    // Round 21 (guide §1.2 "per-task work"): ImageIO's default stream
-    // cache spools EVERY encode and decode through a temp FILE on disk
-    // (FileCache{Input,Output}Stream) — for the 64-byte thumbnails this
-    // codec moves, that is two file creations per round trip and ~7× the
-    // wall (measured: 15k round trips 4.46 s → 0.60 s with the memory
-    // cache, PngCostProbe). Output bytes are identical; this only changes
-    // WHERE ImageIO buffers. Set once at class init — executors initialize
-    // the object at first task use.
+    // Round 21 (guide §1.2 "per-task work"): ImageIO's default stream cache
+    // spools EVERY encode and decode through a temp FILE on disk
+    // (FileCache{Input,Output}Stream) — for the 64-byte thumbnails this codec
+    // moves, that is two file creations per round trip and ~7× the wall
+    // (measured: 15k round trips 4.46 s → 0.60 s with the memory cache,
+    // BENCH_NOTES "Retired probes"). Output bytes are identical; this only
+    // changes WHERE ImageIO buffers. Set once at class init — executors
+    // initialize the object at first task use.
     javax.imageio.ImageIO.setUseCache(false)
 
     /** Encode row-major grayscale floats (clamped to [0,255]) as PNG. */

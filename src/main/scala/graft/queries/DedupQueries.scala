@@ -91,7 +91,7 @@ object DedupQueries {
     // pushing them there), and the array gets the d04 barrier so the
     // explode's inferred size>0 filter reads the materialized column
     // instead of re-deriving the whole shingle pipeline per row
-    // (the D04Piece CollapseProject finding).
+    // (the d04 CollapseProject finding, BENCH_NOTES "Retired probes").
     def sh(d: DataFrame): DataFrame = d
       .select(col("doc_id"),
         graft.functions.PushdownBarrierF.pushdownBarrier(
@@ -159,8 +159,9 @@ object DedupQueries {
     // slot + six band minima) plus the null gate — CollapseProject would
     // otherwise inline the whole signature kernel into every reference
     // and hash each document's shingle set many times over (the
-    // D04Piece finding; d02 construction 2.04 → 1.09 s at sf0.1 from
-    // this line alone, PlanCostProbe min-of-5).
+    // d04 CollapseProject finding, BENCH_NOTES "Retired probes"; d02
+    // construction 2.04 → 1.09 s at sf0.1 from this line alone,
+    // PlanCostProbe min-of-5).
     val sigw = docs
       .select(col("doc_id"),
         graft.functions.PushdownBarrierF.pushdownBarrier(
@@ -212,8 +213,8 @@ object DedupQueries {
     // the explode candidate-sized, so this wins in both regimes. Known
     // trade: a shingle shared by m candidate docs contributes ~m^2/2 join
     // rows (the d04 inverted-index hazard; the pair-expansion shape was
-    // immune to it but 3x slower overall). MEASURED (r10,
-    // graft.probe.D04SkewProbe, m=10k -> 50M pairs from one key): AQE's
+    // immune to it but 3x slower overall). MEASURED (r10, BENCH_NOTES
+    // "Retired probes", m=10k -> 50M pairs from one key): AQE's
     // skew split never fires here — the hot key's INPUT partition is only
     // m rows, far under the byte thresholds; the blowup is OUTPUT skew.
     // But hot-key salting (a-side salted by doc_id, b-side replicated,
@@ -234,7 +235,8 @@ object DedupQueries {
       .distinct()
     // r22: barrier so the explode's inferred size>0 filter reads the
     // materialized array instead of re-deriving the shingle pipeline per
-    // candidate row (the d04/D04Piece CollapseProject finding). Nothing
+    // candidate row (the d04 CollapseProject finding, BENCH_NOTES
+    // "Retired probes"). Nothing
     // needs to push below this project — the semi-join prune sits under it.
     val shd = docs.join(candIds, Seq("doc_id"), "left_semi")
       .select(col("doc_id"),
@@ -500,7 +502,8 @@ object DedupQueries {
     Tables.loadSpread(s, dir, "documents")
       // r22 barrier: hi and lo are two getItem reads of the same array —
       // unbarriered, CollapseProject inlines the simhash kernel into each
-      // and every document is token-hashed twice (the D04Piece finding)
+      // and every document is token-hashed twice (the d04 CollapseProject
+      // finding, BENCH_NOTES "Retired probes")
       .select(col("doc_id"),
         graft.functions.PushdownBarrierF.pushdownBarrier(
           TextFns.simhash64Native(col("text"))).as("sh"))
@@ -511,9 +514,10 @@ object DedupQueries {
     * the inverted-index self-join on the hashed shingle column `s`.
     *
     * Default is the plain equi-join — on organic corpora salting measured
-    * 1.3–2× SLOWER (D04SkewProbe; the hot aggregation + replicated b-side
-    * cost real work the corpus never repays), so it must not be the
-    * shipped path. But a genuinely hot shingle (a boilerplate span shared
+    * 1.3–2× SLOWER (BENCH_NOTES "Retired probes"; the hot aggregation +
+    * replicated b-side cost real work the corpus never repays), so it
+    * must not be the shipped path.
+    * But a genuinely hot shingle (a boilerplate span shared
     * by m documents) makes ONE join key emit m²/2 output rows on a
     * single task — OUTPUT skew AQE cannot split, because its skew
     * detection sizes INPUT partitions and the hot posting list is tiny
@@ -570,21 +574,19 @@ object DedupQueries {
     * output) — never mis-route beyond what sampling noise already may.
     *
     * The a-side filter that picks one salt per row must stay ABOVE the
-    * exchange both join sides share (pushed below it, reuse dies).
-    * `spark.graft.d04.salt.barrier` selects the pushdown barrier:
-    * `expr` (default) wraps the filter in
-    * [[graft.functions.PushdownBarrierF]] so the span stays inside
-    * whole-stage codegen; `observe` is the r18 CollectMetrics barrier
-    * (reports the exploded row count as the `obsName` metric, but
-    * breaks codegen at the barrier); `none` is the no-barrier
-    * DIAGNOSTIC control (two-sided rebuild). `obsName` names the
-    * `observe` variant's metric; Spark rejects duplicate observed-metric
-    * names within ONE query at analysis time, so a plan that embeds two
-    * observe-barrier subtrees must pass distinct names (every shipped
-    * plan — d04, and d20's single d04 leg — embeds at most one). */
+    * exchange both join sides share (pushed below it, reuse dies); it is
+    * wrapped in [[graft.functions.PushdownBarrierF]], which keeps it
+    * there and inside whole-stage codegen.
+    *
+    * CONTRACT: `sh` carries `(doc_id, s, c)` with `c` the document's
+    * distinct-shingle count (constant per doc); the output is always
+    * `(doc_a, doc_b, i, ca, cb)` — `i` the co-shingle count, `ca`/`cb`
+    * each side's `c`. */
   private[graft] def coShinglePairs(s: SparkSession, sh: DataFrame,
-      sampleSh: Option[DataFrame] = None,
-      obsName: String = "d04_salt"): DataFrame = {
+      sampleSh: Option[DataFrame] = None): DataFrame = {
+    require(sh.columns.contains("c"),
+      "coShinglePairs needs the per-doc shingle count column `c` on the " +
+        s"shingle frame (got columns ${sh.columns.mkString(", ")})")
     def intConf(key: String): Option[Int] =
       s.conf.getOption(key).map { v =>
         try v.trim.toInt catch {
@@ -592,20 +594,15 @@ object DedupQueries {
             s"$key must be an integer: got '$v'")
         }
       }
-    // Round 22: when the shingle frame carries a per-doc count column
-    // `c`, it is aggregated through (max re-reads the constant-per-doc
-    // value) so the caller gets ca/cb WITHOUT a separate count pass —
-    // d04's old shape paid a second full corpus scan + signature kernel
-    // just to rebuild the counts, then two joins to attach them. The
-    // carry costs 8 bytes per exploded row on the exchange both join
-    // sides already share; probe frames without `c` keep the bare
-    // (doc_a, doc_b, i) contract.
-    val carry = sh.columns.contains("c")
+    // Round 22: the per-doc count `c` is aggregated through (max
+    // re-reads the constant-per-doc value) so the caller gets ca/cb
+    // WITHOUT a separate count pass — d04's old shape paid a second full
+    // corpus scan + signature kernel just to rebuild the counts, then two
+    // joins to attach them. The carry costs 8 bytes per exploded row on
+    // the exchange both join sides already share.
     def pairAgg(grouped: org.apache.spark.sql.RelationalGroupedDataset) =
-      if (carry)
-        grouped.agg(count(lit(1)).as("i"),
-          max(col("a.c")).as("ca"), max(col("b.c")).as("cb"))
-      else grouped.agg(count(lit(1)).as("i"))
+      grouped.agg(count(lit(1)).as("i"),
+        max(col("a.c")).as("ca"), max(col("b.c")).as("cb"))
     val plain = pairAgg(sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
@@ -660,9 +657,9 @@ object DedupQueries {
             "driver-literal cap — raise spark.graft.d04.salt.hotMin " +
             s"(currently $hotMin)")
         // NO HOT KEYS → PLAIN PLAN. The salt machinery (1-element explode
-        // per shingle row, the (s, __salt) exchange, the observe barrier
-        // + post-exchange filter) measured +42% over plain at the ×100
-        // organic corpus even with an EMPTY hot set (bench/r19/
+        // per shingle row, the (s, __salt) exchange, the r18 observe
+        // barrier + post-exchange filter) measured +42% over plain at the
+        // ×100 organic corpus even with an EMPTY hot set (bench/r19/
         // d04_detect100.log — the r18 note attributing that overhead to
         // the detection scan was wrong; detection is seconds). Detection
         // deciding the PLAN, not just the routing, turns the conf into a
@@ -691,34 +688,18 @@ object DedupQueries {
         // produce, at half the upstream cost. The filter must stay ABOVE
         // the shared exchange: predicate pushdown walks through
         // Project/Repartition, and pushed below it the a/b exchange
-        // subtrees differ and reuse cannot fire. Barrier choices
-        // (spark.graft.d04.salt.barrier, probe-compared at skewed
-        // ×10/×100 — BENCH_NOTES "Round 20"):
-        //  - "expr" (default): Filter(pushdown_barrier(cond)) — the
-        //    nondeterministic-flag wrapper PushPredicateThroughNonJoin
-        //    won't move, codegen'd in place, so the whole
-        //    exchange→filter→join span stays ONE WholeStageCodegen;
-        //  - "observe": the r18 CollectMetrics barrier. Correct, and
-        //    reports the exploded row count as the '`obsName`' observed
-        //    metric, but CollectMetricsExec does not implement
-        //    CodegenSupport (Spark 4.1.2) — the barrier forces a
-        //    row-at-a-time boundary on the full salt-exploded stream;
-        //  - "none": DIAGNOSTIC control — no barrier, the a-side filter
-        //    sinks below its exchange, both sides rebuild the upstream
-        //    (the two-sided-rebuild cost r18 measured at +41%).
+        // subtrees differ and reuse cannot fire. The barrier is
+        // Filter(pushdown_barrier(cond)) — the nondeterministic-flag
+        // wrapper PushPredicateThroughNonJoin won't move, codegen'd in
+        // place, so the whole exchange→filter→join span stays ONE
+        // WholeStageCodegen. Against it (BENCH_NOTES "Round 20"): the r18
+        // CollectMetrics barrier breaks codegen at the boundary, and no
+        // barrier lets the filter sink so both sides rebuild the
+        // upstream (+41% in r18).
         val saltCond = col("__salt") === when(isHot,
           pmod(hash(col("doc_id")), lit(nSalts))).otherwise(lit(0))
-        val a = s.conf.getOption("spark.graft.d04.salt.barrier")
-          .getOrElse("expr") match {
-          case "expr" =>
-            x.filter(graft.functions.PushdownBarrierF.pushdownBarrier(saltCond))
-          case "observe" =>
-            x.observe(obsName, count(lit(1)).as("salt_rows")).filter(saltCond)
-          case "none" => x.filter(saltCond)
-          case other => throw new IllegalArgumentException(
-            "spark.graft.d04.salt.barrier must be one of expr|observe|none" +
-              s" (got '$other')")
-        }
+        val a =
+          x.filter(graft.functions.PushdownBarrierF.pushdownBarrier(saltCond))
         pairAgg(a.as("a").join(x.as("b"),
             col("a.s") === col("b.s") && col("a.__salt") === col("b.__salt") &&
               col("a.doc_id") < col("b.doc_id"))
@@ -733,7 +714,7 @@ object DedupQueries {
     * stability). Split out of [[coShinglePairs]] so detection parity
     * (in-plan sample vs SampleExtract-backed sample) is directly
     * assertable in tests. Key type follows the `s` column — Long on the
-    * shipped d04 path (md5Hash60), String for probe frames that skip
+    * shipped d04 path (md5Hash60), String for test frames that skip
     * the hash. The counts feed the build-time replication-estimate log.
     *
     * The `limit(100001)` caps what the driver MATERIALIZES: the caller's
@@ -935,10 +916,10 @@ object DedupQueries {
       // `sarr`, and CollapseProject would otherwise inline the whole
       // shingle pipeline into EACH consumer (plus the explode's inferred
       // size>0 filter) — measured 5.2 s vs 0.45 s for this frame alone at
-      // sf0.1 (D04Piece). Wrapped nondeterministic, the array
-      // materializes once per row in its own Project and every consumer
-      // reads the attribute; exchange reuse across the self-join sides
-      // still fires (structural canonical equality, same precedent as
+      // sf0.1 (BENCH_NOTES "Retired probes"). Wrapped nondeterministic,
+      // the array materializes once per row in its own Project and every
+      // consumer reads the attribute; exchange reuse across the self-join
+      // sides still fires (structural canonical equality, same precedent as
       // the salt filter below).
       def shingleize(docs: DataFrame): DataFrame = docs
         .select(col("doc_id"),
@@ -1116,24 +1097,19 @@ object DedupQueries {
     // ~300M candidate pairs, while 16 bits (4 tables x 16 = all 64 dims)
     // keeps the join linear-ish. Wider buckets trade recall exactly as
     // more MinHash rows-per-band do in d02 — that's the knob's contract,
-    // not a correctness knife-edge. spark.graft.d11.{tables,bits} conf,
-    // SPARK_GRAFT_D11_{TABLES,BITS} env fallback for bench probes.
+    // not a correctness knife-edge. spark.graft.d11.{tables,bits} conf.
     "d11" -> { (s, dir) =>
-      def knob(conf: String, env: String, dflt: Int): Int = {
-        val raw = s.conf.getOption(conf).orElse(sys.env.get(env))
-        raw.map { v =>
+      def knob(conf: String, dflt: Int): Int =
+        s.conf.getOption(conf).map { v =>
           try v.trim.toInt catch {
             case _: NumberFormatException => throw new IllegalArgumentException(
-              s"$conf / $env must be an integer: got '$v'")
+              s"$conf must be an integer: got '$v'")
           }
         }.getOrElse(dflt)
-      }
-      val explicitBits =
-        s.conf.getOption("spark.graft.d11.bits").orElse(sys.env.get("SPARK_GRAFT_D11_BITS"))
-      val explicitTables =
-        s.conf.getOption("spark.graft.d11.tables").orElse(sys.env.get("SPARK_GRAFT_D11_TABLES"))
-      val nTables = knob("spark.graft.d11.tables", "SPARK_GRAFT_D11_TABLES", 4)
-      val defaultBits = knob("spark.graft.d11.bits", "SPARK_GRAFT_D11_BITS", 8)
+      val explicitBits = s.conf.getOption("spark.graft.d11.bits")
+      val explicitTables = s.conf.getOption("spark.graft.d11.tables")
+      val nTables = knob("spark.graft.d11.tables", 4)
+      val defaultBits = knob("spark.graft.d11.bits", 8)
       // zero/negative geometries fail silently-wrong, not loudly: tables=0
       // returns an empty result ("no duplicates"), bits=0 puts every vector
       // in one global bucket (the n^2/2 product this operator exists to
@@ -1184,7 +1160,6 @@ object DedupQueries {
             val n = Tables.load(s, dir, "embeddings").count()
             if (n <= maxDefaultRows) (nTables, defaultBits)
             else if (s.conf.getOption("spark.graft.d11.strict")
-                .orElse(sys.env.get("SPARK_GRAFT_D11_STRICT"))
                 .exists(_.trim.equalsIgnoreCase("true"))) {
               val (at, ab) = d11AutoGeometry(n, nTables, defaultBits)
               throw new IllegalArgumentException(
@@ -1377,7 +1352,8 @@ object DedupQueries {
       // the slices) and the explode's inferred filter adds a fourth;
       // without the barrier CollapseProject inlines the md5-transform
       // into every reference and the whole tokenize+hash pipeline runs
-      // multiple times per row (the d04/D04Piece finding: 5.2 s vs
+      // multiple times per row (the d04 CollapseProject finding,
+      // BENCH_NOTES "Retired probes": 5.2 s vs
       // 0.45 s for that query's equivalent frame). Measured: d15
       // 1.24 s → 1.03 s total at sf0.1 (PlanCostProbe min-of-5).
       val grams = docs
@@ -1550,25 +1526,30 @@ object DedupQueries {
       val contam = evalOverlap(s, dir)
         .select(col("doc_id")).distinct()
         .withColumn("contam", lit(1))
-      // Round-22 keeper A/B (VERDICT r21 #4; guide §2.4 "share one
-      // exchange" vs §6 "narrow the scan"). Two value-identical keeper
-      // attachments, conf-picked:
-      //  - "window" (default, the r22 measured winner): EVERY verdict
-      //    input is derived MAP-SIDE into a narrow row (~60 B: id, lang,
-      //    token count, hash, two gate booleans — the text column never
-      //    survives the scan), then keeper = min(doc_id) over a window
-      //    partitioned by h. ONE corpus scan and ONE narrow exchange.
-      //    At 100 TB the old join form degrades structurally: `keep` is
-      //    one row per DISTINCT hash (corpus-sized, cannot broadcast), so
-      //    the join re-shuffles full text rows by h AND pays a second
-      //    corpus scan+md5 for the keeper aggregate. Measured
-      //    (C01AbProbe, interleaved min-of-N): ×10 rung (500k docs)
-      //    window 4.03 s vs join 6.19 s (−35%); sf0.1 window 1.11 s vs
-      //    join 1.48 s (−25%).
-      //  - "join": the r21-and-earlier groupBy+join form, kept as the
-      //    measured control.
-      val mode = s.conf.getOption("spark.graft.c01.keeper").getOrElse("window")
-      def verdictOut(withKeeper: DataFrame): DataFrame = withKeeper
+      // Keeper (r22; guide §2.4 "share one exchange" vs §6 "narrow the
+      // scan"): EVERY verdict input is derived MAP-SIDE into a narrow row
+      // (~60 B: id, lang, token count, hash, two gate booleans — the text
+      // column never survives the scan), then keeper = min(doc_id) over
+      // a window partitioned by h. ONE corpus scan and ONE narrow
+      // exchange. The r21 groupBy+join form degrades structurally at
+      // 100 TB: `keep` is one row per DISTINCT hash (corpus-sized, cannot
+      // broadcast), so the join re-shuffles full text rows by h AND pays
+      // a second corpus scan+md5 for the keeper aggregate. Measured
+      // (interleaved min-of-N, BENCH_NOTES "Retired probes"): ×10 rung
+      // (500k docs) window 4.03 s vs join 6.19 s (−35%); sf0.1 window
+      // 1.11 s vs join 1.48 s (−25%).
+      val base = Tables.loadSpread(s, dir, "documents")
+        .select(col("doc_id"), col("lang"),
+          size(TextFns.tokens(col("text"))).as("n_tokens"), h.as("h"),
+          // gate inputs precomputed BEFORE the exchange so the window
+          // shuffles ~60 B/row, never the document body. Null text →
+          // null gate values, exactly what the inline expressions
+          // produced — and the when-chain's 'empty' arm catches those
+          // rows first either way.
+          col("text").isNull.as("no_text"),
+          (alphaRatio < 0.7).as("alpha_low"))
+      val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
+      base.withColumn("keeper", min(col("doc_id")).over(w))
         .join(contam, Seq("doc_id"), "left")
         .withColumn("verdict",
           when(col("no_text"), "empty")
@@ -1579,31 +1560,6 @@ object DedupQueries {
             .when(col("contam").isNotNull, "contaminated")
             .otherwise("kept"))
         .select(col("doc_id"), col("verdict"))
-      mode match {
-        case "window" =>
-          val base = Tables.loadSpread(s, dir, "documents")
-            .select(col("doc_id"), col("lang"),
-              size(TextFns.tokens(col("text"))).as("n_tokens"), h.as("h"),
-              // gate inputs precomputed BEFORE the exchange so the window
-              // shuffles ~60 B/row, never the document body. Null text →
-              // null gate values, exactly what the inline expressions
-              // produced — and the when-chain's 'empty' arm catches those
-              // rows first either way.
-              col("text").isNull.as("no_text"),
-              (alphaRatio < 0.7).as("alpha_low"))
-          val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-          verdictOut(base.withColumn("keeper", min(col("doc_id")).over(w)))
-        case "join" =>
-          val base = Tables.loadSpread(s, dir, "documents")
-            .select(col("doc_id"), col("lang"),
-              size(TextFns.tokens(col("text"))).as("n_tokens"), h.as("h"),
-              col("text").isNull.as("no_text"),
-              (alphaRatio < 0.7).as("alpha_low"))
-          val keep = base.groupBy(col("h")).agg(min(col("doc_id")).as("keeper"))
-          verdictOut(base.join(keep, Seq("h")))
-        case other => throw new IllegalArgumentException(
-          s"spark.graft.c01.keeper must be window|join (got '$other')")
-      }
     })
 
   private val toksSql = "regexp_split_to_array(trim(text), '\\s+')"

@@ -568,15 +568,14 @@ object RelationalQueries {
       // the ordered pair expansion is a map-side array transform — no
       // join, and pair work stays Σ per-order basket² exactly as before
       // (baskets are bounded by business reality, not corpus size).
-      // Skew bound, MEASURED not assumed (r22, Q44SkewProbe at sf0.1 AND
-      // the ×10 rung): max basket 17 / avg 4.07 / p99 9 at both — basket
-      // size is an ORDER-shape constant (TPC-H orders carry ≤7 line
-      // items), so the worst single-row expansion is 136 cells at any
-      // corpus scale and the collect_set buffer cannot become a
-      // straggler. If the data model ever admits unbounded baskets, the
-      // probe's max_basket-vs-SF trend is the tripwire; the fallback is
-      // the pre-r21 order-keyed self-join, which spreads one order's
-      // pair work across tasks.
+      // Skew bound, MEASURED not assumed (r22 at sf0.1 AND the ×10 rung,
+      // BENCH_NOTES "Retired probes"): max basket 17 / avg 4.07 / p99 9 at
+      // both — basket size is an ORDER-shape constant (TPC-H orders carry ≤7
+      // line items), so the worst single-row expansion is 136 cells at any
+      // corpus scale and the collect_set buffer cannot become a straggler. If
+      // the data model ever admits unbounded baskets, the max_basket-vs-SF
+      // trend is the tripwire; the fallback is the pre-r21 order-keyed
+      // self-join, which spreads one order's pair work across tasks.
       // Everything derives from the SAME basket exchange: pc explodes it
       // and the order total counts its rows (count(parts), never
       // count(1) — referencing the column keeps the subtree identical

@@ -216,6 +216,14 @@ class PlanSpec extends SparkSpec {
         val df = SparkEntry.queries("d11")(spark, sf)
         assert(df.columns.toSeq == Seq("vec_a", "vec_b", "cosine"))
       } finally spark.conf.unset("spark.graft.d11.bits")
+      // a malformed geometry value fails loudly, naming its conf key
+      spark.conf.set("spark.graft.d11.tables", "four")
+      try {
+        val e = intercept[IllegalArgumentException](
+          SparkEntry.queries("d11")(spark, sf))
+        assert(e.getMessage ==
+          "spark.graft.d11.tables must be an integer: got 'four'", e.getMessage)
+      } finally spark.conf.unset("spark.graft.d11.tables")
       // strict mode restores the r10 refusal: pipelines that pin results
       // get a loud error instead of a silent recall-changing re-geometry
       spark.conf.set("spark.graft.d11.strict", "true")
@@ -581,8 +589,8 @@ class PlanSpec extends SparkSpec {
   test("d04 salted skew escape: off by default; spark.graft.d04.salt " +
       "routes hot shingles through an exact salted join, output unchanged") {
     // default plan is the plain inverted-index equi-join — salting costs
-    // 1.3-2x on organic corpora (D04SkewProbe), so no salt machinery may
-    // appear unless the conf asks for it
+    // 1.3-2x on organic corpora (BENCH_NOTES "d04 hot-shingle skew"), so
+    // no salt machinery may appear unless the conf asks for it
     val p0 = plan("d04")
     assert(!p0.contains("__salt"), p0.take(3000))
     val expected = SparkEntry.queries("d04")(spark, sf)
@@ -629,56 +637,27 @@ class PlanSpec extends SparkSpec {
       // ASSUMPTION this case pins: the a-side salt filter stays ABOVE
       // the shared exchange only because PushDownPredicates refuses to
       // move NONDETERMINISTIC predicates — the pushdown_barrier wrapper
-      // (PushdownBarrierF, the default spark.graft.d04.salt.barrier) is
-      // exactly that flag. A Spark upgrade that starts reordering
-      // nondeterministic filters sinks it below the exchange, the a/b
-      // subtrees stop being canonically identical, and THIS
-      // ReusedExchange assertion is the loud failure that diagnoses it.
+      // (PushdownBarrierF) is exactly that flag. A Spark upgrade that
+      // starts reordering nondeterministic filters sinks it below the
+      // exchange, the a/b subtrees stop being canonically identical, and
+      // THIS ReusedExchange assertion is the loud failure that diagnoses
+      // it.
       assert(p.linesIterator.exists(l =>
         l.contains("ReusedExchange") && l.contains("REPARTITION_BY_COL")),
         p.take(4000))
       assert(p.contains("pushdown_barrier"),
-        "default barrier must be the codegen'd pushdown_barrier:\n" + p.take(4000))
-      // the expr barrier's raison d'être: NO CollectMetrics boundary —
+        "the salt filter's barrier must be the codegen'd " +
+          "pushdown_barrier:\n" + p.take(4000))
+      // the barrier's raison d'être: NO CollectMetrics boundary —
       // the exchange→filter→join span stays inside whole-stage codegen
       // (the a-side Filter line carries a codegen-stage '*(n)' marker)
       assert(!p.contains("CollectMetrics"),
-        "expr barrier must not plan a CollectMetrics node:\n" + p.take(4000))
+        "the barrier must not plan a CollectMetrics node:\n" + p.take(4000))
       assert(p.linesIterator.exists(l =>
         l.contains("pushdown_barrier") && l.trim.matches("""^[+\-:\s]*\*\(\d+\).*""")),
         "the barrier filter must be inside a WholeStageCodegen stage:\n" +
           p.take(4000))
-      // the r18 observe barrier stays available behind the conf — same
-      // output, same exchange reuse, but with the CollectMetrics
-      // codegen boundary (and the salt_rows observed metric)
-      spark.conf.set("spark.graft.d04.salt.barrier", "observe")
-      val dfObs = SparkEntry.queries("d04")(spark, sf)
-      assert(dfObs.collect().map(_.toString).sorted.toSeq == expected,
-        "observe barrier changed d04's output")
-      val pObs = dfObs.queryExecution.executedPlan.toString
-      assert(pObs.contains("CollectMetrics") && pObs.linesIterator.exists(l =>
-        l.contains("ReusedExchange") && l.contains("REPARTITION_BY_COL")),
-        pObs.take(4000))
-      // the no-barrier diagnostic control: output still exact, but the
-      // a-side filter sinks below its exchange and reuse is LOST — this
-      // pins the control's meaning in the D04BarrierProbe comparison
-      spark.conf.set("spark.graft.d04.salt.barrier", "none")
-      val dfNone = SparkEntry.queries("d04")(spark, sf)
-      assert(dfNone.collect().map(_.toString).sorted.toSeq == expected,
-        "barrier-free control changed d04's output")
-      val pNone = dfNone.queryExecution.executedPlan.toString
-      // only the SALT exchange (REPARTITION_BY_COL) must lose reuse —
-      // unrelated exchanges (the cnt-frame joins) may still be reused
-      assert(!pNone.linesIterator.exists(l =>
-        l.contains("ReusedExchange") && l.contains("REPARTITION_BY_COL")),
-        "no-barrier control unexpectedly kept SALT exchange reuse (did " +
-          "pushdown stop sinking the salt filter?):\n" + pNone.take(4000))
-      spark.conf.set("spark.graft.d04.salt.barrier", "bogus")
-      intercept[IllegalArgumentException] {
-        SparkEntry.queries("d04")(spark, sf)
-      }
     } finally {
-      spark.conf.unset("spark.graft.d04.salt.barrier")
       spark.conf.unset("spark.graft.d04.salt")
       spark.conf.unset("spark.graft.d04.salt.hotMin")
       spark.conf.unset("spark.graft.d04.salt.sampleInv")
@@ -696,27 +675,45 @@ class PlanSpec extends SparkSpec {
   test("d04 hot detection: a SampleExtract-backed sample finds the same " +
       "hot keys as the in-plan sample; the read guard re-filters a " +
       "mismatched extract to a subset of the true sample") {
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    import graft.probe.D04SkewProbe
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array_distinct, col, explode, lit,
+      pmod, xxhash64}
+    import graft.functions.TextFns
     import graft.sources.SampleExtract
-    // 2000 of 4000 docs share one hot shingle; inv=8 samples ~500 docs,
-    // so the hot shingle is sampled ~250 times vs threshold 8 (hotMin 64)
-    val docs = D04SkewProbe.corpus(spark, 4000, 2000)
+    import spark.implicits._
+    // 2000 of 4000 docs share one hot shingle ("hot common token"); every
+    // other shingle is document-unique. inv=8 samples ~500 docs, so the
+    // hot shingle is sampled ~250 times vs threshold 8 (hotMin 64)
+    val docs = (0 until 4000).map { i =>
+      val filler = (0 until 8).map(j => s"u${i}x$j").mkString(" ")
+      val text =
+        if (i < 2000) s"hot common token $filler" else s"c$i cc$i ccc$i $filler"
+      (i.toLong, text)
+    }.toDF("doc_id", "text")
+    def shingleFrame(d: DataFrame): DataFrame = d
+      .select(col("doc_id"),
+        explode(array_distinct(TextFns.shingles(col("text"), 3))).as("s"))
+      .repartition(32, col("s"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-extract").toFile
     val out = new java.io.File(tmp, "extract").getAbsolutePath
     try {
       val inv = 8
       SampleExtract.write(docs, out, inv)
-      val inPlan = D04SkewProbe.shingleFrame(docs)
+      val inPlan = shingleFrame(docs)
         .filter(pmod(xxhash64(col("doc_id")), lit(inv)) === 0)
       val fromExtract =
-        D04SkewProbe.shingleFrame(SampleExtract.read(spark, out, inv))
+        shingleFrame(SampleExtract.read(spark, out, inv))
       val threshold = math.max(1, 64 / inv)
       val a = DedupQueries.d04HotKeys(inPlan, threshold)
       val b = DedupQueries.d04HotKeys(fromExtract, threshold)
       assert(a.nonEmpty, "crafted hot shingle must be detected")
       assert(a.sameElements(b),
         s"extract-backed detection diverged: ${a.toSeq} vs ${b.toSeq}")
+      // the pair shape's contract needs the per-doc count column `c`:
+      // a frame without it is refused up front, not silently re-shaped
+      val noCount = intercept[IllegalArgumentException](
+        DedupQueries.coShinglePairs(spark, inPlan))
+      assert(noCount.getMessage.contains("`c`"), noCount.getMessage)
       // guard: reading the inv=8 extract at inv=16 must return EXACTLY
       // the true 1/16 sample (16 is a multiple of 8, so the extract is a
       // superset and the re-filter lands precisely on it) — a mismatched

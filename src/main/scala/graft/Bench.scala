@@ -630,6 +630,17 @@ object Bench {
       .getOrElse(line(None))
   }
 
+  /** Releases the shared entry `query` builds, before each timed run of
+    * it. d02 builds the shared minhash-pair checkpoint that d07 then
+    * reuses. Without a reset, run b (and min-of-two) would read the cached
+    * pairs and report ~0 s — hiding the real minhash pass behind the
+    * warmup policy. Dropping the checkpoint before each d02 run makes
+    * d02's number the true one-shared-materialization cost, while d07's
+    * number shows the designed reuse win; d15 and w12 likewise. */
+  def resetBefore(spark: SparkSession, query: String): Unit =
+    Map("d02" -> "minhash", "d15" -> "d15", "w12" -> "w12qb").get(query)
+      .foreach(SharedFrames.release(spark, _))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -642,19 +653,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // d02 builds the shared minhash-pair checkpoint that d07 then reuses.
-    // Without a reset, run b (and min-of-two) would read the cached pairs
-    // and report ~0 s — hiding the real minhash pass behind the warmup
-    // policy. Dropping the checkpoint before each d02 run makes d02's
-    // number the true one-shared-materialization cost, while d07's number
-    // shows the designed reuse win.
-    val resetBefore: Map[String, () => Unit] = Map(
-      "d02" -> (() => graft.queries.DedupQueries.releaseShared(spark, "minhash")),
-      "d15" -> (() => graft.queries.DedupQueries.releaseShared(spark, "d15")),
-      "w12" -> (() => graft.queries.DedupQueries.releaseShared(spark, "w12qb")))
-
     def force(name: String): Double = {
-      resetBefore.get(name).foreach(_.apply())
+      resetBefore(spark, name)
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
@@ -706,14 +706,14 @@ object Bench {
     // r21 anti-contamination re-measure (see RetryFactor): only in the
     // pinned regime (sf0.1 / 32 cores — pins are core-count-specific; the
     // driver's lower-core scaling run must not burn the budget re-measuring
-    // correctly-slower queries). Runs BEFORE the final releaseShared so a
+    // correctly-slower queries). Runs BEFORE the final release so a
     // retried checkpoint consumer (d07/d19) sees the same reuse its
     // original measurement saw.
     val (timings, extraRuns) =
       if (cpus == "32")
         retryPass(results.map { case (k, (v, _)) => k -> v }, sfName, force)
       else (results.map { case (k, (v, _)) => k -> v }, Map.empty[String, Int])
-    graft.queries.DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     val runs = results.map { case (k, (_, r)) =>
       k -> (r + extraRuns.getOrElse(k, 0))
     }

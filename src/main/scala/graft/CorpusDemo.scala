@@ -75,7 +75,7 @@ object CorpusDemo {
     }
     manifest.unpersist()
     // the stage is durable; drop the stage-1 minhash checkpoint blocks
-    queries.DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
 
     // 3) leakage-guarded split: drop leaky TRAIN docs, keep the rest
     val split = timed("d17 leakage-guarded split") {

@@ -56,7 +56,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    graft.queries.DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     spark.stop()
   }
 }

@@ -3,7 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.SharedFrames
 
 /** The reference pipeline's process steps as a registry of composable
   * DataFrame transforms (SURVEY §2.10: step plugin contract ->
@@ -23,21 +24,11 @@ import org.apache.spark.storage.StorageLevel
   */
 object Stages {
 
-  /** Tracks frames a stage persisted so the pipeline driver can release
-    * them once the consuming action has run — stages are lazy transforms,
-    * so they can never unpersist themselves without losing the cache before
-    * it is read. Call `release()` after materializing the pipeline output;
-    * a long-lived session that skips it accumulates cached partitions. */
-  final class CacheRegistry {
-    private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def track(df: DataFrame): DataFrame = synchronized { frames += df; df }
-    def release(): Unit = synchronized {
-      frames.foreach(_.unpersist(blocking = false)); frames.clear()
-    }
-  }
-
   /** Pipeline context: dimension tables + instrument constants
-    * (`MOUSE_settings.yaml` equivalents). */
+    * (`MOUSE_settings.yaml` equivalents). `caches` holds the frames stages
+    * persist — stages are lazy transforms, so they can never unpersist
+    * themselves without losing the cache before it is read; the driver
+    * calls `caches.release()` after materializing the pipeline output. */
   case class Context(
       logbook: DataFrame,
       masks: DataFrame,
@@ -49,7 +40,7 @@ object Stages {
       tree: Option[DataFrame] = None,
       translatorRules1: Seq[TreeTable.MappingRule] = Nil,
       translatorRules2: Seq[TreeTable.MappingRule] = Nil,
-      caches: CacheRegistry = new CacheRegistry)
+      caches: SharedFrames.Scope = new SharedFrames.Scope)
 
   type Stage = (DataFrame, Context) => DataFrame
 
@@ -222,11 +213,11 @@ object Stages {
     // bgStats branches off `df` itself — persist the frame so the upstream
     // plan (including the image kernels) evaluates ONCE: the aggregate
     // stage fills the cache, the probe side of the join reads it back.
-    // Tracked in ctx.caches: the driver calls ctx.caches.release() after
-    // its action, so long-lived sessions don't accumulate cache entries.
+    // Held in ctx.caches: the driver calls ctx.caches.release() after its
+    // action, so long-lived sessions don't accumulate cache entries.
     // No broadcast hint on bgStats: one row per (collection, configuration)
     // is unbounded, so AQE must stay free to pick a shuffle join at scale.
-    val input = ctx.caches.track(df.persist(StorageLevel.MEMORY_AND_DISK))
+    val input = ctx.caches.persist(df)
     val bgStats = input.groupBy(
         col("collection_identifier").as("bg_id"),
         col("configuration").as("bg_config"))

@@ -1,12 +1,9 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SharedFrames, Tables}
 import graft.functions.{TextFns, VectorFns}
 
 /** Deduplication surface over `documents` / `embeddings`: exact (content
@@ -22,6 +19,8 @@ import graft.functions.{TextFns, VectorFns}
   * index is lossless for jaccard > 0.
   */
 object DedupQueries {
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
@@ -271,126 +270,6 @@ object DedupQueries {
   def minhashPairsForPlan(s: SparkSession, dir: String): DataFrame =
     calibrationPairs(s, dir, candidatePairs(s, dir))
 
-  /** One shared-checkpoint registry entry. `rdds` is the RDD-registry
-    * diff that tracks localCheckpoint blocks (they register with the
-    * SparkContext at construction); `persisted` is the reliable path's
-    * cached Dataset — Dataset.persist goes through the CacheManager,
-    * whose backing RDD is created lazily at first materialization, so an
-    * RDD-registry diff at construction sees NOTHING for it (and
-    * `rdd.unpersist` would not evict a CacheManager entry anyway): the
-    * only correct release handle is `df.unpersist` on the very Dataset
-    * that was persisted. `reliable` marks entries whose checkpoint FILES
-    * the engine wrote and therefore owns deleting on release; `ckRdd` is
-    * the INTERNAL checkpointed RDD captured at construction (the
-    * `LogicalRDD` leaf `Dataset.checkpoint` plans) — the only handle whose
-    * `getCheckpointFile` names exactly this entry's rdd-N directory and
-    * nothing upstream (see [[releaseShared]] for why a lineage walk is
-    * wrong). */
-  private case class SharedPairs(df: DataFrame, rdds: Seq[RDD[_]],
-                                 persisted: Option[DataFrame], reliable: Boolean,
-                                 ckRdd: Option[RDD[_]] = None)
-  private val pairCache =
-    new ConcurrentHashMap[(SparkSession, String, String), SharedPairs]()
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** Build-once checkpoint registry, keyed (session, dir, tag): the
-    * shared-subplan pattern behind d02/d07's verified pairs, generalized
-    * so other queries with an expensive diamond subplan (d15's gram-pair
-    * frame) get the same treatment. See [[verifiedPairs]] for the full
-    * rationale.
-    *
-    * Durability is a CONF, not a code swap: with
-    * `spark.graft.checkpoint.dir` set, the frame goes through
-    * `df.checkpoint()` to that reliable store (HDFS/S3/local path), so on
-    * a real cluster an executor loss replays from the checkpoint files
-    * instead of re-running the whole upstream pipeline; unset (the
-    * local[*] default), `localCheckpoint` keeps the blocks on executors
-    * with zero filesystem round-trip. Both forms are lazy (eager = false)
-    * so plan construction for explain/analysis stays job-free.
-    *
-    * The reliable path persists the frame BEFORE checkpointing — a lazy
-    * reliable checkpoint otherwise computes the subplan twice (once for
-    * the triggering job, once more when `doCheckpoint` writes the files);
-    * with the persist, the write reads cached blocks. The persisted
-    * Dataset is tracked in the registry entry itself: Dataset.persist is
-    * a CacheManager entry whose backing RDD materializes lazily, so the
-    * RDD-registry diff (which tracks the localCheckpoint path) cannot see
-    * it — `releaseShared` evicts it with `df.unpersist` (=
-    * CacheManager.uncacheQuery) instead. The checkpoint FILES are
-    * engine-owned: `releaseShared` deletes exactly the rdd-N directories
-    * this entry wrote (Spark's own `cleanCheckpoints` conf cannot be
-    * enabled post-context and its GC-driven timing is nondeterministic
-    * anyway), so a long-lived session that releases its subplans leaves
-    * neither cache entries nor checkpoint files behind. */
-  /** Warn message when `spark.graft.checkpoint.dir` cannot take effect —
-    * `None` when the live SparkContext checkpoint dir already sits under
-    * the configured root. setCheckpointDir appends a per-context UUID
-    * segment under the configured root, so the conf is compared against
-    * the PARENT of the live dir (both fully qualified). A mismatch means
-    * the context already had a checkpoint dir (set directly, or by an
-    * earlier conf value): Spark offers no re-point, so the message says
-    * where files will actually land instead of the conf being silently
-    * ignored. Pure on its inputs so the warn branch is unit-testable
-    * without staging a second SparkContext (SharedCheckpointSpec). */
-  private[graft] def checkpointDirMismatch(
-      existing: Option[String], ckDir: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[String] =
-    existing.flatMap { live =>
-      val confPath = new org.apache.hadoop.fs.Path(ckDir)
-      val qualified = confPath.getFileSystem(hadoopConf).makeQualified(confPath)
-      val liveRoot = new org.apache.hadoop.fs.Path(live).getParent
-      if (liveRoot == null || liveRoot.toString != qualified.toString)
-        Some(s"spark.graft.checkpoint.dir=$ckDir ignored: the " +
-          s"SparkContext checkpoint dir is already $live " +
-          "(it cannot be re-pointed); checkpoint files will land " +
-          "under the existing directory")
-      else None
-    }
-
-  private[queries] def sharedCheckpoint(s: SparkSession, dir: String, tag: String)
-                              (build: => DataFrame): DataFrame =
-    pairCache.computeIfAbsent((s, dir, tag), { _ =>
-      val sc = s.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      s.conf.getOption("spark.graft.checkpoint.dir") match {
-        case Some(ckDir) =>
-          sc.getCheckpointDir match {
-            case None => sc.setCheckpointDir(ckDir)
-            case Some(existing) =>
-              checkpointDirMismatch(Some(existing), ckDir, sc.hadoopConfiguration)
-                .foreach(log.warn(_))
-          }
-          val persisted =
-            build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val ck = persisted.checkpoint(eager = false)
-          // Capture the internal checkpointed RDD NOW: Dataset.checkpoint
-          // wraps it in a LogicalRDD leaf, so it is the analyzed plan's
-          // only node. releaseShared reads its getCheckpointFile — a
-          // single Option naming exactly this entry's rdd-N directory —
-          // instead of walking lineage at release time (which, for a
-          // never-materialized lazy checkpoint, traverses the whole
-          // upstream plan and can reach ANOTHER live entry's files).
-          val internal = ck.queryExecution.analyzed match {
-            case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-            case other =>
-              log.warn("sharedCheckpoint: Dataset.checkpoint planned a " +
-                s"${other.getClass.getSimpleName} leaf, not LogicalRDD — " +
-                s"tag '$tag' checkpoint files will not be deleted on release")
-              None
-          }
-          SharedPairs(ck, Nil, Some(persisted), reliable = true,
-            ckRdd = internal)
-        case None =>
-          // localCheckpoint marks its RDD persistent at construction, so
-          // the registry diff captures exactly the blocks to release
-          val df = build.localCheckpoint(eager = false)
-          val added = sc.getPersistentRDDs.collect {
-            case (id, rdd) if !before.contains(id) => rdd
-          }.toSeq
-          SharedPairs(df, added, None, reliable = false)
-      }
-    }).df
-
   /** The calibration pair frame, materialized ONCE per (session, dir) and
     * shared by every consumer — d02 ships its verified filter, d07
     * clusters it, d19 audits the estimates. The minhash pipeline above is
@@ -400,30 +279,20 @@ object DedupQueries {
     * re-ran it AGAIN just to keep the agreement count (r20: −2 s of the
     * suite's 68, and at 100 TB a whole second corpus pass).
     *
-    * The checkpoint (lazy — materialized at first action) truncates
+    * The entry's lazy checkpoint (materialized at first action) truncates
     * lineage so consumers read the small candidate-pair blocks, never the
-    * exploded shingle plan; the backing blocks are tracked by registry
-    * diff (same pattern and same no-racing caveat as
-    * `ConnectedComponents.resolve`) so `releaseShared` can drop them
-    * deterministically — a long-lived session calls it after the
-    * consuming actions. On a real cluster, set
-    * `spark.graft.checkpoint.dir` to a reliable store so executor loss
-    * cannot force a full pipeline re-run ([[sharedCheckpoint]]).
-    * The checkpoint build cost lands on whichever consumer runs first.
+    * exploded shingle plan. The candidate frame is checkpointed once in
+    * the same entry's scope and the verify pipeline's three consumers read
+    * its blocks: without it the final plan re-ran the whole band pipeline
+    * four times / 12 documents scans per build (plans/r22/
+    * d02_{before,after}.txt). Releasing tag "minhash" frees both. A
+    * long-lived session calls `SharedFrames.release` after the consuming
+    * actions; the build cost lands on whichever consumer runs first.
     */
-  private def calibrationCheckpoint(s: SparkSession, dir: String): DataFrame = {
-    // Round 22: the candidate frame is materialized ONCE (its own nested
-    // registry entry, released together with "minhash" — releaseShared
-    // treats "minhash/cand" as a child tag) and the verify pipeline's
-    // three consumers read its blocks. Before, the final plan re-ran the
-    // whole band pipeline four times / 12 documents scans per build
-    // (plans/r22/d02_{before,after}.txt); at 100 TB each re-run is two
-    // extra corpus passes. Built OUTSIDE the "minhash" computeIfAbsent:
-    // nesting computeIfAbsent calls on one ConcurrentHashMap may deadlock
-    // or throw on same-bin recursion by contract.
-    val cand = sharedCheckpoint(s, dir, "minhash/cand")(candidatePairs(s, dir))
-    sharedCheckpoint(s, dir, "minhash")(calibrationPairs(s, dir, cand))
-  }
+  private def calibrationCheckpoint(s: SparkSession, dir: String): DataFrame =
+    SharedFrames.shared(s, dir, "minhash") { scope =>
+      calibrationPairs(s, dir, scope.checkpoint(candidatePairs(s, dir), eager = false))
+    }
 
   /** The production view of [[calibrationCheckpoint]]: exact shingle
     * Jaccard attached, filtered to the verified >= 0.5 near-dup pairs.
@@ -435,57 +304,6 @@ object DedupQueries {
       .withColumn("jaccard",
         col("i").cast("double") / (col("ca") + col("cb") - col("i")))
       .filter(col("jaccard") >= 0.5)
-
-  /** Drop every shared checkpoint held for session `s`; with `tag`, only
-    * that subplan's (Bench's per-query reset uses tags so resetting d15
-    * cannot evict d02/d07's pairs mid-suite, and vice versa). A tag
-    * releases its CHILD tags too — `tag/child` entries are nested
-    * materializations of the same build (round 22: "minhash/cand" holds
-    * the band-join candidate frame the "minhash" build consumes), so a
-    * caller resetting "minhash" must drop both or the next build would
-    * silently reuse the inner frame — which for Bench's per-run reset
-    * would be result caching across timed runs.
-    *
-    * Release is COMPLETE per entry: localCheckpoint blocks unpersist via
-    * the RDD registry diff; the reliable path's cached upstream Dataset
-    * unpersists through the CacheManager; and the reliable checkpoint
-    * FILES this entry wrote are deleted (the engine wrote them, the
-    * engine removes them — a long-lived session otherwise accumulates
-    * one rdd-N directory per released subplan forever).
-    *
-    * File deletion reads ONLY the entry's own `ckRdd` handle, captured at
-    * construction — never a release-time lineage walk. A lazy checkpoint
-    * that was never materialized still has its full upstream lineage (the
-    * truncation happens at materialization), so a walk from `sp.df.rdd`
-    * would traverse the whole upstream plan — and if that plan COMPOSES
-    * another tag's checkpointed frame (builds can nest), the walk reaches
-    * the inner entry's already-materialized rdd-N directory and deletes
-    * files a live entry still owns. `getCheckpointFile` on the captured
-    * handle is `Some` exactly when THIS entry's files exist, `None` when
-    * the lazy checkpoint never ran — nothing else is reachable. */
-  def releaseShared(s: SparkSession, tag: String = ""): Unit = {
-    val it = pairCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if ((e.getKey._1 eq s) && (tag.isEmpty || e.getKey._3 == tag ||
-          e.getKey._3.startsWith(tag + "/"))) {
-        val sp = e.getValue
-        sp.rdds.foreach(_.unpersist(blocking = false))
-        sp.persisted.foreach(_.unpersist(blocking = false))
-        if (sp.reliable) try {
-          sp.ckRdd.flatMap(_.getCheckpointFile).foreach { f =>
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-          }
-        } catch {
-          case scala.util.control.NonFatal(ex) =>
-            log.warn(s"could not delete reliable checkpoint files for " +
-              s"tag '${e.getKey._3}': ${ex.getMessage}")
-        }
-        it.remove()
-      }
-    }
-  }
 
   /** 64-bit Charikar SimHash per document as two unsigned 32-bit halves —
     * the native codegen expression [[graft.functions.SimHash64F]]: one
@@ -1376,9 +1194,10 @@ object DedupQueries {
       // canonical matching, the w04 lesson). Same shared-subplan
       // pattern, registry, and Bench reset discipline as d02/d07's
       // verified pairs.
-      val pairs = sharedCheckpoint(s, dir, "d15")(
+      val pairs = SharedFrames.shared(s, dir, "d15") { _ =>
         grams.groupBy(col("gh"), col("doc_id"))
-          .agg(count(lit(1)).as("occ")))
+          .agg(count(lit(1)).as("occ"))
+      }
       val flagged = pairs
         .groupBy(col("gh")).agg(count(lit(1)).as("nd"))
         .filter(col("nd") >= 2).select(col("gh"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{SharedFrames, Tables}
 import graft.functions.TextFns
 
 /** Deterministic sampling for training-data assembly. Everything here is
@@ -371,7 +371,7 @@ object SamplingQueries {
       // and the quality regexes are the expensive part — checkpoint the
       // tiny (doc_id, qb) projection once (d15's shared-diamond pattern;
       // Bench resets tag "w12qb" per run so the build cost stays visible)
-      val scored = DedupQueries.sharedCheckpoint(s, dir, "w12qb") {
+      val scored = SharedFrames.shared(s, dir, "w12qb") { _ =>
         Tables.load(s, dir, "documents")
           .select(col("doc_id"), qBasis.as("qb"))
       }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SharedFrames, SparkSpec}
 
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -69,7 +69,9 @@ class ConnectedComponentsSpec extends SparkSpec {
     // edges, half, superseded rounds — must be gone
     val left = spark.sparkContext.getPersistentRDDs.size
     assert(left <= 2, s"expected only the result's checkpoint blocks, found $left")
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+    // the session holds the result until its release
+    SharedFrames.release(spark)
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
   }
 
   // --- r21 local fast path ---
@@ -117,11 +119,17 @@ class ConnectedComponentsSpec extends SparkSpec {
   test("null edge endpoints fail loudly on the local path (r22: the " +
       "contract says unsupported — silent skipping could diverge from " +
       "what the distributed joins would do)") {
-    val rows = Seq((Option(1L), Option(2L)), (Option(3L), Option.empty[Long]))
-    val e = intercept[IllegalArgumentException] {
-      ConnectedComponents.resolve(rows.toDF("a", "b"), "a", "b").collect()
+    // and the same on the distributed path, which IntegerType ids take too
+    val longs = Seq((Option(1L), Option(2L)), (Option(3L), Option.empty[Long]))
+    val ints = Seq((Option(1), Option(2)), (Option.empty[Int], Option(3)))
+    for (pairs <- Seq(longs.toDF("a", "b"), ints.toDF("a", "b"));
+         dist <- Seq(false, true)) {
+      def run() = ConnectedComponents.resolve(pairs, "a", "b").collect()
+      val e = intercept[IllegalArgumentException] {
+        if (dist) distributed(run()) else run()
+      }
+      assert(e.getMessage.contains("null edge endpoint"), s"distributed=$dist")
     }
-    assert(e.getMessage.contains("null edge endpoint"))
   }
 
   test("non-Long id types keep the distributed path (output schema must " +

@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{SharedFrames, SparkSpec}
 
 /** End-to-end: Gaussian fixtures through the full stage chain + stacker,
   * asserting the derived physics against analytic expectations
@@ -190,7 +190,7 @@ class PipelineSpec extends SparkSpec {
   test("pipeline caches drain through ctx.caches.release()") {
     // clear leftovers from sibling tests that share the suite session
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-    val ctx2 = ctx.copy(caches = new Stages.CacheRegistry)
+    val ctx2 = ctx.copy(caches = new SharedFrames.Scope)
     val out = Stages.run(Fixtures.repetitions(spark), ctx2)
     out.count() // consuming action fills the tracked thickness-stage cache
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
@@ -337,7 +337,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("plan guard: image kernels are native expressions, masks join by broadcast") {
-    val ctx2 = ctx.copy(caches = new Stages.CacheRegistry)
+    val ctx2 = ctx.copy(caches = new SharedFrames.Scope)
     try {
       val out = Stages.run(Fixtures.repetitions(spark), ctx2, Stages.referenceSteps)
       val exprs = planExpressions(out.queryExecution.optimizedPlan)

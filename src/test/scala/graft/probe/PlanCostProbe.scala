@@ -2,8 +2,7 @@ package graft.probe
 
 import org.apache.spark.sql.SparkSession
 
-import graft.{Bench, SparkEntry}
-import graft.queries.DedupQueries
+import graft.{Bench, SharedFrames, SparkEntry}
 
 /** The one A/B timer. Splits each query's wall clock into DRIVER-SIDE
   * PLANNING (DataFrame construction + analysis + optimization + physical
@@ -73,13 +72,8 @@ object PlanCostProbe {
       arms(i).foreach { case (k, v) => spark.conf.set(k, v) }
     }
 
-    val resetBefore: Map[String, () => Unit] = Map(
-      "d02" -> (() => DedupQueries.releaseShared(spark, "minhash")),
-      "d15" -> (() => DedupQueries.releaseShared(spark, "d15")),
-      "w12" -> (() => DedupQueries.releaseShared(spark, "w12qb")))
-
     def onceSplit(name: String): (Double, Double) = {
-      resetBefore.get(name).foreach(_.apply())
+      Bench.resetBefore(spark, name)
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)
       df.queryExecution.executedPlan // force analysis/optimization/planning
@@ -118,7 +112,7 @@ object PlanCostProbe {
       println(f"[plancost] TOTAL arm $i plan=${planSum(i)}%.2f s exec=${execSum(i)}%.2f s " +
         f"(plan ${100 * planSum(i) / (planSum(i) + execSum(i))}%.1f%% of suite)")
     }
-    DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     spark.stop()
   }
 }

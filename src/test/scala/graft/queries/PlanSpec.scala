@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{SparkSpec, SparkEntry}
+import graft.{SharedFrames, SparkSpec, SparkEntry}
 
 /** Physical-plan invariants (SURVEY §4): these are the properties that keep
   * the queries viable at 100 TB, asserted against the actual planned
@@ -91,7 +91,7 @@ class PlanSpec extends SparkSpec {
         val analyzed = SparkEntry.queries(name)(spark, sf).queryExecution.analyzed.toString
         assert(!analyzed.contains("ResolvedHint"), s"$name still carries a join hint")
       }
-    } finally DedupQueries.releaseShared(spark) // drop the shared pair checkpoint this built
+    } finally SharedFrames.release(spark) // drop the shared pair checkpoint this built
   }
 
   test("d08: at SMJ scale the signature subplan is computed once (ReusedExchange)") {
@@ -510,7 +510,7 @@ class PlanSpec extends SparkSpec {
 
   test("d02/d07 share one verified-pair checkpoint; release leaves nothing cached") {
     val sc = spark.sparkContext
-    DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     val base = sc.getPersistentRDDs.keySet
     SparkEntry.queries("d02")(spark, sf).collect()
     val pairBlocks = sc.getPersistentRDDs.keySet -- base
@@ -520,26 +520,26 @@ class PlanSpec extends SparkSpec {
     SparkEntry.queries("d02")(spark, sf).collect()
     assert((sc.getPersistentRDDs.keySet -- base) == pairBlocks,
       "re-running d02 re-checkpointed instead of reusing")
-    // d07 clusters the SAME blocks; CC's returned label frame stays
-    // materialized by documented contract — track and drop it here, the
-    // caller's duty
-    SparkEntry.queries("d07")(spark, sf).collect()
-    sc.getPersistentRDDs.collect {
-      case (id, rdd) if !base.contains(id) && !pairBlocks.contains(id) => rdd
-    }.foreach(_.unpersist(blocking = false))
-    DedupQueries.releaseShared(spark)
+    // d07 clusters the SAME blocks; on the distributed path its returned
+    // label frame is held by the session until the release below
+    spark.conf.set("spark.graft.cc.localMax", "0")
+    try SparkEntry.queries("d07")(spark, sf).collect()
+    finally spark.conf.unset("spark.graft.cc.localMax")
+    assert(sc.getPersistentRDDs.keySet.exists(k => !base(k) && !pairBlocks(k)),
+      "the distributed d07 result should still be held")
+    SharedFrames.release(spark)
     assert(sc.getPersistentRDDs.keySet.subsetOf(base),
       "release must leave no cached RDDs behind")
   }
 
   test("sharedCheckpoint: spark.graft.checkpoint.dir routes the shared " +
       "frame to a reliable checkpoint (cluster-survivable)") {
-    // unset (every other test), sharedCheckpoint localCheckpoints — blocks
+    // unset (every other test), shared entries localCheckpoint — blocks
     // on executors, lost with them. With the conf set, the frame must go
     // through df.checkpoint() to the reliable store so executor loss
     // replays from files instead of re-running the minhash pipeline.
     val tmp = java.nio.file.Files.createTempDirectory("graft-ck").toFile
-    DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     val base = spark.sparkContext.getPersistentRDDs.keySet
     spark.conf.set("spark.graft.checkpoint.dir", tmp.getAbsolutePath)
     def anyFiles(f: java.io.File): Boolean =
@@ -558,16 +558,16 @@ class PlanSpec extends SparkSpec {
         "reliable path should hold the persisted upstream in cache")
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
-      DedupQueries.releaseShared(spark)
+      SharedFrames.release(spark)
     }
     // ...and release must evict it THROUGH THE CACHEMANAGER (the r17
     // RDD-registry diff saw nothing for a lazily-backed Dataset cache,
     // so the entry was unreleasable) and delete the checkpoint files the
     // engine wrote — a long-lived session leaves nothing behind.
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(base),
-      "releaseShared must uncache the reliable path's persisted Dataset")
+      "release must uncache the reliable path's persisted Dataset")
     assert(!anyFiles(tmp),
-      s"releaseShared must delete the engine-written checkpoint files under $tmp")
+      s"release must delete the engine-written checkpoint files under $tmp")
     def rmTree(f: java.io.File): Unit = {
       Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(): Unit
     }
@@ -771,7 +771,7 @@ class PlanSpec extends SparkSpec {
       "inner's (ADVICE r18)") {
     import org.apache.spark.sql.functions.col
     val sc = spark.sparkContext
-    DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
     // reuse the live checkpoint root if an earlier test already pinned
     // one on this shared context (setCheckpointDir cannot be re-pointed)
     val root = sc.getCheckpointDir match {
@@ -782,7 +782,7 @@ class PlanSpec extends SparkSpec {
     }
     spark.conf.set("spark.graft.checkpoint.dir", root)
     try {
-      val inner = DedupQueries.sharedCheckpoint(spark, sf, "ckNestInner")(
+      val inner = SharedFrames.shared(spark, sf, "ckNestInner")(_ =>
         spark.range(100).toDF("doc_a"))
       assert(inner.count() == 100) // materialize inner's rdd-N files
       val ckDir = new org.apache.hadoop.fs.Path(sc.getCheckpointDir.get)
@@ -796,32 +796,47 @@ class PlanSpec extends SparkSpec {
       // it traversed outer's (untruncated) upstream plan into the inner
       // entry's materialized checkpoint and deleted files the live inner
       // entry still owned
-      DedupQueries.sharedCheckpoint(spark, sf, "ckNestOuter")(
+      SharedFrames.shared(spark, sf, "ckNestOuter")(_ =>
         inner.filter(col("doc_a") < 50))
-      DedupQueries.releaseShared(spark, "ckNestOuter")
+      SharedFrames.release(spark, "ckNestOuter")
       assert(rddDirs() == before,
         "releasing the unmaterialized outer entry touched the inner's files")
       assert(inner.count() == 100, "inner entry must stay readable")
-      DedupQueries.releaseShared(spark, "ckNestInner")
+      SharedFrames.release(spark, "ckNestInner")
       assert(rddDirs().isEmpty,
         "releasing the inner entry must delete its own files")
     } finally {
       spark.conf.unset("spark.graft.checkpoint.dir")
-      DedupQueries.releaseShared(spark)
+      SharedFrames.release(spark)
     }
   }
 
-  test("checkpointDirMismatch: warns exactly when the live checkpoint dir " +
-      "is not under the configured root") {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    // setCheckpointDir appends a per-context UUID segment under the root
-    val live = Some("file:/tmp/ck-root/9a1b2c3d-uuid")
-    assert(DedupQueries.checkpointDirMismatch(live, "/tmp/ck-root", conf).isEmpty,
-      "conf matching the live root must not warn")
-    val warn = DedupQueries.checkpointDirMismatch(live, "/tmp/other-root", conf)
-    assert(warn.exists(_.contains("/tmp/ck-root/9a1b2c3d-uuid")),
-      s"mismatched conf must warn with the live dir: $warn")
-    assert(DedupQueries.checkpointDirMismatch(None, "/tmp/x", conf).isEmpty)
+  test("a released shared entry fails loudly when read again, in both " +
+      "checkpoint modes (never a silent recompute)") {
+    val sc = spark.sparkContext
+    SharedFrames.release(spark)
+    // reliable mode reuses the live checkpoint root, as above
+    val root = sc.getCheckpointDir match {
+      case Some(existing) =>
+        new org.apache.hadoop.fs.Path(existing).getParent.toString
+      case None =>
+        java.nio.file.Files.createTempDirectory("graft-ck-reread").toString
+    }
+    for (ckDir <- Seq(None, Some(root))) {
+      ckDir.foreach(spark.conf.set("spark.graft.checkpoint.dir", _))
+      try {
+        val d02 = SparkEntry.queries("d02")(spark, sf)
+        assert(d02.count() > 0)
+        SharedFrames.release(spark, "minhash")
+        val e = intercept[org.apache.spark.SparkException](d02.collect())
+        assert(e.getMessage.contains(
+          if (ckDir.isEmpty) "CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND" else "part-"),
+          e.getMessage)
+      } finally {
+        spark.conf.unset("spark.graft.checkpoint.dir")
+        SharedFrames.release(spark)
+      }
+    }
   }
 
   test("d11: multi-table LSH dedup is equi-join only — no product, no " +
@@ -1200,11 +1215,11 @@ class PlanSpec extends SparkSpec {
   test("d02 build (r22): the verify half consumes the MATERIALIZED " +
       "candidate frame — the signature/band pipeline is never re-run " +
       "below it (was 4 re-runs / 12 documents scans in the r21 plan)") {
-    DedupQueries.releaseShared(spark, "minhash")
-    val cand = DedupQueries.sharedCheckpoint(spark, sf, "minhash/cand")(
-      DedupQueries.candidatePairs(spark, sf))
-    val p = DedupQueries.calibrationPairs(spark, sf, cand)
+    val scope = new SharedFrames.Scope
+    val cand = scope.checkpoint(DedupQueries.candidatePairs(spark, sf), eager = false)
+    val p = try DedupQueries.calibrationPairs(spark, sf, cand)
       .queryExecution.executedPlan.toString
+    finally scope.release()
     // no signature recompute anywhere in the verify half...
     assert(!p.contains("minhash_sig") && !p.contains("MinHashSig"),
       p.take(3000))
@@ -1216,31 +1231,13 @@ class PlanSpec extends SparkSpec {
     val scans = "Scan parquet".r.findAllIn(p).size
     assert(scans <= 2, s"verify half should scan documents at most " +
       s"twice, saw $scans:\n${p.take(3000)}")
-    DedupQueries.releaseShared(spark, "minhash")
-  }
-
-  test("releaseShared drops child tags with their parent (r22: the " +
-      "minhash build nests its candidate materialization under " +
-      "minhash/cand — a reset that left the child behind would hand the " +
-      "next build a cached candidate frame)") {
-    val one = spark.range(1).toDF("x")
-    def entry(tag: String) =
-      DedupQueries.sharedCheckpoint(spark, "/tmp/relspec", tag)(one)
-    val p1 = entry("par"); val c1 = entry("par/kid"); val s1 = entry("parX")
-    DedupQueries.releaseShared(spark, "par")
-    assert(entry("par") ne p1, "parent entry must be evicted")
-    assert(entry("par/kid") ne c1, "child entry must be evicted with parent")
-    assert(entry("parX") eq s1,
-      "sibling whose tag merely starts with the prefix must survive")
-    DedupQueries.releaseShared(spark, "par")
-    DedupQueries.releaseShared(spark, "parX")
   }
 
   test("d19 reuses d02's shared materialization — no second minhash " +
       "pipeline run, no new cached blocks") {
     import org.apache.spark.sql.functions.col
     val sc = spark.sparkContext
-    DedupQueries.releaseShared(spark, "minhash")
+    SharedFrames.release(spark, "minhash")
     val base = sc.getPersistentRDDs.keySet
     SparkEntry.queries("d02")(spark, sf).collect()
     val pairBlocks = sc.getPersistentRDDs.keySet -- base
@@ -1260,7 +1257,7 @@ class PlanSpec extends SparkSpec {
     val auditHigh = d19.filter(col("j_exact") >= 0.5).count()
     assert(auditHigh == verified,
       s"audit >=0.5 rows ($auditHigh) must equal d02's verified pairs ($verified)")
-    DedupQueries.releaseShared(spark, "minhash")
+    SharedFrames.release(spark, "minhash")
   }
 
   test("w12: curriculum deciles rank (qb)-partitioned against a broadcast " +

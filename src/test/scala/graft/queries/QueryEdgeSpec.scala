@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-import graft.{SparkSpec, SparkEntry}
+import graft.{SharedFrames, SparkSpec, SparkEntry}
 
 /** Edge-case behavior the driver corpus cannot exercise: the test tables
   * contain no degenerate rows (zero vectors, empty documents), so these
@@ -429,7 +429,7 @@ class QueryEdgeSpec extends SparkSpec {
     // d19 reads the shared calibration checkpoint (r20) — release the
     // mini-dir entry after so this test leaves no cached blocks behind
     val out = try SparkEntry.queries("d19")(spark, dir).collect()
-    finally DedupQueries.releaseShared(spark, "minhash")
+    finally SharedFrames.release(spark, "minhash")
     val pair = out.filter(r => r.getLong(0) == 1L && r.getLong(1) == 2L)
     assert(pair.length == 1, out.mkString("\n"))
     val r = pair.head
@@ -661,7 +661,7 @@ class QueryEdgeSpec extends SparkSpec {
       assert(mh == 0 || ng == 1,
         s"minhash-verified pair missing its exact-ngram vote: $r")
     }
-    graft.queries.DedupQueries.releaseShared(spark)
+    SharedFrames.release(spark)
   }
 
   test("t15 confusion-matrix invariants on real data: per-class cells sum " +

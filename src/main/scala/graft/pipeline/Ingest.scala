@@ -1,8 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.sources.RepetitionScan
 import TreeTable.MappingRule
 
 /** From-bytes ingest: the long-format tree table of a measurement
@@ -18,11 +19,12 @@ object Ingest {
     * configuration (`utilities.py:99-109`), frame times / darkcurrent /
     * frame count (`processstep_calc_beam_flux_and_transmissions.py:
     * 169-176`, `processstep_average_to_counts.py:47`), wavelength
-    * (`processstep_metadata_update.py:57-58`), and the detector/sample
-    * transformations (`processstep_make_beam_mask.py:66-68`). Units ride
-    * along as stored; the consuming stages convert (§1.2). */
+    * (`processstep_metadata_update.py:57-58`), the detector/sample
+    * transformations (`processstep_make_beam_mask.py:66-68`), and the
+    * direct/sample beam frames with their dims. Units ride along as
+    * stored; the consuming stages convert (§1.2). */
   val repetitionRules: Seq[MappingRule] = Seq(
-    MappingRule("/entry1/instrument/configuration", "configuration_f", "f64"),
+    MappingRule("/entry1/instrument/configuration", "configuration", "i32"),
     MappingRule("/entry1/processing/direct_beam_profile/frame_time",
       "directFrameTime", "f64"),
     MappingRule("/entry1/processing/sample_beam_profile/frame_time",
@@ -36,10 +38,16 @@ object Ingest {
     MappingRule("/entry1/instrument/detector00/transformations/det_x",
       "detX", "quantity"),
     MappingRule("/entry1/sample/transformations/sample_x",
-      "sampleX", "quantity"))
+      "sampleX", "quantity")) ++
+    beamFrame("direct") ++ beamFrame("sample")
 
-  private val DirectBeamPath = "/entry1/processing/direct_beam_profile/data"
-  private val SampleBeamPath = "/entry1/processing/sample_beam_profile/data"
+  /** `<which>Beam` / `<which>H` / `<which>W` from one beam-profile frame. */
+  private def beamFrame(which: String): Seq[MappingRule] = {
+    val path = s"/entry1/processing/${which}_beam_profile/data"
+    Seq(MappingRule(path, s"${which}Beam", "image"),
+      MappingRule(path, s"${which}H", "image_h"),
+      MappingRule(path, s"${which}W", "image_w"))
+  }
 
   /** (ymd, batch, repetition) keys from the repetition DIRECTORY name —
     * `YMD_class.extract_metadata_from_path` (`src/YMD_class.py:33-44`)
@@ -47,7 +55,7 @@ object Ingest {
     * above the file. Files outside that naming are dropped (the scan may
     * see strays; the reference's walker never selects them). */
   def repetitionKeys(files: DataFrame): DataFrame = {
-    val dirPat = "/(\\d{8})_(\\d+)_(\\d+)/[^/]+$"
+    val dirPat = "/" + RepetitionScan.repDirPattern + "/[^/]+$"
     files
       .select(col("path").as("file"), col("modificationTime"),
         regexp_extract(col("path"), dirPat, 1).as("ymd"),
@@ -59,59 +67,11 @@ object Ingest {
       .drop("b", "r")
   }
 
-  /** Tree table -> typed repetition frame ([[Model.Repetition]] shape).
-    * Same read semantics as folding `TreeTable.readF64/readQuantity/
-    * readImage` per rule (K19 mean-if-array coercion, typed defaults for
-    * missing paths, null images gating the steps) but evaluated as ONE
-    * conditional aggregation over a single pass of the tree: the per-rule
-    * fold would join — and therefore RE-SCAN and re-parse — the tree once
-    * per path, which at 100 TB means parsing every instrument file ~10×.
-    * One `groupBy(file)` shuffles each file's dozen tree rows once and
-    * every rule reads from that pass. */
-  def repetitionsFromTree(tree: DataFrame, keys: DataFrame): DataFrame = {
-    val f64 = TreeTable.scalarOrMean
-    def at(path: String, c: Column): Column = when(col("path") === path, c)
-    def scalar(path: String, as: String): Column =
-      coalesce(max(at(path, f64)), lit(0.0)).as(as)
-    def quantity(path: String, as: String): Column =
-      struct(
-        coalesce(max(at(path, f64)), lit(Double.NaN)).as("value"),
-        coalesce(max(at(path, col("units"))), lit("dimensionless")).as("units")
-      ).as(as)
-    def image(path: String, as: String, hCol: String, wCol: String) = {
-      val dims = split(col("attrs")("dims"), ",")
-      Seq(
-        first(at(path, col("valueArr")), ignoreNulls = true).as(as),
-        max(at(path, dims.getItem(0).cast("int"))).as(hCol),
-        max(at(path, dims.getItem(1).cast("int"))).as(wCol))
-    }
-    val aggs: Seq[Column] = repetitionRules.map { r =>
-      (r.dtype, r.dstColumn) match {
-        case ("f64", "configuration_f") => // int downstream
-          max(at(r.srcPath, f64)).cast("int").as("configuration")
-        case ("f64", as) => scalar(r.srcPath, as)
-        case ("quantity", as) => quantity(r.srcPath, as)
-        case (other, as) =>
-          throw new IllegalArgumentException(s"rule $as: dtype $other")
-      }
-    } ++ image(DirectBeamPath, "directBeam", "directH", "directW") ++
-      image(SampleBeamPath, "sampleBeam", "sampleH", "sampleW")
-    val joined = keys.join(
-      tree.groupBy(col("file")).agg(aggs.head, aggs.tail: _*),
-      Seq("file"), "left")
-    // a key whose file produced NO tree rows still gets the typed
-    // defaults (tolerate-missing contract, identical to the per-rule fold)
-    val defaulted = repetitionRules.foldLeft(joined) { (acc, r) =>
-      (r.dtype, r.dstColumn) match {
-        case ("f64", "configuration_f") =>
-          acc.withColumn("configuration", coalesce(col("configuration"), lit(0)))
-        case ("f64", as) =>
-          acc.withColumn(as, coalesce(col(as), lit(0.0)))
-        case (_, as) =>
-          acc.withColumn(as, coalesce(col(as),
-            struct(lit(Double.NaN).as("value"), lit("dimensionless").as("units"))))
-      }
-    }
-    defaulted
-  }
+  /** Tree table -> typed repetition frame ([[Model.Repetition]] shape):
+    * [[TreeTable.translateOnto]] of [[repetitionRules]] onto the keys, so
+    * ingest and the translator steps share one read path (K19 coercion,
+    * typed defaults, null images gating the steps) and one pass of the
+    * tree. */
+  def repetitionsFromTree(tree: DataFrame, keys: DataFrame): DataFrame =
+    TreeTable.translateOnto(tree, keys, repetitionRules)
 }

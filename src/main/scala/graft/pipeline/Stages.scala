@@ -50,14 +50,6 @@ object Stages {
     udf { (formula: String) => Composition.parse(formula).map(_.toArray).orNull }
       .withName(CompositionUdfName)
 
-  /** §1.2 pint-equivalent: fixed conversions to meters. */
-  def toMeters(value: Column, units: Column): Column =
-    value * when(units === "m", 1.0)
-      .when(units === "mm", 1e-3)
-      .when(units === "cm", 1e-2)
-      .when(units === "um", 1e-6)
-      .otherwise(lit(Double.NaN))
-
   // ------------------------------------------------------------------ steps
 
   /** J1 + K11 + K17: logbook broadcast join, energy, identifiers
@@ -133,10 +125,11 @@ object Stages {
         ImageExprs.beamCentroid(col("directBeam"), col("directH"), col("directW"))))
 
   /** K5: circular beam mask, radius scaled by distance
-    * (`processstep_make_beam_mask.py:19-35,85-90`). */
+    * (`processstep_make_beam_mask.py:19-35,85-90`); the distance goes
+    * through the translator's unit table (§1.2), unknown units -> NaN. */
   val makeBeamMask: Stage = (df, ctx) => {
-    val distance = toMeters(col("detX.value"), col("detX.units")) -
-      toMeters(col("sampleX.value"), col("sampleX.units"))
+    def meters(q: String) = TreeTable.inUnits(col(s"$q.value"), col(s"$q.units"), "m")
+    val distance = meters("detX") - meters("sampleX")
     df.withColumn("beam_center_distance_m", distance)
       .withColumn("beam_mask_radius",
         lit(ctx.refBeamDiameterPx / 2.0) * col("beam_center_distance_m") / lit(ctx.refDistanceM))

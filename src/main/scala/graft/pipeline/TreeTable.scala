@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * exactly the information a `TranslationElement` writes
   * (`/root/reference/src/processstep_determine_beam_center.py:66-114`).
   *
-  * Read helpers reproduce the reference's tolerate-missing semantics
-  * (`/root/reference/src/utilities.py:11-63`): a missing path yields the
-  * documented default (0.0 / '' / (NaN, dimensionless)) instead of failing.
+  * [[translateOnto]] is the one reader of this table: it reproduces the
+  * reference's tolerate-missing semantics (its `src/utilities.py:11-63`),
+  * so a missing path yields the documented default (0.0 / 0 / '' /
+  * (NaN, dimensionless), or null for image columns) instead of failing.
   */
 object TreeTable {
 
@@ -36,59 +37,12 @@ object TreeTable {
         aggregate(col("valueArr"), lit(0.0), (acc, x) => acc + x)
           / size(col("valueArr"))))
 
-  /** S3: scalar read with 0.0 default on missing path. One output row per
-    * input file (left join against the requested path). */
-  def readF64(tree: DataFrame, files: DataFrame, path: String, as: String): DataFrame =
-    readTyped(tree, files, path, as, coalesce(scalarOrMean, lit(0.0)))
-
-  /** S4: string read, '' default. */
-  def readStr(tree: DataFrame, files: DataFrame, path: String, as: String): DataFrame =
-    readTyped(tree, files, path, as, coalesce(col("valueStr"), lit("")))
-
-  /** S5: quantity read, (NaN, dimensionless) default. */
-  def readQuantity(tree: DataFrame, files: DataFrame, path: String, as: String): DataFrame =
-    readTyped(tree, files, path, as,
-      struct(
-        coalesce(scalarOrMean, lit(Double.NaN)).as("value"),
-        coalesce(col("units"), lit("dimensionless")).as("units")))
-
-  /** S6: image read — (float array, height, width) from an array dataset,
-    * dims from the parser's `dims` attribute ("H,W"). All three columns
-    * null when the path is missing, which the F2/F6 step gates read as
-    * "skip this repetition", matching the reference's tolerate-missing
-    * image reads (`utilities.py:112-134`). */
-  def readImage(tree: DataFrame, files: DataFrame, path: String,
-      as: String, hCol: String, wCol: String): DataFrame = {
-    val dims = split(col("attrs")("dims"), ",")
-    val slice = tree.filter(col("path") === path)
-      .select(col("file"), col("valueArr").as(as),
-        dims.getItem(0).cast("int").as(hCol),
-        dims.getItem(1).cast("int").as(wCol))
-    files.join(slice, Seq("file"), "left")
-  }
-
-  private def readTyped(
-      tree: DataFrame, files: DataFrame, path: String, as: String,
-      valueExpr: Column): DataFrame = {
-    val slice = tree.filter(col("path") === path)
-      .select(col("file"), valueExpr.as(as))
-    files.join(slice, Seq("file"), "left")
-      .withColumn(as, coalesce(col(as),
-        slice.schema(as).dataType match {
-          case org.apache.spark.sql.types.DoubleType => lit(0.0)
-          case org.apache.spark.sql.types.StringType => lit("")
-          case st: org.apache.spark.sql.types.StructType =>
-            struct(lit(Double.NaN).as("value"), lit("dimensionless").as("units"))
-          case _ => lit(null)
-        }))
-  }
-
   /** K20: one declarative translator rule — the HDF5Translator YAML row
     * (source path, destination column, dtype, destination units). */
   case class MappingRule(
       srcPath: String,
       dstColumn: String,
-      dtype: String, // "f64" | "str" | "quantity"
+      dtype: String, // "f64" | "i32" | "str" | "quantity" | "image" | "image_h" | "image_w"
       toUnits: Option[String] = None)
 
   /** Fixed unit-conversion table (§1.2 pint equivalent): factor to convert
@@ -98,34 +52,55 @@ object TreeTable {
     ("um", "m") -> 1e-6, ("m", "mm") -> 1e3, ("mm", "mm") -> 1.0,
     ("angstrom", "angstrom") -> 1.0, ("nm", "angstrom") -> 10.0)
 
+  /** `value` given in `units`, expressed in `target` through the fixed
+    * conversion table. Unknown or null units -> NaN. */
+  private[pipeline] def inUnits(value: Column, units: Column, target: String): Column =
+    value * conversions.foldLeft(lit(Double.NaN)) {
+      case (acc, ((from, to), f)) if to == target =>
+        when(units === from, lit(f)).otherwise(acc)
+      case (acc, _) => acc
+    }
+
   /** K20 applied: fold a rule list over the tree table to produce one wide
     * row per file — the translator step as a config-driven column mapping
     * (no subprocess, no per-file mutation; SURVEY §3.1). */
   def translate(tree: DataFrame, rules: Seq[MappingRule]): DataFrame =
     translateOnto(tree, tree.select(col("file")).distinct(), rules)
 
-  /** Second-pass translation (`processstep_translator_step_2.py`): enrich an
-    * already-wide frame (keyed by `file`) with more tree-derived columns.
+  /** Tree table -> wide typed rows: enrich a frame keyed by `file` (the
+    * listing keys for ingest, an already-wide frame for the second
+    * translator pass, `processstep_translator_step_2.py`) with one column
+    * per rule.
     *
     * Evaluated as ONE conditional aggregation over a single pass of the
     * tree, not a join per rule: the tree is usually a COMPUTED parse of
     * raw instrument bytes, so N per-rule joins would re-scan and re-parse
-    * every file N times at corpus scale. Per-rule semantics are identical
-    * to the single-read helpers (K19 coercion, typed defaults for missing
-    * paths and for files absent from the tree, fixed unit conversions). */
+    * every file N times at corpus scale. Per rule: K19 mean-if-array
+    * coercion for numbers, typed defaults for missing paths and for files
+    * absent from the tree (f64 0.0, i32 0, str '', quantity (NaN,
+    * dimensionless)), fixed unit conversions. Image columns (`image`, and
+    * its `image_h`/`image_w` from the parser's "H,W" `dims` attribute) stay
+    * null when missing, which the F2/F6 step gates read as "skip this
+    * repetition" (`utilities.py:112-134`). */
   def translateOnto(tree: DataFrame, base: DataFrame, rules: Seq[MappingRule]): DataFrame = {
     if (rules.isEmpty) return base
     def at(path: String, c: Column): Column = when(col("path") === path, c)
+    def dim(i: Int): Column = split(col("attrs")("dims"), ",").getItem(i).cast("int")
     val aggs: Seq[Column] = rules.map { r =>
-      r.dtype match {
-        case "f64" => max(at(r.srcPath, scalarOrMean)).as(r.dstColumn)
-        case "str" => max(at(r.srcPath, col("valueStr"))).as(r.dstColumn)
+      val p = r.srcPath
+      (r.dtype match {
+        case "f64" => max(at(p, scalarOrMean))
+        case "i32" => max(at(p, scalarOrMean)).cast("int")
+        case "str" => max(at(p, col("valueStr")))
         case "quantity" =>
           struct(
-            max(at(r.srcPath, scalarOrMean)).as("value"),
-            max(at(r.srcPath, col("units"))).as("units")).as(r.dstColumn)
+            max(at(p, scalarOrMean)).as("value"),
+            max(at(p, col("units"))).as("units"))
+        case "image" => first(at(p, col("valueArr")), ignoreNulls = true)
+        case "image_h" => max(at(p, dim(0)))
+        case "image_w" => max(at(p, dim(1)))
         case other => throw new IllegalArgumentException(s"unknown dtype $other")
-      }
+      }).as(r.dstColumn)
     }
     val wide = tree.groupBy(col("file")).agg(aggs.head, aggs.tail: _*)
     val joined = base.join(wide, Seq("file"), "left")
@@ -133,6 +108,7 @@ object TreeTable {
       val c = col(rule.dstColumn)
       rule.dtype match {
         case "f64" => acc.withColumn(rule.dstColumn, coalesce(c, lit(0.0)))
+        case "i32" => acc.withColumn(rule.dstColumn, coalesce(c, lit(0)))
         case "str" => acc.withColumn(rule.dstColumn, coalesce(c, lit("")))
         case "quantity" =>
           val v = coalesce(c("value"), lit(Double.NaN))
@@ -140,14 +116,10 @@ object TreeTable {
           val converted = rule.toUnits match {
             case None => struct(v.as("value"), u.as("units"))
             case Some(target) =>
-              val factor = conversions.foldLeft(lit(Double.NaN)) {
-                case (acc2, ((from, to), f)) if to == target =>
-                  when(u === from, lit(f)).otherwise(acc2)
-                case (acc2, _) => acc2
-              }
-              struct((v * factor).as("value"), lit(target).as("units"))
+              struct(inUnits(v, u, target).as("value"), lit(target).as("units"))
           }
           acc.withColumn(rule.dstColumn, converted)
+        case _ => acc // image columns: null means missing
       }
     }
   }

@@ -15,10 +15,11 @@ import graft.pipeline.TreeTable.TreeRow
   * `binaryFile` lists and reads the measurement tree with one task per file;
   * [[Hdf5.toTreeRows]] runs inside the executors, so a 100 TB corpus of
   * instrument files parallelizes by file count with no driver involvement.
-  * The output feeds `TreeTable.readF64/readStr/readQuantity` and
-  * `TreeTable.translate` — the reference's `utilities.py` read semantics
-  * (missing path -> typed default) happen relationally downstream, so a file
-  * missing a dataset never fails the scan.
+  * The output feeds `TreeTable.translateOnto` (through `Ingest.
+  * repetitionsFromTree` and the translator steps) — the reference's
+  * `utilities.py` read semantics (missing path -> typed default) happen
+  * relationally downstream, so a file missing a dataset never fails the
+  * scan.
   *
   * Size bound: `binaryFile` materializes each file as one in-memory byte
   * array, capped by `spark.sql.sources.binaryFile.maxLength` (<= ~2 GB).

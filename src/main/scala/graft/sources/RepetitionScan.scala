@@ -14,14 +14,16 @@ import org.apache.spark.sql.functions._
   * The HDF5 byte-parse step lives behind this boundary: `repetitionFiles`
   * returns (key columns, relPath, bytes, mtime); [[Hdf5Source.treeTable]]
   * (the pure-JVM [[Hdf5]] reader) converts `.nxs/.h5` bytes into the
-  * long-format tree table, and `TreeTable.translate` produces the typed
+  * long-format tree table, and `Ingest.repetitionsFromTree` (one
+  * `TreeTable.translateOnto` over the ingest rules) produces the typed
   * repetition columns from it. All downstream stages consume the
   * already-typed Model.Repetition schema.
   */
 object RepetitionScan {
 
   /** `{ymd}_{batch}_{repetition}` directory-name grammar (`YMD_class.py:
-    * 33-44`) — shared with the streaming watcher so batch and stream can
+    * 33-44`) — the only one: this scan, `Ingest.repetitionKeys` and the
+    * streaming watcher all build on it, so batch, ingest and stream can
     * never disagree on path parsing. */
   val repDirPattern = "(\\d{8})_(\\d+)_(\\d+)"
 

@@ -3,6 +3,9 @@ package graft.pipeline
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -98,22 +101,39 @@ class FullDagGoldenSpec extends SparkSpec {
   }
 
   test("ingest is one pass: the tree is scanned once, not once per rule") {
-    // the per-rule readF64/readImage fold would re-scan (and re-parse)
+    // a per-rule fold (`PerRuleReaders.fold`) would re-scan (and re-parse)
     // every instrument file once per mapping — ~10x the parse work at
     // corpus scale. The conditional aggregation must leave exactly two
     // source scans in the plan: the tree parse and the key/mtime listing
     // (which prunes the content column).
     val dir = resourceDir("/h5/pipe")
-    val files = spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.nxs")
-      .option("recursiveFileLookup", "true")
-      .load(dir)
-    val reps = Ingest.repetitionsFromTree(
-      Hdf5Source.treeTable(spark, dir, glob = "*.nxs"),
-      Ingest.repetitionKeys(files.select(col("path"), col("modificationTime"))))
-    val plan = reps.queryExecution.optimizedPlan.toString
+    def reps(): DataFrame = {
+      val files = spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.nxs")
+        .option("recursiveFileLookup", "true")
+        .load(dir)
+      Ingest.repetitionsFromTree(
+        Hdf5Source.treeTable(spark, dir, glob = "*.nxs"),
+        Ingest.repetitionKeys(files.select(col("path"), col("modificationTime"))))
+    }
+    val plan = reps().queryExecution.optimizedPlan.toString
     val scans = "binaryFile".r.findAllMatchIn(plan).size
     assert(scans <= 2, s"$scans binaryFile scans in ingest plan:\n$plan")
+
+    // the physical shape (static plan, AQE off): one hash exchange for
+    // groupBy(file) plus the broadcast of the aggregated side, a partial
+    // and a final aggregate, one join back to the keys
+    val key = "spark.sql.adaptive.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try {
+      val physical = reps().queryExecution.executedPlan
+      val exchanges = physical.collect { case e: Exchange => e }.size
+      val aggregates = physical.collect { case a: BaseAggregateExec => a }.size
+      val joins = physical.collect { case j: BaseJoinExec => j }.size
+      assert((exchanges, aggregates, joins) == ((2, 2, 1)),
+        s"(exchanges, aggregates, joins) in ingest plan:\n$physical")
+    } finally spark.conf.set(key, old)
   }
 
   test("from-bytes full DAG: stacker output equals golden") {

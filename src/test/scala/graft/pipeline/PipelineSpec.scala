@@ -102,6 +102,37 @@ class PipelineSpec extends SparkSpec {
     assert(scat > 0.01, s"halo must register as scattering probability, got $scat")
   }
 
+  test("make_beam_mask: beam_center_distance_m scales m/mm/cm/um, NaN for unknown or null units") {
+    import spark.implicits._
+    val direct = Fixtures.gaussian()
+    // (detX, sampleX) -> expected detX - sampleX in meters
+    val cases = Seq(
+      (Model.Quantity(2.5, "m"), Model.Quantity(0.25, "m"), 2.5 - 0.25),
+      (Model.Quantity(2500.0, "mm"), Model.Quantity(500.0, "mm"), 2500.0 * 1e-3 - 500.0 * 1e-3),
+      (Model.Quantity(2.5, "m"), Model.Quantity(30.0, "cm"), 2.5 - 30.0 * 1e-2),
+      (Model.Quantity(2.5, "m"), Model.Quantity(1.0e5, "um"), 2.5 - 1.0e5 * 1e-6),
+      (Model.Quantity(2.5, "m"), Model.Quantity(1.0, "furlong"), Double.NaN),
+      (Model.Quantity(2.5, null), Model.Quantity(0.5, "m"), Double.NaN))
+    val rows = cases.zipWithIndex.map { case ((det, sample, _), i) =>
+      Model.Repetition(
+        ymd = "20240115", batch = 1, repetition = i, configuration = 1,
+        directBeam = direct, directH = Fixtures.H, directW = Fixtures.W,
+        directFrameTime = 1.0,
+        sampleBeam = direct, sampleH = Fixtures.H, sampleW = Fixtures.W,
+        sampleFrameTime = 1.0,
+        darkcurrent = 0.0, averagedNumberOfFrames = 1.0,
+        incidentWavelength = Model.Quantity(1.54, "angstrom"),
+        detX = det, sampleX = sample,
+        modificationTime = java.sql.Timestamp.valueOf("2024-01-15 12:00:00"))
+    }.toDS().toDF()
+    val got = Stages.run(rows, ctx, Seq("determine_beam_center", "make_beam_mask"))
+      .select("repetition", "beam_center_distance_m").as[(Int, Double)].collect().toMap
+    cases.zipWithIndex.foreach { case ((det, sample, expected), i) =>
+      val d = got(i)
+      assert(if (expected.isNaN) d.isNaN else d == expected, s"$det - $sample: got $d")
+    }
+  }
+
   test("negative absorption (T > 1 noise) derives a small NEGATIVE thickness, not -1") {
     import spark.implicits._
     val direct = Fixtures.gaussian()

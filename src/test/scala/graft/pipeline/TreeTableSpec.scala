@@ -21,8 +21,10 @@ class TreeTableSpec extends SparkSpec {
 
   test("scalar/string reads default to 0.0 / '' on missing paths (S3/S4)") {
     val files = tree.select($"file").distinct()
-    val withCfg = readF64(tree, files, "/entry1/instrument/configuration", "cfg")
-    val withName = readStr(tree, withCfg, "/entry1/sample/name", "sample")
+    val withCfg = translateOnto(tree, files,
+      Seq(MappingRule("/entry1/instrument/configuration", "cfg", "f64")))
+    val withName = translateOnto(tree, withCfg,
+      Seq(MappingRule("/entry1/sample/name", "sample", "str")))
     val byFile = withName.collect().map(r => r.getString(0) -> r).toMap
     assert(byFile("f1").getDouble(1) == 3.0 && byFile("f1").getString(2) == "caffeine")
     assert(byFile("f2").getDouble(1) == 5.0 && byFile("f2").getString(2) == "") // missing -> ''
@@ -40,14 +42,14 @@ class TreeTableSpec extends SparkSpec {
         Some(Array.empty[Float]), None, Map()) // empty array -> default
     ).toDS().toDF()
     val files = t.select($"file").distinct()
-    val ft = readF64(t, files, "/entry1/frame_time", "ft")
+    val ft = translateOnto(t, files, Seq(MappingRule("/entry1/frame_time", "ft", "f64")))
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(math.abs(ft("f1") - 0.25) < 1e-7) // mean(0.1,0.2,0.3,0.4)
     assert(ft("f2") == 7.0) // scalar passes through untouched
     assert(ft("f3") == 0.0) // empty array -> S3 missing default
 
     // the quantity reader shares the coercion (value = mean, units kept)
-    val q = readQuantity(t, files, "/entry1/frame_time", "ftq")
+    val q = translateOnto(t, files, Seq(MappingRule("/entry1/frame_time", "ftq", "quantity")))
       .collect().map(r => r.getString(0) -> r.getStruct(1)).toMap
     assert(math.abs(q("f1").getDouble(0) - 0.25) < 1e-7)
     assert(q("f1").getString(1) == "s")
@@ -56,7 +58,8 @@ class TreeTableSpec extends SparkSpec {
 
   test("quantity read defaults to (NaN, dimensionless) (S5)") {
     val files = tree.select($"file").distinct()
-    val q = readQuantity(tree, files, "/entry1/detector/distance", "dist")
+    val q = translateOnto(tree, files,
+      Seq(MappingRule("/entry1/detector/distance", "dist", "quantity")))
       .collect().map(r => r.getString(0) -> r.getStruct(1)).toMap
     assert(q("f1") == Row(2500.0, "mm"))
     assert(q("f2").getDouble(0).isNaN && q("f2").getString(1) == "dimensionless")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.pipeline.TreeTable
+import graft.pipeline.TreeTable.MappingRule
 
 /** The HDF5 byte-parse boundary (S3–S6): real `.h5` fixture bytes — written
   * from the public file-format spec by `scripts/make_h5_fixtures.py` — read
@@ -812,19 +813,22 @@ class Hdf5Spec extends SparkSpec {
 
     val files = tree.select(col("file")).distinct()
     // a.h5 has the path, b.h5 defaults to 0.0 (S3 tolerate-missing)
-    val cfg = TreeTable.readF64(tree, files, "/entry1/instrument/configuration", "cfg")
+    val cfg = TreeTable.translateOnto(tree, files,
+        Seq(MappingRule("/entry1/instrument/configuration", "cfg", "f64")))
       .collect().map(r => r.getString(0).split("/").last -> r.getDouble(1)).toMap
     assert(cfg("a.h5") == 3.0 && cfg("b.h5") == 0.0)
 
     // S5 quantity: value+units struct, (NaN, dimensionless) default
-    val q = TreeTable.readQuantity(tree, files, "/entry1/detector/distance", "dist")
+    val q = TreeTable.translateOnto(tree, files,
+        Seq(MappingRule("/entry1/detector/distance", "dist", "quantity")))
       .collect().map(r => r.getString(0).split("/").last -> r.getStruct(1)).toMap
     assert(q("b.h5").getDouble(0) == 2507.5 && q("b.h5").getString(1) == "mm")
     assert(q("a.h5").getDouble(0).isNaN && q("a.h5").getString(1) == "dimensionless")
 
     // K19 mean-if-array: a float read of an ARRAY dataset returns its mean
     // (get_float_from_h5 semantics), not the missing-path default
-    val ang = TreeTable.readF64(tree, files, "/entry1/sample/angles", "ang")
+    val ang = TreeTable.translateOnto(tree, files,
+        Seq(MappingRule("/entry1/sample/angles", "ang", "f64")))
       .collect().map(r => r.getString(0).split("/").last -> r.getDouble(1)).toMap
     assert(ang("a.h5") == 0.75 && ang("b.h5") == 0.0) // mean(0,0.5,1,1.5)
 
@@ -954,7 +958,8 @@ class Hdf5Spec extends SparkSpec {
     assert(tree.count() == 38) // + mouse_v2's 27 incl. compound children
     // the batch read-helper contract holds on the streamed table
     val files = tree.select(col("file")).distinct()
-    val cfg = TreeTable.readF64(tree, files, "/entry1/instrument/configuration", "cfg")
+    val cfg = TreeTable.translateOnto(tree, files,
+      Seq(MappingRule("/entry1/instrument/configuration", "cfg", "f64")))
     assert(cfg.count() == 2)
   }
 

@@ -51,21 +51,16 @@ object Ingest {
 
   /** (ymd, batch, repetition) keys from the repetition DIRECTORY name —
     * `YMD_class.extract_metadata_from_path` (`src/YMD_class.py:33-44`)
-    * relationally: the dir component `YYYYMMDD_batch_repetition` right
-    * above the file. Files outside that naming are dropped (the scan may
-    * see strays; the reference's walker never selects them). */
-  def repetitionKeys(files: DataFrame): DataFrame = {
-    val dirPat = "/" + RepetitionScan.repDirPattern + "/[^/]+$"
-    files
+    * relationally, through the scan's projection
+    * [[RepetitionScan.withRepetitionKeys]]: only files directly inside a
+    * `YYYYMMDD_batch_repetition` directory are repetition files. Files
+    * outside that naming are dropped (the scan may see strays; the
+    * reference's walker never selects them). */
+  def repetitionKeys(files: DataFrame): DataFrame =
+    files.transform(RepetitionScan.withRepetitionKeys)
+      .filter(!col("relPath").contains("/"))
       .select(col("path").as("file"), col("modificationTime"),
-        regexp_extract(col("path"), dirPat, 1).as("ymd"),
-        regexp_extract(col("path"), dirPat, 2).as("b"),
-        regexp_extract(col("path"), dirPat, 3).as("r"))
-      .filter(col("ymd") =!= "")
-      .withColumn("batch", col("b").cast("int"))
-      .withColumn("repetition", col("r").cast("int"))
-      .drop("b", "r")
-  }
+        col("ymd"), col("batch"), col("repetition"))
 
   /** Tree table -> typed repetition frame ([[Model.Repetition]] shape):
     * [[TreeTable.translateOnto]] of [[repetitionRules]] onto the keys, so

@@ -17,10 +17,14 @@ import graft.SharedFrames
   * windows, stacking) are the only shuffles. Each step's `can_run`
   * precondition is encoded as null-gating or a filter inside the stage.
   *
-  * Scale posture: logbook and mask dims are broadcast (J1/J2); the
-  * propagation step is a window (A7 — no re-grouping shuffle); stacking is a
-  * single groupBy with a mergeable per-pixel aggregator (no collect_list of
-  * images); everything else is row-local.
+  * Scale posture: logbook and mask dims are broadcast (J1/J2), and so is
+  * the per-collection background aggregate of the thickness step; the
+  * propagation step is a window (A7 — no re-grouping shuffle), and on the
+  * reference step list its shuffle on (ymd, batch) is the only exchange
+  * the repetition rows cross: thickness keeps that layout, so stacking — a
+  * groupBy with a mergeable per-pixel aggregator (no collect_list of
+  * images) — and the snapshot write run in the window's partitions;
+  * everything else is row-local.
   */
 object Stages {
 
@@ -208,14 +212,20 @@ object Stages {
     // stage fills the cache, the probe side of the join reads it back.
     // Held in ctx.caches: the driver calls ctx.caches.release() after its
     // action, so long-lived sessions don't accumulate cache entries.
-    // No broadcast hint on bgStats: one row per (collection, configuration)
-    // is unbounded, so AQE must stay free to pick a shuffle join at scale.
+    // bgStats is broadcast: it has one narrow row per (collection,
+    // configuration), the logbook's cardinality, which metadata_update
+    // already broadcasts (J1), so the hint adds no size limit the pass does
+    // not already have. The wide persisted rows stay on the probe side in
+    // the partitions they arrived in: after the propagation window those
+    // are (ymd, batch), so the stacker and the snapshot write need no
+    // further exchange. Left to AQE, both join sides would be shuffled,
+    // because both map stages are submitted before it sees bgStats' size.
     val input = ctx.caches.persist(df)
     val bgStats = input.groupBy(
         col("collection_identifier").as("bg_id"),
         col("configuration").as("bg_config"))
       .agg(avg(col("transmission")).as("bg_transmission"))
-    val joined = input.join(bgStats,
+    val joined = input.join(broadcast(bgStats),
       col("background_identifier") === col("bg_id") &&
         col("configuration") === col("bg_config"), "left")
       .drop("bg_id", "bg_config")
@@ -282,8 +292,11 @@ object Stages {
     col("sampleBeam").isNotNull && col("transmission").isNotNull &&
       col("beam_center").isNotNull && col("mask").isNotNull
 
-  /** A1–A4: the stacker. One shuffle on (ymd, batch, configuration);
-    * per-pixel stats via the mergeable ArrayStats aggregator; scalar stats
+  /** A1–A4: the stacker. Groups on (ymd, batch, configuration): after the
+    * propagation window the input is already clustered on (ymd, batch), so
+    * the partial and final aggregates run in one stage with no exchange;
+    * without a window upstream the groupBy adds its own shuffle. Per-pixel
+    * stats via the mergeable ArrayStats aggregator; scalar stats
     * via built-ins (stddev_samp = ddof 1); non-stacked fields copied from the
     * lowest repetition (first-as-template)
     * (`post_translation_operation_hdf5_stacker.py:120-246`). */

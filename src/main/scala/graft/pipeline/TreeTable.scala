@@ -90,7 +90,9 @@ object TreeTable {
       val p = r.srcPath
       (r.dtype match {
         case "f64" => max(at(p, scalarOrMean))
-        case "i32" => max(at(p, scalarOrMean)).cast("int")
+        // not representable (NaN, +-Inf, beyond the int range) -> missing,
+        // so the default 0, with or without ANSI mode
+        case "i32" => max(at(p, scalarOrMean)).try_cast("int")
         case "str" => max(at(p, col("valueStr")))
         case "quantity" =>
           struct(

@@ -22,10 +22,30 @@ import org.apache.spark.sql.functions._
 object RepetitionScan {
 
   /** `{ymd}_{batch}_{repetition}` directory-name grammar (`YMD_class.py:
-    * 33-44`) — the only one: this scan, `Ingest.repetitionKeys` and the
-    * streaming watcher all build on it, so batch, ingest and stream can
-    * never disagree on path parsing. */
-  val repDirPattern = "(\\d{8})_(\\d+)_(\\d+)"
+    * 33-44`) — the only one: the batch scan, `Ingest.repetitionKeys` and the
+    * streaming watcher all go through [[withRepetitionKeys]], so batch,
+    * ingest and stream can never disagree on path parsing. It matches the
+    * nearest enclosing directory that is a whole path component — `/` on
+    * both sides, so neither `x20240115_1_2/` nor `20240115_1_2_old/` is a
+    * repetition directory — and the path below it. Groups: 1 directory
+    * name, 2 ymd, 3 batch, 4 repetition, 5 relPath. */
+  private val repPathPattern = "^.*/((\\d{8})_(\\d+)_(\\d+))/(.*)$"
+
+  /** Path -> repetition projection of a file listing: adds `repDir` (the
+    * directory name), `ymd`, `batch`, `repetition` and `relPath` (the path
+    * below the directory, nested or not) from its `path` column, and drops
+    * files outside every repetition directory. */
+  def withRepetitionKeys(files: DataFrame): DataFrame = {
+    def group(i: Int) = regexp_extract(col("path"), repPathPattern, i)
+    // filter before the casts: under ANSI mode '' does not cast to int
+    files
+      .withColumn("repDir", group(1))
+      .filter(col("repDir") =!= "")
+      .withColumn("ymd", group(2))
+      .withColumn("batch", group(3).cast("int"))
+      .withColumn("repetition", group(4).cast("int"))
+      .withColumn("relPath", group(5))
+  }
 
   /** The 4 required-file patterns (`checkers.py:15-16,19-46`) — one
     * definition for the batch gate (rlike) and the streaming gate (Regex). */
@@ -43,11 +63,8 @@ object RepetitionScan {
     spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
       .load(dataRoot)
-      .withColumn("ymd", regexp_extract(col("path"), repDirPattern + "/", 1))
-      .withColumn("batch", regexp_extract(col("path"), repDirPattern + "/", 2).cast("int"))
-      .withColumn("repetition", regexp_extract(col("path"), repDirPattern + "/", 3).cast("int"))
-      .withColumn("relPath", regexp_extract(col("path"), repDirPattern + "/(.*)$", 4))
-      .filter(col("ymd") =!= "")
+      .transform(withRepetitionKeys)
+      .drop("repDir")
 
   /** S2/F1: the 4-condition readiness gate as a relational filter — returns
     * one row per ready repetition directory. */

@@ -119,13 +119,13 @@ object Watcher {
 
   /** Production wiring: watch a data root for new files and derive
     * FileEvents from paths `.../{ymd}_{batch}_{rep}/<relPath>`
-    * (`YMD_class.py:33-44` path parsing, same anchored grammar as the
-    * batch scan — a trailing '/' so `20240115_1_2_old` never matches, and
-    * non-repetition paths are dropped instead of pooling under "". */
+    * (`YMD_class.py:33-44` path parsing, the batch scan's projection
+    * [[RepetitionScan.withRepetitionKeys]]): the directory is a whole path
+    * component, so `20240115_1_2_old` never matches, and non-repetition
+    * paths are dropped instead of pooling under "". */
   def fileEvents(spark: SparkSession, dataRoot: String): Dataset[FileEvent] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val dirPat = RepetitionScan.repDirPattern
     // streaming file sources require an explicit schema; binaryFile's is
     // fixed by the format
     val binaryFileSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -135,11 +135,7 @@ object Watcher {
       .option("recursiveFileLookup", "true") // rep dirs nest 2-3 levels deep
       .load(dataRoot)
       .select(col("path"), col("modificationTime"))
-      .withColumn("repDir",
-        regexp_extract(col("path"), s"($dirPat)/", 1))
-      .withColumn("relPath",
-        regexp_extract(col("path"), s"$dirPat/(.*)$$", 4))
-      .filter(col("repDir") =!= "")
+      .transform(RepetitionScan.withRepetitionKeys)
       .select(col("repDir"), col("relPath"), col("modificationTime").as("ts"))
       .as[FileEvent]
   }

@@ -19,4 +19,11 @@ class ScriptsSpec extends AnyFunSuite {
       .!(ProcessLogger(l => { out.append(l).append('\n'); () }))
     assert(rc == 0, s"test_check_pins.py failed:\n$out")
   }
+
+  test("perfbench_ab.py: schedule, run parsing and A/B statistics") {
+    val out = new StringBuilder
+    val rc = Process(Seq("python3", "scripts/test_perfbench_ab.py"))
+      .!(ProcessLogger(l => { out.append(l).append('\n'); () }))
+    assert(rc == 0, s"test_perfbench_ab.py failed:\n$out")
+  }
 }

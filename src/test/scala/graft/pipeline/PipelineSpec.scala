@@ -1,13 +1,23 @@
 package graft.pipeline
 
+import java.util.concurrent.atomic.AtomicReference
+
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
+
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, Attribute, Expression, ScalaUDF}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike, ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SharedFrames, SparkSpec}
 
@@ -200,8 +210,6 @@ class PipelineSpec extends SparkSpec {
     val out = Stages.thicknessFromAbsorption(input, ctx)
     out.collect()
     assert(acc.value == 100, s"upstream evaluated ${acc.value} / 100 times")
-    // and the background join is hint-free (AQE picks the strategy)
-    assert(!out.queryExecution.analyzed.toString.contains("ResolvedHint"))
     spark.sharedState.cacheManager.clearCache()
   }
 
@@ -393,5 +401,79 @@ class PipelineSpec extends SparkSpec {
       assert(shufflesOverInput(plan) == 0, plan.toString)
       assert(plan.collectFirst { case b: BroadcastExchangeExec => b }.nonEmpty, plan.toString)
     } finally spark.conf.set(key, old)
+  }
+
+  /** Every node of an executed physical plan, through final adaptive
+    * plans, query stages, command results and cached relations, unless
+    * `stop` holds for the node. */
+  private def finalNodes(p: SparkPlan, stop: SparkPlan => Boolean = _ => false): Seq[SparkPlan] =
+    p +: (p match {
+      case _ if stop(p) => Nil
+      case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan, stop)
+      case q: QueryStageExec => finalNodes(q.plan, stop)
+      case c: CommandResultExec => finalNodes(c.commandPhysicalPlan, stop)
+      case m: InMemoryTableScanExec => finalNodes(m.relation.cacheBuilder.cachedPlan, stop)
+      case o => o.children.flatMap(finalNodes(_, stop))
+    })
+
+  private def outputs(p: SparkPlan, name: String): Boolean = p.output.exists(_.name == name)
+
+  test("plan guard: the repetition rows cross one exchange, the stacker and the snapshot none") {
+    // the fixture pass as perfbench composes it, with AQE on (the suite
+    // session's default); the plan read is the snapshot write's final one
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val written = new AtomicReference[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.toString.contains("InsertIntoHadoopFsRelationCommand")) written.set(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val ctx2 = ctx.copy(caches = new SharedFrames.Scope)
+    val dir = java.nio.file.Files.createTempDirectory("snapshot").toString
+    spark.listenerManager.register(listener)
+    try {
+      // the reference list without its last step, the CSV table
+      val processed = Stages.run(Fixtures.repetitions(spark), ctx2,
+        Stages.referenceSteps.dropRight(1))
+      Sinks.writeSnapshot(Stages.stacker(processed, ctx2), dir)
+      eventually(timeout(30.seconds)) { assert(written.get != null) }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      ctx2.caches.release()
+    }
+    val plan = written.get.executedPlan
+    val all = finalNodes(plan)
+    def show = all.collect { case a: AdaptiveSparkPlanExec => a.executedPlan.toString }
+      .mkString(plan.toString + "\n", "\n", "")
+
+    // the thickness join broadcasts the background aggregate
+    val bgJoins = all.collect {
+      case j: BroadcastHashJoinExec
+          if finalNodes(if (j.buildSide == BuildRight) j.right else j.left)
+            .exists(n => n.isInstanceOf[BaseAggregateExec] && outputs(n, "bg_transmission")) => j
+    }
+    assert(bgJoins.size == 1, show)
+
+    // the stacker aggregates the thickness cache in its own partitions
+    val stackAgg = all.collectFirst {
+      case a: BaseAggregateExec if outputs(a, "stacked_image_stats") => a
+    }.getOrElse(fail(s"no stacker aggregate:\n$show"))
+    val belowStacker = finalNodes(stackAgg, {
+      case _: InMemoryTableScanExec | _: BroadcastExchangeLike | _: BroadcastQueryStageExec => true
+      case _ => false
+    })
+    assert(belowStacker.exists(_.isInstanceOf[InMemoryTableScanExec]), show)
+    assert(!belowStacker.exists(_.isInstanceOf[ShuffleExchangeLike]), show)
+
+    // one shuffle carries the frames: the propagation window's on (ymd, batch)
+    val wide = all.collect {
+      case s: ShuffleExchangeLike if outputs(s.child, "sampleBeam") => s
+    }.distinct
+    assert(wide.size == 1, show)
+    wide.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.collect { case a: Attribute => a.name } == Seq("ymd", "batch"), show)
+      case other => fail(s"window shuffle partitioned by $other")
+    }
   }
 }

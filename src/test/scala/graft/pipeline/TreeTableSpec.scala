@@ -65,6 +65,24 @@ class TreeTableSpec extends SparkSpec {
     assert(q("f2").getDouble(0).isNaN && q("f2").getString(1) == "dimensionless")
   }
 
+  test("i32: a value outside the int range reads as missing (0), ANSI on or off") {
+    val values = Seq(Double.NaN, 3.0e9, -3.0e9, Double.PositiveInfinity,
+      Double.NegativeInfinity, 7.0)
+    val t = values.zipWithIndex.map { case (v, i) =>
+      TreeRow(s"f$i", "/entry1/instrument/configuration", Some(v), None, None, None, Map())
+    }.toDS().toDF()
+    val key = "spark.sql.ansi.enabled"
+    val old = spark.conf.get(key)
+    try Seq("true", "false").foreach { ansi =>
+      spark.conf.set(key, ansi)
+      val cfg = translateOnto(t, t.select($"file"),
+          Seq(MappingRule("/entry1/instrument/configuration", "cfg", "i32")))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      assert(values.indices.map(i => cfg(s"f$i")) == Seq(0, 0, 0, 0, 0, 7),
+        s"ansi=$ansi: $cfg")
+    } finally spark.conf.set(key, old)
+  }
+
   test("translator mapping produces a wide typed row with unit conversion (K20)") {
     val wide = translate(tree, Seq(
       MappingRule("/entry1/instrument/configuration", "configuration", "f64"),

@@ -121,67 +121,9 @@ object PlanDump {
       sb.append(finalPlan.trim)
       sb.append("\n```\n")
     }
-    // d04's ENGAGED salted plan (VERDICT r19 #2): the contingency plan a
-    // skewed corpus actually runs is invisible at bench defaults (salt
-    // conf off; empty hot sets short-circuit to plain), so dump it under
-    // the conf — sampleInv=1/hotMin=1 makes detection exact and routes
-    // the hot branch on testdata, the PlanSpec recipe. INSET literal
-    // lists are elided for readability; the audit points are the single
-    // REPARTITION_BY_COL exchange + its ReusedExchange consumer and the
-    // codegen'd pushdown_barrier filter above it (no CollectMetrics).
-    sb.append("\n# Appendix: d04 engaged-salt executed plan\n\n")
-    sb.append("`spark.graft.d04.salt=8, hotMin=1, sampleInv=1` at sf0.001\n")
-    sb.append("(exact detection, hot branch engaged). The a-side salt\n")
-    sb.append("filter is a codegen'd pushdown_barrier above the ONE shared\n")
-    sb.append("salt exchange both join sides read.\n")
-    spark.conf.set("spark.graft.d04.salt", "8")
-    spark.conf.set("spark.graft.d04.salt.hotMin", "1")
-    spark.conf.set("spark.graft.d04.salt.sampleInv", "1")
-    try {
-      val df = SparkEntry.queries("d04")(spark, sf)
-      df.collect()
-      val ep = df.queryExecution.executedPlan.toString
-        .replaceAll("IN \\([^)]{40,}\\)", "IN (..elided..)")
-        .replaceAll("INSET [-0-9, ]{40,}", "INSET ..elided.. ")
-      val finalPlan = ep.split("== Initial Plan ==")(0)
-      val reuses = "ReusedExchange".r.findAllIn(finalPlan).size
-      val barriers = "pushdown_barrier".r.findAllIn(finalPlan).size
-      sb.append(s"\n## d04 salted executed — $reuses ReusedExchange node(s), " +
-        s"$barriers pushdown_barrier filter(s), " +
-        s"CollectMetrics: ${finalPlan.contains("CollectMetrics")}\n\n```\n")
-      sb.append(finalPlan.trim)
-      sb.append("\n```\n")
-    } finally {
-      spark.conf.unset("spark.graft.d04.salt")
-      spark.conf.unset("spark.graft.d04.salt.hotMin")
-      spark.conf.unset("spark.graft.d04.salt.sampleInv")
-    }
-    // s08's MULTI-TABLE plan (round 20): like d04's salted plan, the
-    // recall-escape geometry a consumer actually enables is invisible at
-    // bench defaults (tables=1). The audit points: one WindowGroupLimit
-    // Partial per table BELOW the union (the per-table top-k prune — the
-    // no-prune union-then-distinct shape exhausted probe spill space),
-    // then the dedup aggregate and the final re-rank.
-    sb.append("\n# Appendix: s08 multi-table executed plan\n\n")
-    sb.append("`spark.graft.s08.tables=4` at sf0.001 (auto bits). Each\n")
-    sb.append("table runs the single-table plan — WindowGroupLimit pruning\n")
-    sb.append("to top-k map-side — and only <= T*k*n pruned rows reach the\n")
-    sb.append("union/dedup/final re-rank.\n")
-    spark.conf.set("spark.graft.s08.tables", "4")
-    try {
-      val df = SparkEntry.queries("s08")(spark, sf)
-      df.collect()
-      val ep = df.queryExecution.executedPlan.toString
-      val finalPlan = ep.split("== Initial Plan ==")(0)
-      val prunes = "WindowGroupLimit.*Partial".r.findAllIn(finalPlan).size
-      sb.append(s"\n## s08 tables=4 executed — $prunes partial " +
-        s"WindowGroupLimit prune(s)\n\n```\n")
-      sb.append(finalPlan.trim)
-      sb.append("\n```\n")
-    } finally spark.conf.unset("spark.graft.s08.tables")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${headline.size} plans + " +
-      s"${reuseHeadliners.size} executed + d04 salted + s08 tables)")
+      s"${reuseHeadliners.size} executed)")
     spark.stop()
   }
 }

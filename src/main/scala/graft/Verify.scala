@@ -18,19 +18,6 @@ object Verify {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // The oracle contract is defaults-only: the committed SQL hardcodes the
-    // default sketch geometries (x04.k=64 / x07.m=4096 / x08.rows=16), so a
-    // knob left set in the session would produce spurious cross-engine
-    // failures here. Unset (loudly) rather than fail — ADVICE r20.
-    Seq("spark.graft.x04.k", "spark.graft.x07.m", "spark.graft.x08.rows")
-      .foreach { k =>
-        if (spark.conf.getOption(k).isDefined) {
-          System.err.println(
-            s"[verify] unsetting non-default $k=${spark.conf.get(k)} — " +
-              "the oracle compares defaults-only geometries")
-          spark.conf.unset(k)
-        }
-      }
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

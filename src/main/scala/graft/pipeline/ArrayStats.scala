@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Element-wise statistics across a group of equally-sized float arrays —
@@ -87,8 +87,4 @@ object ArrayStats {
     override def bufferEncoder: Encoder[Buf] = Encoders.product[Buf]
     override def outputEncoder: Encoder[Result] = Encoders.product[Result]
   }
-
-  /** Typed column for `Dataset.agg` / `RelationalGroupedDataset.agg`. */
-  def stack: TypedColumn[Array[Float], Result] =
-    new ArrayStatsAggregator().toColumn
 }

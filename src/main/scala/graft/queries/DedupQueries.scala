@@ -25,20 +25,15 @@ object DedupQueries {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  /** Occupancy-constant d11 LSH geometry for a corpus past the default-
-    * geometry guard: bits ≈ log2(n / targetBucketRows) with a 4-row
-    * bucket target, never below the default, capped at 64/tables dims
-    * (the embedding is 64-dimensional and tables use disjoint slices).
-    * 200k rows with 4 tables → 16 bits (~3 rows/bucket); candidate-join
-    * work stays Σ m²/2 ≈ linear in n instead of the ~300M pairs the
-    * 8-bit default produced in the 100x probe.
-    */
-  def d11AutoBits(n: Long, nTables: Int, defaultBits: Int): Int = {
-    val targetBucketRows = 4L
-    math.min(64 / nTables, math.max(defaultBits,
-      math.ceil(math.log(n.toDouble / targetBucketRows) /
-        math.log(2.0)).toInt))
-  }
+  /** Rows up to which d11 runs its default 4-table x 8-bit geometry
+    * verbatim — the pinned oracle's geometry at the test scales. */
+  val d11MaxDefaultRows = 100000L
+
+  /** d11's LSH geometry `(tables, bits)` for an `n`-row corpus: the
+    * 4 x 8 default up to [[d11MaxDefaultRows]], the occupancy-constant
+    * [[d11AutoGeometry]] past it. */
+  def d11Geometry(n: Long): (Int, Int) =
+    if (n <= d11MaxDefaultRows) (4, 8) else d11AutoGeometry(n, 4, 8)
 
   /** Full auto geometry `(tables, bits)` with TABLE-COUNT ESCALATION —
     * the third regime of the sizing law (VERDICT r17 #3, the d08 lesson
@@ -59,8 +54,7 @@ object DedupQueries {
     *     occupancy degrades gracefully, while a saturated geometry's
     *     occupancy (~15k docs/bucket at 10⁹ rows under the old 4×16
     *     cap) re-quadratizes the candidate join, which is fatal rather
-    *     than lossy. Recall-sensitive pipelines pin
-    *     spark.graft.d11.{tables,bits} explicitly.
+    *     than lossy.
     *
     * The dim budget is hard: 64-dim embeddings sliced disjointly mean
     * tables·bits ≤ 64 always; at Long-max rows needed = 61 still fits
@@ -331,223 +325,33 @@ object DedupQueries {
   /** d04's pair-count shape: co-shingle counts `(doc_a < doc_b, i)` from
     * the inverted-index self-join on the hashed shingle column `s`.
     *
-    * Default is the plain equi-join — on organic corpora salting measured
-    * 1.3–2× SLOWER (BENCH_NOTES "Retired probes"; the hot aggregation +
-    * replicated b-side cost real work the corpus never repays), so it
-    * must not be the shipped path.
-    * But a genuinely hot shingle (a boilerplate span shared
-    * by m documents) makes ONE join key emit m²/2 output rows on a
-    * single task — OUTPUT skew AQE cannot split, because its skew
-    * detection sizes INPUT partitions and the hot posting list is tiny
-    * (measured: +51% wall at a 1%-hot ×100 corpus, BENCH_NOTES
-    * "Round 17"). `spark.graft.d04.salt = N` (≥ 2; unset = off) is the
-    * productized escape: shingles whose posting list exceeds
-    * `spark.graft.d04.salt.hotMin` docs (default 1024) route through an
-    * EXACT salted join — the a-side assigned one of N salts by doc_id
-    * hash, the b-side replicated once per salt, so each (a,b,s) match
-    * survives in exactly one salt bucket and the m²/2 expansion spreads
-    * over N tasks; cold shingles keep salt 0 on both sides (one join,
-    * no hot/cold split).
-    *
-    * HOT DETECTION IS SAMPLED, NOT COUNTED: a corpus-scale
-    * `groupBy(s).count` just to find the hot keys costs more than the
-    * skew it guards against — measured at the ×100 1%-hot probe, the
-    * exact-count variant (checkpoint + full aggregation + semi/anti
-    * split) ran +55% OVER the plain path it was rescuing. Instead a
-    * deterministic 1/`sampleInv` DOCUMENT sample (xxhash64(doc_id),
-    * `spark.graft.d04.salt.sampleInv`, default 128; pushed below the
-    * shingle explode so sampled-out documents never explode) estimates
-    * posting-list sizes: a shingle held by m docs appears ~m/sampleInv
-    * times, hot = sampled count > max(1, hotMin/sampleInv). The max(1,_)
-    * floor means hotMin below sampleInv cannot make the threshold 0 —
-    * threshold 0 salts EVERY shingle the sample sees once (~1/sampleInv
-    * of the corpus) and replicates the b-side N× for each, a perf
-    * surprise with no detection benefit (a 1-doc sample estimates
-    * m ≈ sampleInv, not "hot"); the effective detection floor is
-    * therefore m ≈ 2·sampleInv docs, logged when hotMin asks for less.
-    * Set sampleInv = 1 for EXACT detection on small corpora (tests).
-    * Detection picks the PLAN as well as the routing: an EMPTY hot set
-    * short-circuits to the plain self-join, so on an organic corpus a
-    * standing `spark.graft.d04.salt` conf costs only the detection job
-    * (measured +42% for the salt plan machinery vs ~the detection job
-    * alone at the ×100 organic corpus, bench/r19/d04_detect100.log) —
-    * the escape engages exactly when a hot key exists. Output is exact
-    * regardless of which keys salt, so sampling noise near the threshold
-    * costs load balance on boundary keys (whose m²/2 is small by
-    * definition), never correctness; a genuinely hot key at the ×1000
-    * scale (m = 50k → ~390 sampled hits vs threshold 8) is detected
-    * with certainty.
-    *
-    * The detection scan's COST is the reason `sampleSh` exists: the
-    * in-plan sample (`sh` filtered by doc_id hash) prunes the explode
-    * but not the SCAN — a hash predicate cannot push into parquet, so
-    * detection decodes every text byte to keep 1/128 of documents, and
-    * at 100 TB that lone scan is a full-corpus read. A caller that has
-    * a persisted 1/sampleInv extract of the corpus
-    * ([[graft.sources.SampleExtract]], one linear pass at ingest,
-    * corpus/sampleInv bytes on disk) passes its shingle frame as
-    * `sampleSh` and detection reads sampleInv× fewer bytes; the extract
-    * is re-filtered by the same hash predicate on read, so a stale or
-    * coarser extract can only UNDER-sample (weaker detection, exact
-    * output) — never mis-route beyond what sampling noise already may.
-    *
-    * The a-side filter that picks one salt per row must stay ABOVE the
-    * exchange both join sides share (pushed below it, reuse dies); it is
-    * wrapped in [[graft.functions.PushdownBarrierF]], which keeps it
-    * there and inside whole-stage codegen.
+    * One plan: the plain equi-join, whose identical sides share one
+    * exchange. A genuinely hot shingle (a boilerplate span shared by m
+    * documents) makes ONE join key emit m²/2 output rows on a single
+    * task — output skew AQE cannot split (measured: +51% wall at a
+    * 1%-hot ×100 corpus, BENCH_NOTES "Round 17"); on organic corpora a
+    * salted join measured 1.3–2× SLOWER (BENCH_NOTES "Retired probes").
     *
     * CONTRACT: `sh` carries `(doc_id, s, c)` with `c` the document's
     * distinct-shingle count (constant per doc); the output is always
     * `(doc_a, doc_b, i, ca, cb)` — `i` the co-shingle count, `ca`/`cb`
     * each side's `c`. */
-  private[graft] def coShinglePairs(s: SparkSession, sh: DataFrame,
-      sampleSh: Option[DataFrame] = None): DataFrame = {
+  private[graft] def coShinglePairs(sh: DataFrame): DataFrame = {
     require(sh.columns.contains("c"),
       "coShinglePairs needs the per-doc shingle count column `c` on the " +
         s"shingle frame (got columns ${sh.columns.mkString(", ")})")
-    def intConf(key: String): Option[Int] =
-      s.conf.getOption(key).map { v =>
-        try v.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"$key must be an integer: got '$v'")
-        }
-      }
     // Round 22: the per-doc count `c` is aggregated through (max
     // re-reads the constant-per-doc value) so the caller gets ca/cb
     // WITHOUT a separate count pass — d04's old shape paid a second full
     // corpus scan + signature kernel just to rebuild the counts, then two
     // joins to attach them. The carry costs 8 bytes per exploded row on
     // the exchange both join sides already share.
-    def pairAgg(grouped: org.apache.spark.sql.RelationalGroupedDataset) =
-      grouped.agg(count(lit(1)).as("i"),
-        max(col("a.c")).as("ca"), max(col("b.c")).as("cb"))
-    val plain = pairAgg(sh.as("a").join(sh.as("b"),
+    sh.as("a").join(sh.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
-    intConf("spark.graft.d04.salt") match {
-      case None => plain
-      case Some(nSalts) =>
-        require(nSalts >= 2,
-          s"spark.graft.d04.salt must be >= 2 salt buckets (got $nSalts); " +
-            "unset the conf to disable salting")
-        val hotMin = intConf("spark.graft.d04.salt.hotMin").getOrElse(1024)
-        require(hotMin >= 1,
-          s"spark.graft.d04.salt.hotMin must be >= 1 (got $hotMin)")
-        val sampleInv =
-          intConf("spark.graft.d04.salt.sampleInv").getOrElse(128)
-        require(sampleInv >= 1,
-          s"spark.graft.d04.salt.sampleInv must be >= 1 (got $sampleInv)")
-        // threshold floor: hotMin below the sample rate cannot resolve —
-        // a single sampled hit estimates m ≈ sampleInv, so the smallest
-        // meaningful verdict is "seen twice" (see the scaladoc)
-        val threshold = math.max(1, hotMin / sampleInv)
-        if (hotMin < sampleInv && sampleInv > 1)
-          log.warn(s"spark.graft.d04.salt.hotMin=$hotMin is below the " +
-            s"1/$sampleInv sample rate: detection cannot estimate posting " +
-            s"lists that small, so the effective hot floor is " +
-            s"~${2 * sampleInv} docs (threshold $threshold sampled hits); " +
-            "lower spark.graft.d04.salt.sampleInv for finer detection")
-        // 1/sampleInv deterministic doc sample, COLLECTED to driver
-        // literals at build time (the d11 build-time-count precedent; the
-        // tiny job runs only when the salt conf is ON — the default path
-        // stays job-free for explain). In-plan, the doc_id-only predicate
-        // is pushed below the Generate so sampled-out documents never
-        // explode; with a SampleExtract-backed `sampleSh` the scan itself
-        // shrinks sampleInv×. Literals instead of a broadcast-joined hot
-        // frame because the join sides must stay CANONICALLY IDENTICAL
-        // (below): a __hot column survives pruning only on the side whose
-        // filter needs it, and that asymmetry alone kills exchange reuse.
-        val detect = sampleSh.getOrElse(sh.filter(
-          pmod(xxhash64(col("doc_id")), lit(sampleInv)) === 0))
-        val hot = d04HotKeys(detect, threshold)
-        val hotKeys: Array[Any] = hot.map(_._1)
-        // replication estimate from the detection sample itself — the
-        // tuning signal an operator watches when adjusting hotMin
-        // ((nSalts-1) extra b-side copies per hot-key posting row), known
-        // at BUILD time with no runtime metric needed
-        val estExtra = (nSalts - 1).toLong * hot.map(_._2).sum * sampleInv
-        log.info(s"d04 salt: ${hotKeys.length} hot shingles detected " +
-          s"(1/$sampleInv doc sample, > $threshold sampled hits ≈ " +
-          s"m > ${threshold.toLong * sampleInv} docs); estimated " +
-          s"~$estExtra extra salt-replicated rows")
-        require(hotKeys.length <= 100000,
-          s"d04 salt: ${hotKeys.length} hot shingles exceed the 100k " +
-            "driver-literal cap — raise spark.graft.d04.salt.hotMin " +
-            s"(currently $hotMin)")
-        // NO HOT KEYS → PLAIN PLAN. The salt machinery (1-element explode
-        // per shingle row, the (s, __salt) exchange, the r18 observe
-        // barrier + post-exchange filter) measured +42% over plain at the
-        // ×100 organic corpus even with an EMPTY hot set (bench/r19/
-        // d04_detect100.log — the r18 note attributing that overhead to
-        // the detection scan was wrong; detection is seconds). Detection
-        // deciding the PLAN, not just the routing, turns the conf into a
-        // cheap standing guard: organic corpora pay only the detection
-        // job (extract-prunable), skewed corpora get the escape.
-        if (hotKeys.isEmpty) return plain
-        val isHot = col("s").isin(hotKeys.toSeq: _*)
-        // ONE salt-exploded frame serves both join sides so the
-        // scan+explode+shuffle runs ONCE (AQE stage reuse) — distinct
-        // a/b subtrees measured +41% on an organic corpus because each
-        // side re-ran the whole upstream, where the plain self-join's
-        // identical sides share one exchange. x carries every b-side
-        // row (hot rows replicated per salt, cold rows once at salt 0);
-        // the explicit not-null filters pre-empt the join's inferred
-        // constraints so neither side grows filters the other lacks,
-        // and the explicit repartition pins the exchange both sides
-        // reuse (its (s, __salt) keys satisfy the join's clustering, so
-        // no further exchange is planned).
-        val x = sh
-          .filter(col("s").isNotNull && col("doc_id").isNotNull)
-          .withColumn("__salt", explode(when(isHot,
-            sequence(lit(0), lit(nSalts - 1))).otherwise(array(lit(0)))))
-          .repartition(col("s"), col("__salt"))
-        // the a-side keeps exactly one salt per hot row (its doc's own)
-        // and every cold row — the same rows a separate a-subtree would
-        // produce, at half the upstream cost. The filter must stay ABOVE
-        // the shared exchange: predicate pushdown walks through
-        // Project/Repartition, and pushed below it the a/b exchange
-        // subtrees differ and reuse cannot fire. The barrier is
-        // Filter(pushdown_barrier(cond)) — the nondeterministic-flag
-        // wrapper PushPredicateThroughNonJoin won't move, codegen'd in
-        // place, so the whole exchange→filter→join span stays ONE
-        // WholeStageCodegen. Against it (BENCH_NOTES "Round 20"): the r18
-        // CollectMetrics barrier breaks codegen at the boundary, and no
-        // barrier lets the filter sink so both sides rebuild the
-        // upstream (+41% in r18).
-        val saltCond = col("__salt") === when(isHot,
-          pmod(hash(col("doc_id")), lit(nSalts))).otherwise(lit(0))
-        val a =
-          x.filter(graft.functions.PushdownBarrierF.pushdownBarrier(saltCond))
-        pairAgg(a.as("a").join(x.as("b"),
-            col("a.s") === col("b.s") && col("a.__salt") === col("b.__salt") &&
-              col("a.doc_id") < col("b.doc_id"))
-          .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b")))
-    }
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("i"),
+        max(col("a.c")).as("ca"), max(col("b.c")).as("cb"))
   }
-
-  /** Hot-shingle keys from a detection frame, with their SAMPLED
-    * posting-list counts: shingles whose sampled count exceeds
-    * `threshold`, sorted driver-side (by the key's string form — the
-    * keys are opaque literals, only ORDER determinism matters for plan
-    * stability). Split out of [[coShinglePairs]] so detection parity
-    * (in-plan sample vs SampleExtract-backed sample) is directly
-    * assertable in tests. Key type follows the `s` column — Long on the
-    * shipped d04 path (md5Hash60), String for test frames that skip
-    * the hash. The counts feed the build-time replication-estimate log.
-    *
-    * The `limit(100001)` caps what the driver MATERIALIZES: the caller's
-    * 100k-literal `require` used to fire only after an unbounded
-    * `collect()`, so a pathological detection frame could exhaust driver
-    * memory before the friendly error (ADVICE r19). One row past the cap
-    * is enough to trip the require; which excess rows survive the limit
-    * is irrelevant because > 100k is always fatal. */
-  private[graft] def d04HotKeys(detect: DataFrame,
-                                threshold: Int): Array[(Any, Long)] =
-    detect.groupBy("s").agg(count(lit(1)).as("msamp"))
-      .filter(col("msamp") > lit(threshold))
-      .limit(100001)
-      .collect().map(r => (r.get(0), r.getLong(1)))
-      .sortBy(p => String.valueOf(p._1))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -737,22 +541,15 @@ object DedupQueries {
       // sf0.1 (BENCH_NOTES "Retired probes"). Wrapped nondeterministic,
       // the array materializes once per row in its own Project and every
       // consumer reads the attribute; exchange reuse across the self-join
-      // sides still fires (structural canonical equality, same precedent as
-      // the salt filter below).
-      def shingleize(docs: DataFrame): DataFrame = docs
+      // sides still fires (structural canonical equality).
+      val sh = Tables.loadSpread(s, dir, "documents")
         .select(col("doc_id"),
           graft.functions.PushdownBarrierF.pushdownBarrier(
             array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
         .select(col("doc_id"), size(col("sarr")).as("c"),
           explode(col("sarr")).as("sraw"))
         .select(col("doc_id"), col("c"), TextFns.md5Hash60(col("sraw")).as("s"))
-      val sh = shingleize(Tables.loadSpread(s, dir, "documents"))
-      // salted hot detection reads the persisted 1/sampleInv extract when
-      // spark.graft.d04.salt.sampleDir points at one — same shingleize as
-      // the corpus frame, so sampled keys are identical by construction
-      val inter = coShinglePairs(s, sh,
-        graft.sources.SampleExtract.detectionDocs(s).map(shingleize))
-      inter
+      coShinglePairs(sh)
         .withColumn("jaccard", col("i").cast("double") / (col("ca") + col("cb") - col("i")))
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"), (floor(col("jaccard") * 10000) / 10000).as("jaccard"))
@@ -907,102 +704,43 @@ object DedupQueries {
     // the verify join, and the per-table bucket histogram is one cheap
     // aggregation away when a real corpus needs monitoring.
     //
-    // SCALE KNOB: per-bucket occupancy is n / 2^bits per table, and the
+    // SCALE LAW: per-bucket occupancy is n / 2^bits per table, and the
     // candidate join does Σ m²/2 per bucket — so bits must grow with the
     // corpus (occupancy-constant: bits ≈ log2(n / targetBucketRows)).
     // The 8-bit default matches the pinned oracle at the test scales;
     // at 200k vectors (the 100x probe) 8 bits means ~780 rows/bucket →
     // ~300M candidate pairs, while 16 bits (4 tables x 16 = all 64 dims)
     // keeps the join linear-ish. Wider buckets trade recall exactly as
-    // more MinHash rows-per-band do in d02 — that's the knob's contract,
-    // not a correctness knife-edge. spark.graft.d11.{tables,bits} conf.
+    // more MinHash rows-per-band do in d02 — that's the geometry's contract,
+    // not a correctness knife-edge.
     "d11" -> { (s, dir) =>
-      def knob(conf: String, dflt: Int): Int =
-        s.conf.getOption(conf).map { v =>
-          try v.trim.toInt catch {
-            case _: NumberFormatException => throw new IllegalArgumentException(
-              s"$conf must be an integer: got '$v'")
-          }
-        }.getOrElse(dflt)
-      val explicitBits = s.conf.getOption("spark.graft.d11.bits")
-      val explicitTables = s.conf.getOption("spark.graft.d11.tables")
-      val nTables = knob("spark.graft.d11.tables", 4)
-      val defaultBits = knob("spark.graft.d11.bits", 8)
-      // zero/negative geometries fail silently-wrong, not loudly: tables=0
-      // returns an empty result ("no duplicates"), bits=0 puts every vector
-      // in one global bucket (the n^2/2 product this operator exists to
-      // avoid) — range-check both, like d12's logBits
-      require(nTables >= 1 && defaultBits >= 1 && nTables * defaultBits <= 64,
-        s"d11 needs 1 <= tables, 1 <= bits, tables*bits <= embedding dim (64): " +
-          s"got $nTables x $defaultBits")
       val e = Tables.loadSpread(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // the 8-bit default is a TEST-SCALE geometry: at 200k rows it means
       // ~780 rows/bucket -> ~300M candidate pairs, whose distinct()
-      // shuffle ran a 77 GB disk out in the 100x probe. Past the
-      // maxDefaultRows threshold the geometry AUTO-SIZES instead of
-      // refusing (the r10 guard's production ergonomic): occupancy-
-      // constant bits = ceil(log2(n / targetBucketRows)) with
-      // targetBucketRows = 4, capped at 64/tables dims — at 200k rows
-      // that picks 16 bits per table. The same column-less O(footers)
-      // count the guard already paid funds the sizing. Below the
-      // threshold the default geometry is used VERBATIM (the pinned
-      // oracle's geometry at the test scales); an explicitly-set bits
-      // value expresses intent, skips the scan, and always wins.
+      // shuffle ran a 77 GB disk out in the 100x probe. Past
+      // d11MaxDefaultRows the geometry AUTO-SIZES ([[d11Geometry]]):
+      // occupancy-constant bits = ceil(log2(n / targetBucketRows)) with
+      // targetBucketRows = 4 — at 200k rows that picks 16 bits per
+      // table. Below the threshold the default geometry is used VERBATIM
+      // (the pinned oracle's geometry at the test scales).
       // CAVEAT the auto-size makes duplicate-pair RECALL discontinuous in
-      // corpus size: crossing maxDefaultRows changes the geometry and
+      // corpus size: crossing the threshold changes the geometry and
       // therefore which near-pairs collide, between two otherwise-
       // identical runs — and past saturation (needed·tables > 64) the
       // auto law also ESCALATES the table count down ([[d11AutoGeometry]]
       // regime 3), trading recall for a candidate join that stays
-      // occupancy-constant. Pipelines that pin results set
-      // spark.graft.d11.strict=true to get the r10 refusal back (loud
-      // error instead of a silent re-geometry), or pin
-      // spark.graft.d11.{tables,bits} explicitly — an explicit tables
-      // value is respected (auto then only grows bits up to its dim
-      // budget, the d11AutoBits law).
-      val (tables, bits) =
-        if (explicitBits.nonEmpty) (nTables, defaultBits)
-        else {
-          val maxDefaultRows = s.conf.getOption("spark.graft.d11.maxDefaultRows")
-            .map { v =>
-              try v.trim.toLong catch {
-                case _: NumberFormatException => throw new IllegalArgumentException(
-                  s"spark.graft.d11.maxDefaultRows must be an integer: got '$v'")
-              }
-            }.getOrElse(100000L)
-          if (maxDefaultRows <= 0) (nTables, defaultBits)
-          else {
-            // count the RAW load, not the loadSpread frame: counting after
-            // the spread repartition would pay its exchange just to count
-            val n = Tables.load(s, dir, "embeddings").count()
-            if (n <= maxDefaultRows) (nTables, defaultBits)
-            else if (s.conf.getOption("spark.graft.d11.strict")
-                .exists(_.trim.equalsIgnoreCase("true"))) {
-              val (at, ab) = d11AutoGeometry(n, nTables, defaultBits)
-              throw new IllegalArgumentException(
-                s"d11: $n embedding rows exceed the $maxDefaultRows guard " +
-                  s"and strict mode is on — the default $nTables x " +
-                  s"$defaultBits geometry would be re-sized, changing " +
-                  "candidate recall. Pin spark.graft.d11.bits explicitly " +
-                  s"(auto would pick $at tables x $ab bits) or unset " +
-                  "spark.graft.d11.strict to accept auto-sizing.")
-            } else {
-              val (at, ab) =
-                if (explicitTables.nonEmpty) (nTables, d11AutoBits(n, nTables, defaultBits))
-                else d11AutoGeometry(n, nTables, defaultBits)
-              // through the logger, not stderr: production log pipelines
-              // index logger events; a bare println is invisible there
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"d11 auto-sized LSH geometry: $n rows > $maxDefaultRows " +
-                  s"guard, using $at tables x $ab bits " +
-                  s"(~${n / (1L << ab)} rows/bucket; " +
-                  "override with spark.graft.d11.{tables,bits}, or " +
-                  "spark.graft.d11.strict=true to refuse instead)")
-              (at, ab)
-            }
-          }
-        }
+      // occupancy-constant.
+      // count the RAW load, not the loadSpread frame: counting after the
+      // spread repartition would pay its exchange just to count
+      val n = Tables.load(s, dir, "embeddings").count()
+      val (tables, bits) = d11Geometry(n)
+      // through the logger, not stderr: production log pipelines index
+      // logger events; a bare println is invisible there
+      if (n > d11MaxDefaultRows)
+        log.warn(s"d11 auto-sized LSH geometry: $n rows > " +
+          s"$d11MaxDefaultRows guard, using $tables tables x $bits bits " +
+          s"(~${n / (1L << bits)} rows/bucket)")
       val tabbed = e.select(col("vec_id"),
         explode(array((0 until tables).map { t =>
           struct(lit(t).as("tbl"),
@@ -1024,7 +762,7 @@ object DedupQueries {
 
     // Bloom-prefiltered decontamination — d09's contract and EXACT output,
     // but the corpus side never shuffles wholesale: a Bloom filter built
-    // over the eval-set shingles (k=3 hashes into a 2^logBits position
+    // over the eval-set shingles (k=3 hashes into a 2^18 position
     // space) is probed MAP-SIDE by three broadcast left-semi joins, so
     // only bloom-hit shingles reach the exact confirm join. Blooms have no
     // false negatives (every bench-shingle position is in the set), so
@@ -1049,17 +787,14 @@ object DedupQueries {
     // measures ~par with d09 — see BENCH_NOTES.
     //
     // The bloom is kept as a distinct-position table (≤ min(k·|bench|,
-    // 2^logBits) longs) instead of a packed-word bitmap: the membership
+    // 2^18) longs) instead of a packed-word bitmap: the membership
     // test stays a pure broadcast EQUI-join the optimizer fully
     // understands, and the broadcast is hard-capped by construction at
-    // 2^logBits rows (2 MiB at the default 18) — which is also why the
+    // 2^18 rows (2 MiB) — which is also why the
     // explicit broadcast() hint on a fact-derived frame is safe here
-    // when it isn't in d02. spark.graft.d12.logBits tunes capacity.
+    // when it isn't in d02.
     "d12" -> { (s, dir) =>
-      val logBits = s.conf.getOption("spark.graft.d12.logBits").map(_.toInt).getOrElse(18)
-      require(logBits >= 8 && logBits <= 30,
-        s"spark.graft.d12.logBits must be in [8, 30]: got $logBits")
-      val m = 1L << logBits
+      val m = 1L << 18
       val nHash = 3
       def pos(j: Int, shingle: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         pmod(xxhash64(lit(j), shingle), lit(m))
@@ -1256,10 +991,9 @@ object DedupQueries {
       val e = Tables.loadSpread(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding"))
       // same column-less O(footers) count d05's guard and d11's
-      // auto-size pay; an explicit k expresses intent and skips the scan
-      val k = s.conf.getOption("spark.graft.d16.k").map(_.toLong)
-        .getOrElse(math.max(8L, math.sqrt(e.count().toDouble).toLong))
-      require(k >= 1 && k < (1L << 42), s"d16 needs 1 <= k < 2^42: got $k")
+      // auto-size pay; √(Long.MaxValue) < 2^32, so cid always fits the
+      // packed key's 42 low bits
+      val k = math.max(8L, math.sqrt(e.count().toDouble).toLong)
       val cents = e.filter(col("vec_id") < k)
         .select(col("vec_id").as("cid"), col("embedding").as("cv"))
       val microDist = round((lit(1d) -

@@ -38,6 +38,72 @@ object SamplingQueries {
       * 10000).cast("long")
   }
 
+  /** w04's token-budget packing: per source, docs in doc_id order fill
+    * 2048-token packs, `(doc_id, source, n_tokens, pack_id, pack_offset)`.
+    *
+    * TWO-PHASE PREFIX SUM (the r10 scale fix): a single
+    * Window.partitionBy(source) caps parallelism at the number of
+    * sources — at 100 TB with a handful of corpora, ONE task would sort
+    * and prefix-sum terabytes. Instead, the running total is computed
+    * the way AsOfJoin.backwardBucketed bounds its windows: chunk each
+    * source by a coarse doc_id range (chunk = doc_id div span, monotone
+    * in doc_id so chunk order == doc order), (1) window WITHIN
+    * (source, chunk) for the local running total, (2) aggregate
+    * per-(source, chunk) token sums into a tiny spine and cumulate
+    * EXCLUSIVE chunk offsets over it, (3) join the offsets back on
+    * (source, chunk) — the same key the window already hash-partitioned
+    * by, and a frame small enough that AQE turns the join into a
+    * broadcast at runtime. cum = chunk_offset + local_cum is
+    * bit-identical to the single-window formulation for every span ≥ 1
+    * (the oracle is unchanged), but the heavy window now runs with
+    * #sources × #chunks-way parallelism. */
+  private[graft] def w04Packs(s: SparkSession, dir: String, span: Long): DataFrame = {
+    // span 0 would make `doc_id div span` NULL (rows silently vanish
+    // through the equi-join); a negative span reverses chunk
+    // monotonicity (silently wrong placement) — loud beats either
+    require(span >= 1, s"w04 chunk span must be >= 1: got $span")
+    val budget = 2048
+    import org.apache.spark.sql.expressions.Window
+    val base = Tables.load(s, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
+    val chunked = base.withColumn("chunk", expr(s"doc_id div $span"))
+    val wLocal = Window.partitionBy(col("source"), col("chunk"))
+      .orderBy(col("doc_id"))
+    val local = chunked
+      .withColumn("local_cum", sum(col("n_tokens")).over(wLocal))
+    // spine: one row per (source, chunk); EXCLUSIVE running offset so
+    // chunk 0 starts at 0. The spine aggregates `chunked` directly, so
+    // the corpus is scanned+tokenized TWICE (once per branch) — a
+    // measured, accepted trade: the spine's partial agg collapses
+    // map-side to <= #(source, chunk) rows per task (a near-free
+    // shuffle), and the attempted single-tokenize alternative (derive
+    // chunk totals as max(local_cum) from the windowed frame so both
+    // branches share one Exchange(source, chunk)) does NOT get
+    // exchange/stage reuse in practice — the inner join pushes
+    // asymmetric isnotnull constraints into the two subtrees, their
+    // canonical forms diverge, AQE materialized both stages separately
+    // (probe-verified: reusedExchange=0 on the final adaptive plan) —
+    // leaving that shape strictly worse: still two scans PLUS a second
+    // full corpus sort+window.
+    val wSpine = Window.partitionBy(col("source")).orderBy(col("chunk"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = chunked.groupBy(col("source"), col("chunk"))
+      .agg(sum(col("n_tokens")).as("chunk_tokens"))
+      .withColumn("chunk_offset",
+        coalesce(sum(col("chunk_tokens")).over(wSpine), lit(0L)))
+      .select(col("source"), col("chunk"), col("chunk_offset"))
+    local.join(offsets, Seq("source", "chunk"))
+      .withColumn("cum", col("chunk_offset") + col("local_cum"))
+      // `div`, not floor(/): long division stays exact past 2^53 tokens
+      // per shard, and is the same operator as the oracle's `//`
+      .withColumn("pack_id", expr(s"(cum - n_tokens) div $budget"))
+      .withColumn("pack_offset",
+        col("cum") - col("n_tokens") - col("pack_id") * budget)
+      .select(col("doc_id"), col("source"), col("n_tokens"),
+        col("pack_id"), col("pack_offset"))
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Flat 5% deterministic sample by id hash.
@@ -87,85 +153,18 @@ object SamplingQueries {
     // document identically, the same resumability contract as the hash
     // sampling above.
     //
-    // TWO-PHASE PREFIX SUM (the r10 scale fix): a single
-    // Window.partitionBy(source) caps parallelism at the number of
-    // sources — at 100 TB with a handful of corpora, ONE task would sort
-    // and prefix-sum terabytes. Instead, the running total is computed
-    // the way AsOfJoin.backwardBucketed bounds its windows: chunk each
-    // source by a coarse doc_id range (chunk = doc_id div span, monotone
-    // in doc_id so chunk order == doc order), (1) window WITHIN
-    // (source, chunk) for the local running total, (2) aggregate
-    // per-(source, chunk) token sums into a tiny spine and cumulate
-    // EXCLUSIVE chunk offsets over it, (3) join the offsets back on
-    // (source, chunk) — the same key the window already hash-partitioned
-    // by, and a frame small enough that AQE turns the join into a
-    // broadcast at runtime. cum = chunk_offset + local_cum is
-    // bit-identical to the single-window formulation (the oracle is
-    // unchanged), but the heavy window now runs with
-    // #sources × #chunks-way parallelism. The span auto-sizes from the
-    // doc_id range to target ~4 chunks per core (a 1-row min/max scalar
+    // the token-budget packing with its span auto-sized from the doc_id
+    // range to target ~4 chunks per core (a 1-row min/max scalar
     // prefetch off parquet stats — same justified pattern as q39's
-    // bounds); `spark.graft.w04.chunkSpan` overrides.
+    // bounds); the plan is [[w04Packs]].
     "w04" -> { (s, dir) =>
-      val budget = 2048
-      import org.apache.spark.sql.expressions.Window
-      val base = Tables.load(s, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          TextFns.tokenCount(col("text")).cast("long").as("n_tokens"))
-      val span = s.conf.getOption("spark.graft.w04.chunkSpan")
-        .map { v =>
-          val n = try v.trim.toLong catch {
-            case _: NumberFormatException => throw new IllegalArgumentException(
-              s"spark.graft.w04.chunkSpan must be an integer: got '$v'")
-          }
-          // span 0 would make `doc_id div span` NULL (rows silently vanish
-          // through the equi-join); a negative span reverses chunk
-          // monotonicity (silently wrong placement) — loud beats either
-          require(n >= 1, s"spark.graft.w04.chunkSpan must be >= 1: got $n")
-          n
-        }
-        .getOrElse {
-          val r = Tables.load(s, dir, "documents")
-            .agg(min(col("doc_id")), max(col("doc_id"))).head()
-          if (r.isNullAt(0)) 1L
-          else math.max(1L, (r.getLong(1) - r.getLong(0) + 1) /
-            (s.sparkContext.defaultParallelism.toLong * 4))
-        }
-      val chunked = base.withColumn("chunk", expr(s"doc_id div $span"))
-      val wLocal = Window.partitionBy(col("source"), col("chunk"))
-        .orderBy(col("doc_id"))
-      val local = chunked
-        .withColumn("local_cum", sum(col("n_tokens")).over(wLocal))
-      // spine: one row per (source, chunk); EXCLUSIVE running offset so
-      // chunk 0 starts at 0. The spine aggregates `chunked` directly, so
-      // the corpus is scanned+tokenized TWICE (once per branch) — a
-      // measured, accepted trade: the spine's partial agg collapses
-      // map-side to <= #(source, chunk) rows per task (a near-free
-      // shuffle), and the attempted single-tokenize alternative (derive
-      // chunk totals as max(local_cum) from the windowed frame so both
-      // branches share one Exchange(source, chunk)) does NOT get
-      // exchange/stage reuse in practice — the inner join pushes
-      // asymmetric isnotnull constraints into the two subtrees, their
-      // canonical forms diverge, AQE materialized both stages separately
-      // (probe-verified: reusedExchange=0 on the final adaptive plan) —
-      // leaving that shape strictly worse: still two scans PLUS a second
-      // full corpus sort+window.
-      val wSpine = Window.partitionBy(col("source")).orderBy(col("chunk"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = chunked.groupBy(col("source"), col("chunk"))
-        .agg(sum(col("n_tokens")).as("chunk_tokens"))
-        .withColumn("chunk_offset",
-          coalesce(sum(col("chunk_tokens")).over(wSpine), lit(0L)))
-        .select(col("source"), col("chunk"), col("chunk_offset"))
-      local.join(offsets, Seq("source", "chunk"))
-        .withColumn("cum", col("chunk_offset") + col("local_cum"))
-        // `div`, not floor(/): long division stays exact past 2^53 tokens
-        // per shard, and is the same operator as the oracle's `//`
-        .withColumn("pack_id", expr(s"(cum - n_tokens) div $budget"))
-        .withColumn("pack_offset",
-          col("cum") - col("n_tokens") - col("pack_id") * budget)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("pack_id"), col("pack_offset"))
+      val r = Tables.load(s, dir, "documents")
+        .agg(min(col("doc_id")), max(col("doc_id"))).head()
+      val span =
+        if (r.isNullAt(0)) 1L
+        else math.max(1L, (r.getLong(1) - r.getLong(0) + 1) /
+          (s.sparkContext.defaultParallelism.toLong * 4))
+      w04Packs(s, dir, span)
     },
 
     // Shard-export audit: the writer side of the pipeline. A 100 TB export

@@ -298,93 +298,29 @@ object SimilarityQueries {
     // with neighbor availability GROWING (√n bucket mates) instead of
     // starving. The formula is integer-exact on both engines (bit
     // length, not FP log2 — JVM log vs DuckDB log2 can differ in the
-    // last ulp at a power-of-two boundary); explicit conf wins.
+    // last ulp at a power-of-two boundary). One table: the r20 recall
+    // probe measured it harvesting ~1/3 of the >=0.9-cosine edges at the
+    // law's bits (every vector still gets its k edges; bucket density,
+    // not starvation, is the trade).
     "s08" -> { (s, dir) =>
       val k = 3
       val e = emb(s, dir)
-      val bits = s.conf.getOption("spark.graft.s08.bits").map(_.toInt)
-        .getOrElse {
-          val n = e.count() // column-less O(footers) count, the d11 pattern
-          math.max(lshBits,
-            (63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n))) / 2)
-        }
-      // `spark.graft.s08.tables = T` (default 1): OR-amplified multi-table
-      // geometry — d11's recall treatment, productized for the graph. The
-      // r20 recall probe measured the single-table graph harvesting ~1/3
-      // of the >=0.9-cosine edges at the law's bits (every vector still
-      // gets its k edges; bucket density, not starvation, is the trade);
-      // consumers needing near-complete NEIGHBOR recall collide in ANY of
-      // T disjoint dim slices instead. Candidate work scales ~T x at
-      // equal bits — a recall/cost knob, not a free lunch — and the dim
-      // budget is hard: T*bits <= 64 disjoint slice dims.
-      val tables = s.conf.getOption("spark.graft.s08.tables").map { v =>
-        val t = try v.trim.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"spark.graft.s08.tables must be an integer (got '$v')")
-        }
-        require(t >= 1, s"spark.graft.s08.tables must be >= 1 (got $t)")
-        require(t * bits <= 64,
-          s"spark.graft.s08.tables x bits must fit the 64-dim embedding's " +
-            s"disjoint slices ($t x $bits = ${t * bits} > 64); lower " +
-            "spark.graft.s08.bits or tables")
-        t
-      }.getOrElse(1)
+      val n = e.count() // column-less O(footers) count, the d11 pattern
+      val bits = math.max(lshBits,
+        (63 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n))) / 2)
       val w = Window.partitionBy(col("vec_id"))
         .orderBy(round(col("cs"), 6).desc, col("nbr"))
-      if (tables == 1) {
-        val eb = e
-          .withColumn("bucket", VectorFns.signBucket(col("embedding"), bits))
-        eb.as("x").join(eb.as("y"),
-            col("x.bucket") === col("y.bucket") &&
-              col("x.vec_id") =!= col("y.vec_id"))
-          .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
-            VectorFns.cosine(col("x.embedding"), col("y.embedding")).as("cs"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("vec_id"), col("nbr"), round(col("cs"), 4).as("cosine"),
-            col("rank"))
-      } else {
-        // Per-table top-k FIRST, then merge — EXACT, and the only shape
-        // that scales: a final top-k edge must be a within-table top-k
-        // edge of every table that produced it (any k mates outranking
-        // it in its own table are themselves union candidates and
-        // outrank it there too), so each table runs the single-table
-        // plan — payload through the bucket join because the top-k
-        // prune needs the cosine, WindowGroupLimit cutting MAP-SIDE
-        // before the vec_id exchange — and only <= T·k·n pruned rows
-        // reach the dedup + final re-rank. The obvious alternative
-        // (union all tables' candidates, distinct(), rank once)
-        // materializes Σ_t Σ_b n_b² raw candidate pairs through one
-        // exchange with no prune below it — measured running the ×100
-        // probe host out of spill space at the 9-bit x 2-table geometry
-        // before producing a row. d11 carries ids-only instead because
-        // it VERIFIES every candidate (threshold, no top-k): nothing
-        // there can prune below the join, so stripping payload is its
-        // only lever; s08's per-vector cut is the stronger one and it
-        // needs cs in place. Table t buckets on dims
-        // [t*bits, (t+1)*bits): table 0 IS the single-table geometry,
-        // so the final candidate set is a strict superset of tables=1.
-        // A pair co-bucketing in several tables arrives once per table
-        // with the same cs — max() collapses it before the final rank.
-        val perTable = (0 until tables).map { t =>
-          val eb = e.withColumn("bucket",
-            VectorFns.signBucketSlice(col("embedding"), t * bits, bits))
-          eb.as("x").join(eb.as("y"),
-              col("x.bucket") === col("y.bucket") &&
-                col("x.vec_id") =!= col("y.vec_id"))
-            .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
-              VectorFns.cosine(col("x.embedding"), col("y.embedding")).as("cs"))
-            .withColumn("rank", row_number().over(w))
-            .filter(col("rank") <= k)
-            .select(col("vec_id"), col("nbr"), col("cs"))
-        }
-        perTable.reduce(_.union(_))
-          .groupBy(col("vec_id"), col("nbr")).agg(max(col("cs")).as("cs"))
-          .withColumn("rank", row_number().over(w))
-          .filter(col("rank") <= k)
-          .select(col("vec_id"), col("nbr"), round(col("cs"), 4).as("cosine"),
-            col("rank"))
-      }
+      val eb = e
+        .withColumn("bucket", VectorFns.signBucket(col("embedding"), bits))
+      eb.as("x").join(eb.as("y"),
+          col("x.bucket") === col("y.bucket") &&
+            col("x.vec_id") =!= col("y.vec_id"))
+        .select(col("x.vec_id").as("vec_id"), col("y.vec_id").as("nbr"),
+          VectorFns.cosine(col("x.embedding"), col("y.embedding")).as("cs"))
+        .withColumn("rank", row_number().over(w))
+        .filter(col("rank") <= k)
+        .select(col("vec_id"), col("nbr"), round(col("cs"), 4).as("cosine"),
+          col("rank"))
     })
 
   val oracle: Map[String, String] = Map(

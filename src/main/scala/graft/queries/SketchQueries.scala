@@ -38,26 +38,14 @@ object SketchQueries {
                         tok: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     pmod(graft.functions.TextFns.md5Hash32Keyed(j, tok), lit(CmsWidth.toLong))
 
-  /** Sketch-geometry conf: validated integer with a floor, the d04
-    * intConf contract (key-named error, never a bare
-    * NumberFormatException or a silently-degenerate geometry). Defaults
-    * MATCH the committed oracle SQL — a non-default geometry is the
-    * user's scale escape (same contract as d11.bits / s08.tables: the
-    * driver's oracle runs defaults; the knob re-sizes the sketch when
-    * the corpus outgrows it, which the accuracy ladder in BENCH_NOTES
-    * measured — x07's 4096-bit bitmap saturates at ~31k distinct,
-    * x04's k=64 is a 12.7%-σ estimator, x08's R=16 a 35%-σ one). */
-  private def geomConf(s: SparkSession, key: String, dflt: Int,
-                       floor: Int): Int = {
-    val v = s.conf.getOption(key).map { raw =>
-      try raw.trim.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$key must be an integer: got '$raw'")
-      }
-    }.getOrElse(dflt)
-    require(v >= floor, s"$key must be >= $floor (got $v)")
-    v
-  }
+  /** Fixed sketch geometries, the same constants the committed oracle
+    * SQL hardcodes: x04/x05's bottom-k (a 12.7%-σ estimator), x07's
+    * bitmap size (saturates at ~31k distinct) and x08's sign-row count
+    * (a 35%-σ estimator) — the accuracy ladder in BENCH_NOTES measured
+    * all three. */
+  private val KmvK = 64
+  private val BitmapM = 4096
+  private val AmsRows = 16
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -199,11 +187,9 @@ object SketchQueries {
     // and the k-cut is a TakeOrderedAndProject — k rows out regardless
     // of corpus size. n_exact (the true distinct-hash count) rides along
     // as the reference column, same pattern as x03's exact_count.
-    // `spark.graft.x04.k` (default 64, σ ≈ 1/√(k−2) = 12.7%) re-sizes
-    // the sketch: k=1024 buys σ ≈ 3.1% for a 1024-row
-    // TakeOrderedAndProject, still corpus-size-independent.
+    // k = 64 gives σ ≈ 1/√(k−2) = 12.7%.
     "x04" -> { (s, dir) =>
-      val k = geomConf(s, "spark.graft.x04.k", 64, 2)
+      val k = KmvK
       val hashes = Tables.loadSpread(s, dir, "documents")
         .select(explode(graft.functions.TextFns.tokens(col("text"))).as("tok"))
         .select(graft.functions.TextFns.md5Hash32(col("tok")).as("h"))
@@ -237,10 +223,10 @@ object SketchQueries {
     // The exact intersection/union counts ride along as reference
     // columns, same pattern as x03/x04 — at true corpus scale one drops
     // the exact branch and keeps the sketch estimates.
-    // shares x04's `spark.graft.x04.k` knob — same bottom-k family, and
-    // a union of two sketches only composes at one common k
+    // shares x04's k — same bottom-k family, and a union of two sketches
+    // only composes at one common k
     "x05" -> { (s, dir) =>
-      val k = geomConf(s, "spark.graft.x04.k", 64, 2)
+      val k = KmvK
       val hashes = Tables.loadSpread(s, dir, "documents")
         .filter(col("source").isin("src0", "src1"))
         .select(col("source"),
@@ -310,13 +296,11 @@ object SketchQueries {
     // 100 TB shape: the shuffle carries distinct bucket ids (≤ m = 4096
     // rows out of any corpus); the saturation guard (empty = 0 → NULL)
     // takes the same guarded-CASE arm on both engines instead of ±inf.
-    // `spark.graft.x07.m` (default 4096) re-sizes the bitmap: the
-    // estimator is usable to n ≈ m·ln m (≈34k at default), a ceiling
-    // the accuracy ladder hit exactly at 31k distinct — a corpus whose
-    // groups run past it sets m larger (shuffle stays ≤ m rows) or
-    // switches to x01/x04, whose σ is size-independent.
+    // The estimator is usable to n ≈ m·ln m (≈34k at m = 4096), a
+    // ceiling the accuracy ladder hit exactly at 31k distinct — a corpus
+    // whose groups run past it uses x01/x04, whose σ is size-independent.
     "x07" -> { (s, dir) =>
-      val m = geomConf(s, "spark.graft.x07.m", 4096, 2)
+      val m = BitmapM
       // Round 21 (guide §2.4): ONE distinct-hash frame, ONE aggregate for
       // both outputs — pmod is deterministic, so the occupied-bucket set
       // of the distinct hashes IS the occupied-bucket set of the raw
@@ -354,11 +338,10 @@ object SketchQueries {
     // integer (md5 parity bit, long sums, div-16 mean; the relative
     // error alone rounds at the end), so the estimate is bit-identical
     // cross-engine.
-    // `spark.graft.x08.rows` (default 16, σ = √(2/R) = 35%) re-sizes the
-    // sign-row count: R=200 buys σ = 10%; the sketch shuffle stays R
+    // R = 16 sign rows give σ = √(2/R) = 35%; the sketch shuffle stays R
     // rows and the explode cost is R× the token stream, both linear.
     "x08" -> { (s, dir) =>
-      val rRows = geomConf(s, "spark.graft.x08.rows", 16, 1)
+      val rRows = AmsRows
       val toks = Tables.loadSpread(s, dir, "documents")
         .select(explode(graft.functions.TextFns.tokens(col("text"))).as("tok"))
       val sketch = toks

@@ -60,4 +60,25 @@ class ExtensionsSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("conf surface: the spark.graft.* keys in src/main/scala are exactly " +
+      "README's configuration table, and both are the three kept keys") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val literal = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)\"".r
+    val inCode = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap(f => literal.findAllMatchIn(Files.readString(f)).map(_.group(1)))
+      .toSet
+    val readme = Files.readString(Paths.get("README.md"))
+    val table = readme.linesIterator
+      .dropWhile(_ != "## Configuration reference").drop(1)
+      .takeWhile(!_.startsWith("## "))
+    val row = "^\\| `(spark\\.graft\\.[A-Za-z0-9_.]+)` \\|".r
+    val inReadme = table.flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    val kept = Set("spark.graft.checkpoint.dir", "spark.graft.d05.maxRows",
+      "spark.graft.cc.localMax")
+    assert(inCode == kept, s"conf literals in src/main/scala: $inCode")
+    assert(inReadme == kept, s"README configuration table keys: $inReadme")
+  }
 }

@@ -35,4 +35,16 @@ class ArrayStatsSpec extends AnyFunSuite {
     val r0 = agg.finish(agg.zero)
     assert(r0.n == 0 && r0.mean.isEmpty)
   }
+
+  test("ragged groups fail loudly: a shape mismatch throws in reduce and in merge") {
+    val e1 = intercept[IllegalArgumentException] {
+      agg.reduce(agg.reduce(agg.zero, Array.fill(16)(1f)), Array.fill(8)(1f))
+    }
+    assert(e1.getMessage.contains("share a shape"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      agg.merge(agg.reduce(agg.zero, Array.fill(16)(1f)),
+        agg.reduce(agg.zero, Array.fill(8)(1f)))
+    }
+    assert(e2.getMessage.contains("shape mismatch"), e2.getMessage)
+  }
 }

@@ -16,8 +16,8 @@ import graft.{Bench, SharedFrames, SparkEntry}
   *
   * The optional 4th argument is a `;`-separated list of ARMS, each a
   * `k=v,k=v` session-conf set (an empty arm is the defaults): e.g.
-  * `';spark.graft.d04.salt=8'` compares the default plan against the
-  * salted one. Arms run INTERLEAVED within each rep and the arm order
+  * `';spark.graft.cc.localMax=0'` compares the default connected-
+  * components plan against the distributed one. Arms run INTERLEAVED within each rep and the arm order
   * rotates every rep, so a drift in machine speed lands on every arm
   * alike (the r20 lesson: a fixed A-then-B order read contention as a
   * code effect). Before each arm the keys any arm sets are restored to

@@ -52,9 +52,9 @@ object SketchAccuracyProbe {
       .filter(_.nonEmpty)
       .map(_.split(",").map(_.trim).toSet)
       .getOrElse(Set("x01", "x03", "x04", "x05", "x07", "x08"))
-    // --set=spark.graft.x04.k=1024 — session confs, e.g. the geometry
-    // knobs the ladder's ceilings motivated (the '='-joined form only:
-    // a space-separated value would land in the dirs list, ADVICE r20)
+    // --set=spark.sql.shuffle.partitions=64 — session confs (the
+    // '='-joined form only: a space-separated value would land in the
+    // dirs list, ADVICE r20)
     val confs = flags.filter(_.startsWith("--set")).map { f =>
       val kv = f.stripPrefix("--set").stripPrefix("=").split("=", 2)
       require(kv.length == 2, s"--set needs key=value: got '$f'")
@@ -119,8 +119,7 @@ object SketchAccuracyProbe {
       if (only("x04")) q("x04", dir).collect().foreach { r =>
         val est = r.getAs[Long]("est_distinct")
         val ex = r.getAs[Long]("n_exact")
-        val k = spark.conf.getOption("spark.graft.x04.k")
-          .map(_.toInt).getOrElse(64)
+        val k = 64 // x04's fixed bottom-k
         println(f"  x04 kmv  k=$k%d est=$est%d exact=$ex%d " +
           f"err=${pct(est.toDouble, ex.toDouble)} " +
           f"(theory σ=${100.0 / math.sqrt(k - 2.0)}%.1f%%)")
@@ -132,8 +131,7 @@ object SketchAccuracyProbe {
         val xu = r.getAs[Long]("n_union_exact")
         val (je, jx) = (r.getAs[Double]("jaccard_est"),
           r.getAs[Double]("jaccard_exact"))
-        val k5 = spark.conf.getOption("spark.graft.x04.k")
-          .map(_.toInt).getOrElse(64)
+        val k5 = 64 // x04's bottom-k, shared by x05
         val sigma = math.sqrt(jx * (1 - jx) / k5)
         println(f"  x05 kmv∪ union est=$eu%d exact=$xu%d " +
           f"err=${pct(eu.toDouble, xu.toDouble)} | jaccard est=$je%.4f " +
@@ -146,8 +144,7 @@ object SketchAccuracyProbe {
         val ex = r.getAs[Long]("n_exact")
         val est = Option(r.get(r.fieldIndex("est_distinct")))
           .map(_.asInstanceOf[Double])
-        val m = spark.conf.getOption("spark.graft.x07.m")
-          .map(_.toInt).getOrElse(4096)
+        val m = 4096 // x07's fixed bitmap size
         val load = occ.toDouble / m
         est match {
           case Some(e) =>

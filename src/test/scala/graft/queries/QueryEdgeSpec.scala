@@ -104,37 +104,31 @@ class QueryEdgeSpec extends SparkSpec {
     }
     // span 7 = many chunks; 1 = every doc its own chunk (offset repair
     // does ALL the work); 10^9 = one chunk (window does all the work)
-    for (span <- Seq("7", "1", "1000000000")) {
-      spark.conf.set("spark.graft.w04.chunkSpan", span)
-      try {
-        val chunked = SparkEntry.queries("w04")(spark, sf)
-          .orderBy("doc_id").collect()
-        assert(chunked.length == naive.length && chunked.length > 0)
-        chunked.zip(naive).foreach { case (c, n) =>
-          assert(c.getLong(0) == n.getLong(0) &&
-            c.getLong(3) == n.getLong(3) && c.getLong(4) == n.getLong(4),
-            s"span $span placement diverged: two-phase $c vs naive $n")
-        }
-      } finally spark.conf.unset("spark.graft.w04.chunkSpan")
+    for (span <- Seq(7L, 1L, 1000000000L)) {
+      val chunked = SamplingQueries.w04Packs(spark, sf, span)
+        .orderBy("doc_id").collect()
+      assert(chunked.length == naive.length && chunked.length > 0)
+      chunked.zip(naive).foreach { case (c, n) =>
+        assert(c.getLong(0) == n.getLong(0) &&
+          c.getLong(3) == n.getLong(3) && c.getLong(4) == n.getLong(4),
+          s"span $span placement diverged: two-phase $c vs naive $n")
+      }
     }
+    // the auto-span query is the same placement
+    val auto = SparkEntry.queries("w04")(spark, sf).orderBy("doc_id").collect()
+    assert(auto.toSeq == SamplingQueries.w04Packs(spark, sf, 7L)
+      .orderBy("doc_id").collect().toSeq)
     // span 0 would NULL every chunk (rows vanish through the equi-join),
     // negative spans reverse chunk monotonicity — both must be loud
-    for (bad <- Seq("0", "-4", "abc")) {
-      spark.conf.set("spark.graft.w04.chunkSpan", bad)
-      try intercept[IllegalArgumentException](
-        SparkEntry.queries("w04")(spark, sf))
-      finally spark.conf.unset("spark.graft.w04.chunkSpan")
-    }
-    spark.conf.set("spark.graft.w04.chunkSpan", "7")
-    try {
-      // span 7 really did produce more window partitions than sources
-      val nChunkKeys = SparkEntry.queries("w04")(spark, sf)
-        .select((col("doc_id") / 7).cast("long").as("chunk"), col("source"))
-        .distinct().count()
-      val nSources = naive.map(_.getString(1)).distinct.length
-      assert(nChunkKeys > nSources * 2,
-        s"only $nChunkKeys (source, chunk) keys for $nSources sources")
-    } finally spark.conf.unset("spark.graft.w04.chunkSpan")
+    for (bad <- Seq(0L, -4L))
+      intercept[IllegalArgumentException](SamplingQueries.w04Packs(spark, sf, bad))
+    // span 7 really did produce more window partitions than sources
+    val nChunkKeys = SamplingQueries.w04Packs(spark, sf, 7L)
+      .select((col("doc_id") / 7).cast("long").as("chunk"), col("source"))
+      .distinct().count()
+    val nSources = naive.map(_.getString(1)).distinct.length
+    assert(nChunkKeys > nSources * 2,
+      s"only $nChunkKeys (source, chunk) keys for $nSources sources")
   }
 
   test("m06: negative doc_id keeps sign-of-dividend modulo — the DuckDB " +
@@ -442,58 +436,6 @@ class QueryEdgeSpec extends SparkSpec {
       out.mkString("\n"))
   }
 
-  test("s08 multi-table: a neighbor invisible to table 0 (slice-0 signs " +
-      "disagree) is recovered when a later table's slice agrees; the conf " +
-      "validates its geometry loudly") {
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType, nullable = false),
-      StructField("embedding", ArrayType(FloatType, containsNull = false),
-        nullable = false),
-      StructField("label", IntegerType, nullable = false)))
-    // bits=2: table 0 buckets on dims 0-1, table 1 on dims 2-3.
-    // v1/v2 disagree in every dim-0/1 sign (different table-0 buckets)
-    // but share dims 2-3 signs — only table 1 can pair them. v1/v3 agree
-    // on dims 0-1 and disagree on 2-3: the single-table edge.
-    val rows = Seq(
-      Row(1L, Seq(1f, 1f, 1f, 1f), 0),
-      Row(2L, Seq(-1f, -1f, 1f, 1f), 0),
-      Row(3L, Seq(1f, 1f, -1f, -1f), 0))
-    val dir = miniDir("embeddings", rows, schema)
-    spark.conf.set("spark.graft.s08.bits", "2")
-    try {
-      val single = SparkEntry.queries("s08")(spark, dir).collect()
-      val nbrsOf1 = single.filter(_.getLong(0) == 1L).map(_.getLong(1)).toSet
-      assert(nbrsOf1 == Set(3L),
-        s"tables=1 must see only the table-0 bucket mate: $nbrsOf1")
-      assert(!single.exists(_.getLong(0) == 2L),
-        "v2 is alone in its table-0 bucket — no edges at tables=1")
-      spark.conf.set("spark.graft.s08.tables", "2")
-      val multi = SparkEntry.queries("s08")(spark, dir).collect()
-      val mNbrsOf1 = multi.filter(_.getLong(0) == 1L).map(_.getLong(1)).toSet
-      assert(mNbrsOf1 == Set(2L, 3L),
-        s"tables=2 must add the table-1 edge: $mNbrsOf1")
-      // superset property: per-vector candidates only grow, so every
-      // single-table edge survives and ranks stay contiguous from 1
-      val m1 = multi.filter(_.getLong(0) == 1L).map(_.getInt(3)).sorted
-      assert(m1.toSeq == (1 to m1.length), m1.mkString(","))
-      // geometry guard: 40 tables x 2 bits = 80 > 64 dims must refuse
-      // with the conf key in the message
-      spark.conf.set("spark.graft.s08.tables", "40")
-      val e = intercept[IllegalArgumentException] {
-        SparkEntry.queries("s08")(spark, dir)
-      }
-      assert(e.getMessage.contains("spark.graft.s08"), e.getMessage)
-      spark.conf.set("spark.graft.s08.tables", "oops")
-      val e2 = intercept[IllegalArgumentException] {
-        SparkEntry.queries("s08")(spark, dir)
-      }
-      assert(e2.getMessage.contains("spark.graft.s08.tables"), e2.getMessage)
-    } finally {
-      spark.conf.unset("spark.graft.s08.bits")
-      spark.conf.unset("spark.graft.s08.tables")
-    }
-  }
-
   test("s06: a duplicate seed vector empties one cluster (tie-break to the " +
       "lower cid) and the empty cluster is absent from the output") {
     val schema = StructType(Seq(
@@ -556,32 +498,31 @@ class QueryEdgeSpec extends SparkSpec {
     }
   }
 
-  test("d16: with an explicit k=1 (single cluster) the output is the exact " +
+  test("d16: with a single centroid (one cluster) the output is the exact " +
       "brute-force pair semantics — partner counts and the lower-id keep " +
       "rule — and partner-free vectors are absent (implicitly kept)") {
     val schema = StructType(Seq(
       StructField("vec_id", LongType, nullable = false),
       StructField("embedding", ArrayType(FloatType, containsNull = false)),
       StructField("label", IntegerType, nullable = false)))
-    // two similarity pairs (0,1) and (2,3) above tau=0.4, one isolate (4)
+    // two similarity pairs (0,100) and (102,103) above tau=0.4, one
+    // isolate (104). Centroids are the vectors with vec_id < k (k = 8
+    // here), so vec_id 0 is the only one and every vector joins cid 0
     val rows = Seq(
       Row(0L, Seq(1f, 0f, 0f, 0f), 0),
-      Row(1L, Seq(0.9f, 0.1f, 0f, 0f), 0),
-      Row(2L, Seq(0f, 1f, 0f, 0f), 0),
-      Row(3L, Seq(0f, 0.9f, 0.2f, 0f), 0),
-      Row(4L, Seq(0f, 0f, 1f, 0f), 0))
+      Row(100L, Seq(0.9f, 0.1f, 0f, 0f), 0),
+      Row(102L, Seq(0f, 1f, 0f, 0f), 0),
+      Row(103L, Seq(0f, 0.9f, 0.2f, 0f), 0),
+      Row(104L, Seq(0f, 0f, 1f, 0f), 0))
     val dir = miniDir("embeddings", rows, schema)
-    spark.conf.set("spark.graft.d16.k", "1")
-    try {
-      val out = SparkEntry.queries("d16")(spark, dir)
-        .orderBy("vec_id").collect()
-      // (vec_id, n_partners, keep); cid is 0 for every row at k=1
-      assert(out.map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-        .toSeq == Seq((0L, 1L, true), (1L, 1L, false),
-          (2L, 1L, true), (3L, 1L, false)),
-        out.mkString("\n"))
-      assert(out.forall(_.getLong(0) == 0L), "single cluster expected")
-    } finally spark.conf.unset("spark.graft.d16.k")
+    val out = SparkEntry.queries("d16")(spark, dir)
+      .orderBy("vec_id").collect()
+    // (vec_id, n_partners, keep); cid is 0 for every row
+    assert(out.map(r => (r.getLong(1), r.getLong(2), r.getBoolean(3)))
+      .toSeq == Seq((0L, 1L, true), (100L, 1L, false),
+        (102L, 1L, true), (103L, 1L, false)),
+      out.mkString("\n"))
+    assert(out.forall(_.getLong(0) == 0L), "single cluster expected")
   }
 
   test("s07: a query alone in its LSH bucket scores recall 0 (not an " +

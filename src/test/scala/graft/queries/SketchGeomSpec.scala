@@ -1,112 +1,92 @@
 package graft.queries
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.Files
+
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.types._
 
 import graft.{SparkEntry, SparkSpec}
 
-/** The sketch-geometry confs (spark.graft.x04.k / x07.m / x08.rows, new
-  * after the accuracy ladder measured the fixed geometries' ceilings):
-  * defaults must reproduce the committed oracle behavior bit-for-bit,
-  * malformed values must fail with the key name (the intConf contract),
-  * and the documented re-sizing semantics must hold — in particular the
-  * two EXACTNESS escapes (KMV with k ≥ vocabulary is exact; a bitmap
-  * well above the vocabulary estimates within LC's small-load error).
+/** The fixed sketch geometries (x04/x05 k = 64, x07 m = 4096, x08 R = 16,
+  * the constants the committed oracle SQL hardcodes) keep their documented
+  * semantics — in particular the two EXACTNESS edges: KMV over a
+  * vocabulary smaller than k is exact, and a bitmap far above the
+  * vocabulary estimates within LC's small-load error, while a vocabulary
+  * far above it saturates to the NULL contract.
   */
 class SketchGeomSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def run(q: String): DataFrame = SparkEntry.queries(q)(spark, sf)
+  private def run(q: String, dir: String = sf): DataFrame =
+    SparkEntry.queries(q)(spark, dir)
 
-  private def withConf[T](key: String, v: String)(f: => T): T = {
-    spark.conf.set(key, v)
-    try f finally spark.conf.unset(key)
+  /** A one-table `documents` dir holding `(text, source)` rows. */
+  private def docsDir(docs: Seq[(String, String)]): String = {
+    val dir = Files.createTempDirectory("graft_sketch").toString
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("text", StringType, nullable = false),
+      StructField("source", StringType, nullable = false)))
+    val rows = docs.zipWithIndex.map { case ((t, src), i) => Row(i.toLong, t, src) }
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
   }
 
-  test("defaults are conf-default parity: explicit default == unset, " +
-      "for all three knobs") {
-    val plain = (run("x04").collect().toSeq, run("x07").collect().toSeq,
-      run("x08").collect().toSeq)
-    val explicit = withConf("spark.graft.x04.k", "64") {
-      withConf("spark.graft.x07.m", "4096") {
-        withConf("spark.graft.x08.rows", "16") {
-          (run("x04").collect().toSeq, run("x07").collect().toSeq,
-            run("x08").collect().toSeq)
-        }
-      }
-    }
-    assert(plain == explicit)
-  }
+  private def words(prefix: String, r: Range): String =
+    r.map(i => s"$prefix$i").mkString(" ")
+
+  /** 1,000 distinct tokens over two sources, far above k = 64. */
+  private lazy val bigVocab = docsDir(Seq(
+    (words("a", 0 until 600), "src0"), (words("a", 400 until 1000), "src1")))
 
   test("x04: k >= vocabulary takes the exact path (est == n_exact), " +
       "k below it estimates with the k-cut") {
-    val exact = withConf("spark.graft.x04.k", "100000") {
-      val r = run("x04").head()
-      assert(r.getAs[Long]("est_distinct") == r.getAs[Long]("n_exact"))
-      r.getAs[Long]("n_exact")
-    }
-    withConf("spark.graft.x04.k", "4") {
-      val r = run("x04").head()
-      assert(r.getAs[Long]("k_obs") == 4L)
-      val est = r.getAs[Long]("est_distinct")
-      // k=4 is a sigma ~ 70% estimator — only sanity-bound it
-      assert(est > 0L && est < exact * 20)
-    }
+    // 20 distinct tokens < k = 64
+    val small = docsDir(Seq((words("w", 0 until 10), "src0"),
+      (words("w", 5 until 20), "src0")))
+    val r = run("x04", small).head()
+    assert(r.getAs[Long]("n_exact") == 20L)
+    assert(r.getAs[Long]("est_distinct") == r.getAs[Long]("n_exact"))
+    val big = run("x04", bigVocab).head()
+    assert(big.getAs[Long]("k_obs") == 64L)
+    val est = big.getAs[Long]("est_distinct")
+    val exact = big.getAs[Long]("n_exact")
+    // k=64 is a sigma ~ 12.7% estimator — only sanity-bound it
+    assert(exact > 900L && est > exact / 2 && est < exact * 2, s"$est vs $exact")
   }
 
   test("x05 shares x04's k (one common k or the union sketch cannot " +
       "compose)") {
-    withConf("spark.graft.x04.k", "8") {
-      assert(run("x05").head().getAs[Long]("k_obs") <= 8L)
-    }
+    assert(run("x05", bigVocab).head().getAs[Long]("k_obs") == 64L)
+    assert(run("x05").head().getAs[Long]("k_obs") <= 64L)
   }
 
   test("x07: a bitmap far above the vocabulary estimates within small-load " +
       "LC error; a degenerate tiny bitmap saturates to the NULL contract") {
-    withConf("spark.graft.x07.m", "1048576") {
-      val r = run("x07").head()
-      val est = r.getAs[Double]("est_distinct")
-      val ex = r.getAs[Long]("n_exact")
-      assert(math.abs(est / ex - 1) < 0.05,
-        s"m=2^20 at tiny vocab should be near-exact: est=$est exact=$ex")
-    }
-    withConf("spark.graft.x07.m", "2") {
-      val r = run("x07").head()
-      assert(r.isNullAt(r.fieldIndex("est_distinct")),
-        "occupied == m must yield the documented NULL, never ±inf")
-    }
+    // 50 distinct tokens in a 4096-bucket bitmap
+    val r = run("x07", docsDir(Seq((words("w", 0 until 50), "src0")))).head()
+    val est = r.getAs[Double]("est_distinct")
+    val ex = r.getAs[Long]("n_exact")
+    assert(ex == 50L && math.abs(est / ex - 1) < 0.05,
+      s"m=4096 at a 50-token vocab should be near-exact: est=$est exact=$ex")
+    // 100k distinct tokens leave no bucket of 4096 empty
+    val sat = run("x07", docsDir((0 until 10).map(d =>
+      (words(s"t${d}_", 0 until 10000), "src0")))).head()
+    assert(sat.getAs[Long]("occupied") == 4096L)
+    assert(sat.isNullAt(sat.fieldIndex("est_distinct")),
+      "occupied == m must yield the documented NULL, never ±inf")
   }
 
-  test("x08: rows re-sizes the sketch (r_rows reflects it) and rel_err " +
-      "stays consistent with est/exact") {
-    withConf("spark.graft.x08.rows", "64") {
-      val r = run("x08").head()
-      assert(r.getAs[Int]("r_rows") == 64)
-      val (est, ex) = (r.getAs[Long]("est_f2"), r.getAs[Long]("exact_f2"))
-      val rel = r.getAs[Double]("rel_err")
-      // est_f2 is the floored division of the same sum rel_err divides
-      // exactly — agreement within the floor+rounding slack
-      assert(math.abs(est.toDouble / ex - 1 - rel) < 1e-3)
-    }
-  }
-
-  test("malformed or out-of-floor geometry confs fail with the key name") {
-    Seq(("spark.graft.x04.k", "abc", "x04"),
-      ("spark.graft.x07.m", "4k", "x07"),
-      ("spark.graft.x08.rows", "many", "x08")).foreach { case (key, v, q) =>
-      val e = intercept[IllegalArgumentException] {
-        withConf(key, v)(run(q).collect())
-      }
-      assert(e.getMessage.contains(key), s"$key: ${e.getMessage}")
-    }
-    Seq(("spark.graft.x04.k", "1", "x04"),
-      ("spark.graft.x07.m", "0", "x07"),
-      ("spark.graft.x08.rows", "0", "x08")).foreach { case (key, v, q) =>
-      val e = intercept[IllegalArgumentException] {
-        withConf(key, v)(run(q).collect())
-      }
-      assert(e.getMessage.contains(key) && e.getMessage.contains(">="),
-        s"$key: ${e.getMessage}")
-    }
+  test("x08: r_rows reports the 16 sign rows and rel_err stays consistent " +
+      "with est/exact") {
+    val r = run("x08").head()
+    assert(r.getAs[Int]("r_rows") == 16)
+    val (est, ex) = (r.getAs[Long]("est_f2"), r.getAs[Long]("exact_f2"))
+    val rel = r.getAs[Double]("rel_err")
+    // est_f2 is the floored division of the same sum rel_err divides
+    // exactly — agreement within the floor+rounding slack
+    assert(math.abs(est.toDouble / ex - 1 - rel) < 1e-3)
   }
 }

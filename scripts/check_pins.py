@@ -10,10 +10,10 @@ the negative tests that keep the key-set and value assertions honest.
 Re-derives the per-query clean-floor pins (min of detail-line medians, the
 derive_pins.py rule) from the close-run captures in the given evidence
 directory and compares them — at the 3-decimal precision the Scala source
-carries — against Bench.CleanMediansSf01 and CanaryCleanSf01 as committed
-in src/main/scala/graft/Bench.scala. Exit 0 iff every pin matches, both
-maps cover exactly the derived query set (canaries: the 6-query canary
-set), and no extras exist on either side.
+carries — against Bench.CleanMediansSf01 as committed in
+src/main/scala/graft/Bench.scala. Exit 0 iff every pin matches and the map
+covers exactly the derived query set, no extras on either side. The canary
+pins are no second map: Bench reads them out of CleanMediansSf01.
 
 This is the CI-style closure of VERDICT r15 gap #2: a judge re-derives
 every committed pin from committed files, no prose trust required.
@@ -22,9 +22,6 @@ import glob, os, re, sys
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from derive_pins import parse_run  # noqa: E402
-
-CANARIES = {"q02", "q16", "q30", "t08", "d01", "d06"}
-
 
 def scala_map(src, name):
     """Extract a `val <name>: Map[String, Double] = Map(...)` body."""
@@ -57,30 +54,19 @@ def main():
         "..", "src", "main", "scala", "graft", "Bench.scala")
     bench_src = open(bench_path).read()
     pins = scala_map(bench_src, "CleanMediansSf01")
-    canaries = scala_map(bench_src, "CanaryCleanSf01")
 
     bad = []
     for q in sorted(set(derived) | set(pins)):
         if derived.get(q) != pins.get(q):
             bad.append(f"  CleanMediansSf01[{q}]: committed {pins.get(q)} "
                        f"!= derived {derived.get(q)}")
-    # the canary map must be EXACTLY the 6-query canary set — an extra
-    # entry whose value happens to match its derived pin must not pass
-    # silently (the value loop below only compares, it doesn't bound)
-    if set(canaries) != CANARIES:
-        bad.append(f"  CanaryCleanSf01 keys {sorted(canaries)} != "
-                   f"canary set {sorted(CANARIES)}")
-    for q in sorted(CANARIES | set(canaries)):
-        if canaries.get(q) != derived.get(q):
-            bad.append(f"  CanaryCleanSf01[{q}]: committed {canaries.get(q)} "
-                       f"!= derived {derived.get(q)}")
     if bad:
         print(f"FAIL: committed pins diverge from {evidence_dir} "
               f"({len(files)} runs):")
         print("\n".join(bad))
         sys.exit(1)
-    print(f"OK: {len(pins)} pins + {len(canaries)} canary pins re-derived "
-          f"byte-for-byte from {evidence_dir} ({len(files)} runs)")
+    print(f"OK: {len(pins)} pins re-derived byte-for-byte from "
+          f"{evidence_dir} ({len(files)} runs)")
 
 
 if __name__ == "__main__":

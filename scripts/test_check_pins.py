@@ -5,11 +5,10 @@ must be exercised so it cannot regress silently).
 Builds a synthetic evidence dir + Bench.scala fixture, then asserts:
   1. matching pins -> OK (exit 0)
   2. a pin VALUE drift -> FAIL
-  3. an EXTRA canary key whose value matches its derived pin -> FAIL
-     (the key-set assertion — a value-only loop would pass this)
-  4. a MISSING canary key -> FAIL
-  5. a pin map covering fewer queries than the evidence derives -> FAIL
-  6. a 0-byte (aborted/truncated) capture -> FAIL from the parse guard
+  3. a pin map covering fewer queries than the evidence derives -> FAIL
+     (the key-set assertion — a value-only loop over the map would pass)
+  4. a pin map with a query the evidence does not derive -> FAIL
+  5. a 0-byte (aborted/truncated) capture -> FAIL from the parse guard
 
 Run: python3 scripts/test_check_pins.py   (exit 0 = all cases behave)
 """
@@ -22,17 +21,14 @@ import tempfile
 HERE = os.path.dirname(os.path.abspath(__file__))
 CHECK = os.path.join(HERE, "check_pins.py")
 
-CANARIES = ["q02", "q16", "q30", "t08", "d01", "d06"]
-QUERIES = {q: 0.1 + i * 0.01 for i, q in enumerate(CANARIES + ["zz1", "zz2"])}
+QUERIES = {q: 0.1 + i * 0.01 for i, q in enumerate(["q02", "d01", "zz1", "zz2"])}
 
 
-def bench_scala(pins, canaries):
-    def body(m):
-        return ",\n".join(f'    "{q}" -> {v:.3f}' for q, v in sorted(m.items()))
+def bench_scala(pins):
+    body = ",\n".join(f'    "{q}" -> {v:.3f}' for q, v in sorted(pins.items()))
     return (
         "object Bench {\n"
-        f"  val CanaryCleanSf01: Map[String, Double] = Map(\n{body(canaries)})\n"
-        f"  val CleanMediansSf01: Map[String, Double] = Map(\n{body(pins)})\n"
+        f"  val CleanMediansSf01: Map[String, Double] = Map(\n{body})\n"
         "}\n")
 
 
@@ -61,44 +57,34 @@ def main():
             f.write(json.dumps({"metric": "suite_sec", "value": 1.0}) + "\n")
 
         pins = dict(QUERIES)
-        canaries = {q: QUERIES[q] for q in CANARIES}
 
         good = os.path.join(tmp, "Bench_good.scala")
         with open(good, "w") as f:
-            f.write(bench_scala(pins, canaries))
+            f.write(bench_scala(pins))
         case("1 matching pins -> OK", True, *run(evidence, good))
 
         drift = os.path.join(tmp, "Bench_drift.scala")
         bad_pins = dict(pins, zz1=pins["zz1"] + 0.5)
         with open(drift, "w") as f:
-            f.write(bench_scala(bad_pins, canaries))
+            f.write(bench_scala(bad_pins))
         case("2 pin value drift -> FAIL", False, *run(evidence, drift))
-
-        extra = os.path.join(tmp, "Bench_extra_canary.scala")
-        # the extra key's value MATCHES its derived pin — only the key-set
-        # assertion can catch this
-        with open(extra, "w") as f:
-            f.write(bench_scala(pins, dict(canaries, zz1=pins["zz1"])))
-        case("3 extra canary key (value matches) -> FAIL", False,
-             *run(evidence, extra))
-
-        missing = os.path.join(tmp, "Bench_missing_canary.scala")
-        with open(missing, "w") as f:
-            f.write(bench_scala(
-                pins, {q: v for q, v in canaries.items() if q != "d06"}))
-        case("4 missing canary key -> FAIL", False, *run(evidence, missing))
 
         subset = os.path.join(tmp, "Bench_subset.scala")
         with open(subset, "w") as f:
-            f.write(bench_scala(
-                {q: v for q, v in pins.items() if q != "zz2"}, canaries))
-        case("5 pin map misses a derived query -> FAIL", False,
+            f.write(bench_scala({q: v for q, v in pins.items() if q != "zz2"}))
+        case("3 pin map misses a derived query -> FAIL", False,
              *run(evidence, subset))
+
+        extra = os.path.join(tmp, "Bench_extra.scala")
+        with open(extra, "w") as f:
+            f.write(bench_scala(dict(pins, zz3=0.5)))
+        case("4 pin map has an underived query -> FAIL", False,
+             *run(evidence, extra))
 
         truncated = os.path.join(tmp, "bench_trunc")
         os.makedirs(truncated)
         open(os.path.join(truncated, "close_A.json"), "w").close()
-        case("6 empty capture -> FAIL", False, *run(truncated, good))
+        case("5 empty capture -> FAIL", False, *run(truncated, good))
 
     if failures:
         print("\n".join(["", "FAILURES:"] + failures))

@@ -73,16 +73,14 @@ object Bench {
     s"""{"bench_detail":{"queries":${queriesJson(timings, 3)},"runs":$rs$cpart$mpart$tpart},"sf":"$sfName"}"""
   }
 
-  /** Scan-only canary queries with their pinned clean sf0.1 medians
-    * (seconds) — refreshed EVERY round from the min of that round's
-    * full-suite per-query medians (r15 FINAL close: four quiet
-    * 135-query close runs, all contaminated:false by their own canaries;
-    * r6–r8 pins had drifted
-    * until q30 read 1.7× on a near-clean run). Rationale: median-of-3 rejects a
+  /** The canary queries. Their pins are their [[CleanMediansSf01]]
+    * entries ([[CanaryCleanSf01]]), refreshed with the rest every round
+    * (r6–r8 pins had drifted until q30 read 1.7× on a near-clean run).
+    * Rationale: median-of-3 rejects a
     * single outlier run, but a SESSION-WIDE disturbance (concurrent build,
     * noisy neighbor) elevates all three runs of every query — r8's driver
     * artifact recorded 43.4 s against 27.4–30.6 s clean same-code runs and
-    * there was nothing on the metric line to say so. These three queries
+    * there was nothing on the metric line to say so. The first three
     * are pure parquet scan-aggs whose clean runtimes are flat across
     * rounds, so elevation on ≥2 of the medians is a session signal, not
     * query noise. The pins are sf0.1- and container-specific; at any other
@@ -120,13 +118,7 @@ object Bench {
     * the moderate band auto-flag. The set now spans scan (q02/q16/q30),
     * string-CPU (t08) and shuffle (d01/d06).
     */
-  val CanaryCleanSf01: Map[String, Double] = Map(
-    "q02" -> 0.105,
-    "q16" -> 0.072,
-    "q30" -> 0.054,
-    "t08" -> 0.314,
-    "d01" -> 0.202,
-    "d06" -> 0.108)
+  val CanaryNames: Seq[String] = Seq("q02", "q16", "q30", "t08", "d01", "d06")
 
   /** Clean per-query sf0.1 medians for the whole-suite total-canary —
     * the min of the per-query medians over quiet-window full-suite runs
@@ -286,6 +278,10 @@ object Bench {
     "x06" -> 0.146,
     "x07" -> 0.408,
     "x08" -> 0.592)
+
+  /** The canaries' clean sf0.1 medians (seconds), read from the one pin map. */
+  val CanaryCleanSf01: Map[String, Double] =
+    CanaryNames.map(q => q -> CleanMediansSf01(q)).toMap
 
   /** Round-21 anti-contamination re-measure (VERDICT r20 #1, guide §1):
     * two consecutive official records landed in degraded windows — r19's
@@ -677,7 +673,7 @@ object Bench {
     // disturbed window; the third run costs the suite ~10 s and removes
     // that class entirely. What median-of-3 still CANNOT reject is a
     // disturbance spanning the whole session — that is the canary flag's
-    // job (see CanaryCleanSf01).
+    // job (see CanaryNames).
     // SPARK_GRAFT_ONLY: regex over query names for targeted runs (scale
     // probes, single-query investigation); absent = the full suite.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.r)

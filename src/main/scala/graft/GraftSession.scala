@@ -23,6 +23,14 @@ object GraftSession {
       // in Tables.load (Spark's TimestampType is micros-only).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  /** The engine's integer confs: `default` when `key` is unset; a value
+    * that is not an integer fails naming the key, before any work runs. */
+  def longConf(spark: SparkSession, key: String, default: Long): Long =
+    spark.conf.getOption(key).fold(default) { v =>
+      v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(s"$key must be an integer: got '$v'"))
+    }
+
   /** Apply the nanosAsLong + tz conf to an existing session (Verify/Bench
     * are handed a session by the driver-style mains). */
   def tune(spark: SparkSession): SparkSession = {

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,38 +91,4 @@ case class DotProductF(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductF =
     copy(left = newLeft, right = newRight)
-}
-
-object DotProductF {
-  private def build(exprs: Seq[Expression]): DotProductF = {
-    require(exprs.length == 2,
-      s"dot_f requires exactly 2 arguments, got ${exprs.length}")
-    DotProductF(exprs.head, exprs(1))
-  }
-
-  /** Register `dot_f(a, b)` for the SQL surface of a session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", build, "scala_udf")
-}
-
-/** SparkSessionExtensions wiring — install the engine's native expressions
-  * at session build time:
-  *
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions)...
-  * // or spark.sql.extensions=graft.functions.GraftExtensions
-  * }}}
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("dot_f"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProductF].getName, "dot_f"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2,
-          s"dot_f requires exactly 2 arguments, got ${exprs.length}")
-        DotProductF(exprs.head, exprs(1))
-      }))
 }

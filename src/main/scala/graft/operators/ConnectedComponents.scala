@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.SharedFrames
+import graft.{GraftSession, SharedFrames}
 
 /** Distributed connected components by min-label propagation with pointer
   * jumping — the cluster-resolution step a dedup pipeline runs AFTER
@@ -54,6 +54,10 @@ object ConnectedComponents {
       src: String,
       dst: String,
       maxIter: Int = 20): DataFrame = {
+    // read before any work, so a malformed value fails first; the local
+    // path's gate, see below
+    val localMax =
+      GraftSession.longConf(pairs.sparkSession, "spark.graft.cc.localMax", 1000000L)
     // half-edges and the edge cache, released however resolve exits
     val work = new SharedFrames.Scope
     try {
@@ -95,8 +99,6 @@ object ConnectedComponents {
       // the invariant root = min of set by always attaching the larger
       // root under the smaller). Long node ids only — other types keep the
       // distributed path so output schemas never change.
-      val localMax = pairs.sparkSession.conf
-        .getOption("spark.graft.cc.localMax").map(_.toLong).getOrElse(1000000L)
       val longIds = half.schema.fields.forall(
         _.dataType == org.apache.spark.sql.types.LongType)
       if (longIds && localMax > 0 && stats.getLong(0) <= localMax) {

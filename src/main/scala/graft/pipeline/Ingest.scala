@@ -63,10 +63,9 @@ object Ingest {
         col("ymd"), col("batch"), col("repetition"))
 
   /** Tree table -> typed repetition frame ([[Model.Repetition]] shape):
-    * [[TreeTable.translateOnto]] of [[repetitionRules]] onto the keys, so
-    * ingest and the translator steps share one read path (K19 coercion,
-    * typed defaults, null images gating the steps) and one pass of the
-    * tree. */
+    * [[TreeTable.translateOnto]] of [[repetitionRules]] onto the keys: the
+    * translator passes of the reference (K19 coercion, typed defaults, null
+    * images gating the steps) in one pass of the tree. */
   def repetitionsFromTree(tree: DataFrame, keys: DataFrame): DataFrame =
     TreeTable.translateOnto(tree, keys, repetitionRules)
 }

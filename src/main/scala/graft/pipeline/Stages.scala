@@ -39,11 +39,6 @@ object Stages {
       refBeamDiameterPx: Double = 10.0,
       refDistanceM: Double = 1.0,
       hcKevAngstrom: Double = 12.398419843320026,
-      // raw long-format tree table + translator mapping configs, for replays
-      // that start from untranslated instrument files (K20 / S3-S6)
-      tree: Option[DataFrame] = None,
-      translatorRules1: Seq[TreeTable.MappingRule] = Nil,
-      translatorRules2: Seq[TreeTable.MappingRule] = Nil,
       caches: SharedFrames.Scope = new SharedFrames.Scope)
 
   type Stage = (DataFrame, Context) => DataFrame
@@ -318,25 +313,15 @@ object Stages {
         min_by(col("mask_path"), col("repetition")).as("template_mask_path"))
   }
 
-  /** K20 / S3–S6: first translator pass (`processstep_translator_step_1.py:
-    * 24-45` — HDF5Translator with the instrument YAML config). When the
-    * incoming frame is the raw long-format tree table, fold the configured
-    * mapping into one wide row per file; an already-translated frame passes
-    * through, mirroring the reference's already-processed skip (F3). */
-  val translatorStep1: Stage = (df, ctx) =>
-    if (ctx.translatorRules1.nonEmpty &&
-        df.columns.contains("path") && df.columns.contains("valueF64"))
-      TreeTable.translate(df, ctx.translatorRules1)
-    else df
-
-  /** Second translator pass (`processstep_translator_step_2.py` — refines
-    * the step-1 file with a second mapping config): enriches the wide frame
-    * with further tree-derived columns, keyed on `file`. */
-  val translatorStep2: Stage = (df, ctx) => ctx.tree match {
-    case Some(tree) if ctx.translatorRules2.nonEmpty && df.columns.contains("file") =>
-      TreeTable.translateOnto(tree, df, ctx.translatorRules2)
-    case _ => df
-  }
+  /** K20 / S3–S6: the two translator passes
+    * (`processstep_translator_step_1.py:24-45`,
+    * `processstep_translator_step_2.py` — HDF5Translator with the
+    * instrument YAML configs). Translation happens before the steps run:
+    * [[Ingest.repetitionsFromTree]] folds the mapping rules over the tree
+    * table ([[TreeTable.translateOnto]]) into the repetition frame the steps
+    * take, so both steps return their input frame itself, kept for
+    * step-list parity like [[cleanupFiles]]. */
+  val translatorStep: Stage = (df, _) => df
 
   /** Background-file linkage (`processstep_add_background_files.py:66-78`):
     * resolve each background identifier to the stacked file's path relative
@@ -401,8 +386,8 @@ object Stages {
   /** Step registry mirroring the reference's `--steps` names
     * (`directory_processor_multibatch_nostack.sh:18-33`). */
   val registry: Map[String, Stage] = Map(
-    "translator_step_1" -> translatorStep1,
-    "translator_step_2" -> translatorStep2,
+    "translator_step_1" -> translatorStep,
+    "translator_step_2" -> translatorStep,
     "add_background_files" -> addBackgroundFiles,
     "calc_beam_shape_info" -> calcBeamShapeInfo,
     "cleanup_files" -> cleanupFiles,

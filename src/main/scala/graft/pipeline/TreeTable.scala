@@ -61,16 +61,10 @@ object TreeTable {
       case (acc, _) => acc
     }
 
-  /** K20 applied: fold a rule list over the tree table to produce one wide
-    * row per file — the translator step as a config-driven column mapping
-    * (no subprocess, no per-file mutation; SURVEY §3.1). */
-  def translate(tree: DataFrame, rules: Seq[MappingRule]): DataFrame =
-    translateOnto(tree, tree.select(col("file")).distinct(), rules)
-
-  /** Tree table -> wide typed rows: enrich a frame keyed by `file` (the
-    * listing keys for ingest, an already-wide frame for the second
-    * translator pass, `processstep_translator_step_2.py`) with one column
-    * per rule.
+  /** K20, the translator as a config-driven column mapping (no
+    * subprocess, no per-file mutation; SURVEY §3.1). Tree table -> wide
+    * typed rows: enrich a frame keyed by `file` (the listing keys, in
+    * ingest) with one column per rule.
     *
     * Evaluated as ONE conditional aggregation over a single pass of the
     * tree, not a join per rule: the tree is usually a COMPUTED parse of

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.{SharedFrames, Tables}
 import graft.functions.{TextFns, VectorFns}
+import graft.functions.PushdownBarrierF.pushdownBarrier
 
 /** Deduplication surface over `documents` / `embeddings`: exact (content
   * hash), MinHash+LSH banding, SimHash, bounded n-gram Jaccard, and
@@ -79,17 +80,10 @@ object DedupQueries {
     */
   private def evalOverlap(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.loadSpread(s, dir, "documents")
-    // r22: the doc_id slice filters now sit EXPLICITLY below the shingle
-    // projection (same row pruning the optimizer used to achieve by
-    // pushing them there), and the array gets the d04 barrier so the
-    // explode's inferred size>0 filter reads the materialized column
-    // instead of re-deriving the whole shingle pipeline per row
-    // (the d04 CollapseProject finding, BENCH_NOTES "Retired probes").
-    def sh(d: DataFrame): DataFrame = d
-      .select(col("doc_id"),
-        graft.functions.PushdownBarrierF.pushdownBarrier(
-          array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
-      .select(col("doc_id"), explode(col("sarr")).as("s"))
+    // r22: the doc_id slice filters sit explicitly below the shingle
+    // projection, which the optimizer cannot push them through
+    def sh(d: DataFrame): DataFrame =
+      shingleSets(d).select(col("doc_id"), explode(col("sarr")).as("s"))
     val bench = sh(docs.filter(col("doc_id") % 97 === 0))
       .select(col("doc_id").as("bench_id"), col("s"))
     sh(docs.filter(col("doc_id") % 97 =!= 0))
@@ -104,6 +98,15 @@ object DedupQueries {
   // counts MinHashSigF emits, and MinHashSigF compiles its shingle width
   // in — the two MUST agree or jaccard denominators silently diverge
   private val shingleK = graft.functions.MinHashSigF.ShingleK
+
+  /** `(doc_id, sarr)`: each document's distinct `shingleK`-shingle array,
+    * behind the barrier so `size`, `explode` and the explode's inferred
+    * filter all read it once per row (the projected-value contract on
+    * [[graft.functions.PushdownBarrierF]]; BENCH_NOTES "Barrier sites").
+    * Filter `d` before calling: nothing pushes through the projection. */
+  private[graft] def shingleSets(d: DataFrame): DataFrame =
+    d.select(col("doc_id"),
+      pushdownBarrier(array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
 
   /** The minhash CALIBRATION pair frame: every LSH candidate pair
     * (doc_a < doc_b) with its band-agreement count `n_agree`, both
@@ -148,17 +151,9 @@ object DedupQueries {
     * never fires; plans/r22/d02_before.txt). */
   private[queries] def candidatePairs(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.loadSpread(s, dir, "documents")
-    // r22 barrier: the signature array feeds SEVEN getItem reads (count
-    // slot + six band minima) plus the null gate — CollapseProject would
-    // otherwise inline the whole signature kernel into every reference
-    // and hash each document's shingle set many times over (the
-    // d04 CollapseProject finding, BENCH_NOTES "Retired probes"; d02
-    // construction 2.04 → 1.09 s at sf0.1 from this line alone,
-    // PlanCostProbe min-of-5).
+    // barrier: 7 getItems + the null gate, 1 signature (BENCH_NOTES "Barrier sites")
     val sigw = docs
-      .select(col("doc_id"),
-        graft.functions.PushdownBarrierF.pushdownBarrier(
-          TextFns.minhashSig(col("text"))).as("sig"))
+      .select(col("doc_id"), pushdownBarrier(TextFns.minhashSig(col("text"))).as("sig"))
       // null = no 3-shingles: the rows the explode form never emitted
       .filter(col("sig").isNotNull)
     val sig = sigw.select(col("doc_id"), col("sig").getItem(0).as("c"),
@@ -226,15 +221,8 @@ object DedupQueries {
     val candIds = cand
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct()
-    // r22: barrier so the explode's inferred size>0 filter reads the
-    // materialized array instead of re-deriving the shingle pipeline per
-    // candidate row (the d04 CollapseProject finding, BENCH_NOTES
-    // "Retired probes"). Nothing
-    // needs to push below this project — the semi-join prune sits under it.
-    val shd = docs.join(candIds, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"),
-        graft.functions.PushdownBarrierF.pushdownBarrier(
-          array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
+    // the semi-join prune sits under the shingle projection
+    val shd = shingleSets(docs.join(candIds, Seq("doc_id"), "left_semi"))
       .select(col("doc_id"), explode(col("sarr")).as("s"))
     val inter0 = shd.as("a").join(shd.as("b"),
         col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
@@ -312,13 +300,8 @@ object DedupQueries {
     * sign-overflow BIGINT/LongType in the oracle's pow/%-arithmetic. */
   private def simhashes(s: SparkSession, dir: String): DataFrame =
     Tables.loadSpread(s, dir, "documents")
-      // r22 barrier: hi and lo are two getItem reads of the same array —
-      // unbarriered, CollapseProject inlines the simhash kernel into each
-      // and every document is token-hashed twice (the d04 CollapseProject
-      // finding, BENCH_NOTES "Retired probes")
-      .select(col("doc_id"),
-        graft.functions.PushdownBarrierF.pushdownBarrier(
-          TextFns.simhash64Native(col("text"))).as("sh"))
+      // barrier: hi and lo read 1 simhash (BENCH_NOTES "Barrier sites")
+      .select(col("doc_id"), pushdownBarrier(TextFns.simhash64Native(col("text"))).as("sh"))
       .select(col("doc_id"), col("sh").getItem(0).as("simhash_hi"),
         col("sh").getItem(1).as("simhash_lo"))
 
@@ -534,18 +517,8 @@ object DedupQueries {
       // can't appear in a pair — exactly the rows the old sig-isNotNull
       // filter dropped. Plan: 2 scans + 3 joins → 1 scan + 1 join
       // (plans/r22/d04_{before,after}.txt); d20's d04 leg inherits it.
-      // The barrier is load-bearing: size() and explode() both consume
-      // `sarr`, and CollapseProject would otherwise inline the whole
-      // shingle pipeline into EACH consumer (plus the explode's inferred
-      // size>0 filter) — measured 5.2 s vs 0.45 s for this frame alone at
-      // sf0.1 (BENCH_NOTES "Retired probes"). Wrapped nondeterministic,
-      // the array materializes once per row in its own Project and every
-      // consumer reads the attribute; exchange reuse across the self-join
-      // sides still fires (structural canonical equality).
-      val sh = Tables.loadSpread(s, dir, "documents")
-        .select(col("doc_id"),
-          graft.functions.PushdownBarrierF.pushdownBarrier(
-            array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
+      // size() and explode() read 1 shingle array (BENCH_NOTES "Barrier sites")
+      val sh = shingleSets(Tables.loadSpread(s, dir, "documents"))
         .select(col("doc_id"), size(col("sarr")).as("c"),
           explode(col("sarr")).as("sraw"))
         .select(col("doc_id"), col("c"), TextFns.md5Hash60(col("sraw")).as("s"))
@@ -583,13 +556,9 @@ object DedupQueries {
         .when(bucket < 95, "val").otherwise(lit("test"))
       val base = Tables.loadSpread(s, dir, "documents")
         .select(col("doc_id"), split.as("split"), col("text"))
-      // r22: split filters below the barrier'd shingle array (the
-      // evalOverlap/d12 shape) — one shingle evaluation per surviving row
-      def shx(d: DataFrame): DataFrame = d
-        .select(col("doc_id"),
-          graft.functions.PushdownBarrierF.pushdownBarrier(
-            array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
-        .select(col("doc_id"), explode(col("sarr")).as("s"))
+      // split filters below the shingle projection (the evalOverlap shape)
+      def shx(d: DataFrame): DataFrame =
+        shingleSets(d).select(col("doc_id"), explode(col("sarr")).as("s"))
       val held = shx(base.filter(col("split") =!= "train"))
         .select(col("s"), col("doc_id").as("held_id"))
       val leaks = shx(base.filter(col("split") === "train")).join(held, Seq("s"))
@@ -661,8 +630,7 @@ object DedupQueries {
       // negligible next to the quadratic join it gates. Setting
       // spark.graft.d05.maxRows <= 0 disables guard AND pre-count for
       // trusted runs that don't want the extra scan.
-      val maxRows = s.conf.getOption("spark.graft.d05.maxRows")
-        .map(_.toLong).getOrElse(1000000L)
+      val maxRows = graft.GraftSession.longConf(s, "spark.graft.d05.maxRows", 1000000L)
       val base = Tables.loadSpread(s, dir, "embeddings")
       if (maxRows > 0) {
         val n = base.count()
@@ -798,15 +766,10 @@ object DedupQueries {
       val nHash = 3
       def pos(j: Int, shingle: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
         pmod(xxhash64(lit(j), shingle), lit(m))
-      // r22: explicit slice filters below the barrier'd shingle array —
-      // same shape change as evalOverlap (one shingle evaluation per row;
-      // the inferred explode filter reads the materialized column)
+      // slice filters below the shingle projection (the evalOverlap shape)
       val docsAll = Tables.loadSpread(s, dir, "documents")
-      def shx(d: DataFrame): DataFrame = d
-        .select(col("doc_id"),
-          graft.functions.PushdownBarrierF.pushdownBarrier(
-            array_distinct(TextFns.shingles(col("text"), shingleK))).as("sarr"))
-        .select(col("doc_id"), explode(col("sarr")).as("s"))
+      def shx(d: DataFrame): DataFrame =
+        shingleSets(d).select(col("doc_id"), explode(col("sarr")).as("s"))
       val bench = shx(docsAll.filter(col("doc_id") % 97 === 0))
         .select(col("doc_id").as("bench_id"), col("s"))
       val bloom = bench
@@ -900,19 +863,10 @@ object DedupQueries {
       // sequences, since 0*131 + h1 = h1 (parity probe-pinned).
       // sequence(1, size-7) would be DESCENDING for short docs (the m07
       // lesson) — guard to an empty gram list below n tokens.
-      // r22: barrier on the per-token hash array — the gram expression
-      // below reads `hs` three ways (the length gate, the sequence bound,
-      // the slices) and the explode's inferred filter adds a fourth;
-      // without the barrier CollapseProject inlines the md5-transform
-      // into every reference and the whole tokenize+hash pipeline runs
-      // multiple times per row (the d04 CollapseProject finding,
-      // BENCH_NOTES "Retired probes": 5.2 s vs
-      // 0.45 s for that query's equivalent frame). Measured: d15
-      // 1.24 s → 1.03 s total at sf0.1 (PlanCostProbe min-of-5).
+      // barrier: 3 reads + the inferred filter, 1 hash array (BENCH_NOTES "Barrier sites")
       val grams = docs
         .select(col("doc_id"),
-          graft.functions.PushdownBarrierF.pushdownBarrier(
-            transform(col("toks"), t => TextFns.md5Hash32(t))).as("hs"))
+          pushdownBarrier(transform(col("toks"), t => TextFns.md5Hash32(t))).as("hs"))
         .select(col("doc_id"),
           explode(when(size(col("hs")) >= n,
             expr(s"transform(sequence(1, size(hs) - ${n - 1}), " +

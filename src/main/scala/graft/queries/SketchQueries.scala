@@ -242,14 +242,9 @@ object SketchQueries {
       // A row_number cut per source is the identical set (h is distinct
       // within a source, so the order is total), runs on the
       // vocabulary-sized frame, and leaves one shared exchange the exact
-      // branch reuses: 3 tokenizes → 1. The downstream source picks wear
-      // the d04 pushdown barrier: a bare `source === src` predicate is on
-      // the window's PARTITION key, so PushDownPredicates would slide it
-      // below the window (and then below the distinct, and into the
-      // scan), re-splitting the shared subtree per consumer — exactly the
-      // un-sharing this rewrite removes. The barrier pins each pick to
-      // the ≤2k-row window output; value semantics are the predicate's,
-      // verbatim.
+      // branch reuses: 3 tokenizes → 1. Barrier: a bare pick on the
+      // window's partition key would be pushed into the scan, one subtree
+      // per source (BENCH_NOTES "Barrier sites").
       val wk = hashes.withColumn("rn",
         row_number().over(Window.partitionBy(col("source")).orderBy(col("h"))))
         .filter(col("rn") <= k)

@@ -278,15 +278,14 @@ class BenchEmitSpec extends AnyFunSuite {
   test("the canary set spans all three regimes: relational scan-aggs, a " +
       "string-CPU documents query (the r12 blind spot), and TWO shuffle " +
       "queries (the r13 blind spot + the moderate-band corroborator)") {
-    assert(Set("q02", "q16", "q30").subsetOf(Bench.CanaryCleanSf01.keySet))
-    assert(Bench.CanaryCleanSf01.contains("t08"),
-      "r12: the driver window ran the text family 8-35x over pin while " +
-        "canary_x read 1.02 off three lineitem scans — the canary set must " +
-        "include a string-CPU query so that regime is sampled")
-    assert(Set("d01", "d06").subsetOf(Bench.CanaryCleanSf01.keySet),
-      "r13: the dedup family ran 1.9-4.4x while scan/CPU canaries read " +
-        "clean — and a LONE shuffle canary in the moderate 1.75-3x band " +
-        "can never satisfy the >=2-canary rule, so the regime needs two")
+    // scan-aggs q02/q16/q30; t08 because the r12 benchmark window ran the
+    // text family 8-35x over pin while canary_x read 1.02 off three
+    // lineitem scans; d01 AND d06 because the r13 dedup family ran
+    // 1.9-4.4x while scan/CPU canaries read clean, and a LONE shuffle
+    // canary in the moderate 1.75-3x band can never satisfy the
+    // >=2-canary rule
+    assert(Bench.CanaryCleanSf01.keySet ==
+      Set("q02", "q16", "q30", "t08", "d01", "d06"))
     assert(Bench.CanaryCleanSf01.keySet.subsetOf(names.toSet),
       "every canary must be a registry query or its timing never appears")
   }

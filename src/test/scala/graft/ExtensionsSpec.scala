@@ -14,20 +14,7 @@ import graft.functions.TextFns
 class ExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions registers dot_f / minhash_sig / simhash32 / simhash64 / md5_32 / token_count for SQL") {
-    // a FRESH session applies the extensions (the shared SparkSpec session
-    // was built without them); the underlying context is reused. The
-    // programmatic withExtensions path works with a pre-existing
-    // SparkContext — the spark.sql.extensions CONF string is static and
-    // only takes effect when the context itself is created with it, which
-    // in a suite-shared JVM it wasn't (the caveat GraftExtensions docs).
-    val prior = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = GraftSession.builder("local[4]", 4)
-      .appName("graft-ext-test")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    try {
+    ExtensionsSpec.withExtensionsSession { s =>
       val d = s.sql("SELECT dot_f(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS d")
         .head.getDouble(0)
       assert(d == 11.0)
@@ -51,13 +38,6 @@ class ExtensionsSpec extends AnyFunSuite {
       // arity errors must be loud, not silently-null
       val e = intercept[Exception](s.sql("SELECT dot_f(array(1.0F))").collect())
       assert(e.getMessage.contains("dot_f takes 2 arguments"))
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach { p =>
-        SparkSession.setActiveSession(p)
-        SparkSession.setDefaultSession(p)
-      }
     }
   }
 
@@ -80,5 +60,34 @@ class ExtensionsSpec extends AnyFunSuite {
       "spark.graft.cc.localMax")
     assert(inCode == kept, s"conf literals in src/main/scala: $inCode")
     assert(inReadme == kept, s"README configuration table keys: $inReadme")
+  }
+}
+
+object ExtensionsSpec {
+
+  /** Runs `body` in a FRESH session built with [[GraftExtensions]] (the
+    * shared SparkSpec session was built without them; the underlying
+    * context is reused), then restores the prior active/default session.
+    * The programmatic `withExtensions` path works with a pre-existing
+    * SparkContext — the `spark.sql.extensions` CONF string is static and
+    * only takes effect when the context itself is created with it, which
+    * in a suite-shared JVM it wasn't (the caveat GraftExtensions docs). */
+  def withExtensionsSession[T](body: SparkSession => T): T = {
+    val prior = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = GraftSession.builder("local[4]", 4)
+      .appName("graft-ext-test")
+      .withExtensions(new GraftExtensions)
+      .getOrCreate()
+    try body(s)
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prior.foreach { p =>
+        SparkSession.setActiveSession(p)
+        SparkSession.setDefaultSession(p)
+      }
+    }
   }
 }

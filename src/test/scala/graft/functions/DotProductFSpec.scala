@@ -39,11 +39,17 @@ class DotProductFSpec extends SparkSpec {
   }
 
   test("registered SQL function dot_f works and matches") {
-    DotProductF.register(spark)
-    df.where($"a".isNotNull).createOrReplaceTempView("vecs")
-    val out = spark.sql("SELECT id, dot_f(a, b) AS d FROM vecs ORDER BY id")
-      .as[(Long, Double)].collect()
+    val rows = df.where($"a".isNotNull).collect()
+    val out = graft.ExtensionsSpec.withExtensionsSession { s =>
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+        .createOrReplaceTempView("vecs")
+      s.sql("SELECT id, dot_f(a, b) AS d FROM vecs ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    }
+    val viaCol = df.where($"a".isNotNull).orderBy("id")
+      .select($"id", VectorFns.dot($"a", $"b")).as[(Long, Double)].collect().toSeq
     assert(out.head == ((1L, 32.0)))
+    assert(out == viaCol)
   }
 
   test("participates in whole-stage codegen (no fallback)") {

@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.functions.PushdownBarrierF.pushdownBarrier
 
-/** The pushdown barrier's three-part contract: (1) value identity with
-  * its child — interpreted AND codegen paths; (2) the barrier itself —
-  * a `Filter(pushdown_barrier(cond))` stays ABOVE a repartition while
-  * the bare `Filter(cond)` is pushed below it; (3) codegen residency —
-  * the barrier filter plans inside a WholeStageCodegen stage, never as
-  * a standalone row-at-a-time operator (the CollectMetrics failure mode
-  * it replaces on d04's engaged-salt path). */
+/** The pushdown barrier's contracts: (1) value identity with its child —
+  * interpreted AND codegen paths; (2) a barrier'd filter stays put — a
+  * `Filter(pushdown_barrier(cond))` stays ABOVE a repartition while the
+  * bare `Filter(cond)` is pushed below it; (3) a barrier'd projected value
+  * is computed once — the shingle array behind `DedupQueries.shingleSets`
+  * appears once in the optimized plan, and more than once without the
+  * barrier; (4) codegen residency — the barrier filter plans inside a
+  * WholeStageCodegen stage, never as a standalone row-at-a-time operator
+  * (the CollectMetrics failure mode it replaced). */
 class PushdownBarrierFSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,6 +63,28 @@ class PushdownBarrierFSpec extends SparkSpec {
       s"bare predicate should have been pushed below the repartition:\n$bare")
     assert(filterAboveRepartition(barred),
       s"barrier predicate must stay above the repartition:\n$barred")
+  }
+
+  test("a barrier'd projected value is computed once: the shingle array " +
+      "read by size() and explode() appears once in the optimized plan, " +
+      "and more than once unbarriered") {
+    // a Range source, not a local Seq: ConvertToLocalRelation would fold
+    // the projections away before the plan could show them
+    val docs = spark.range(20).select(col("id").as("doc_id"),
+      concat(lit("the quick brown fox jumps over "), col("id").cast("string")).as("text"))
+    def readTwice(sets: org.apache.spark.sql.DataFrame) =
+      sets.select(col("doc_id"), size(col("sarr")).as("c"), explode(col("sarr")).as("s"))
+    def shingleExprs(df: org.apache.spark.sql.DataFrame): Int =
+      "array_distinct\\(".r.findAllMatchIn(df.queryExecution.optimizedPlan.toString).size
+    val barred = readTwice(graft.queries.DedupQueries.shingleSets(docs))
+    val bare = readTwice(docs.select(col("doc_id"), array_distinct(
+      TextFns.shingles(col("text"), MinHashSigF.ShingleK)).as("sarr")))
+    assert(shingleExprs(barred) == 1, barred.queryExecution.optimizedPlan.toString)
+    // the engine-upgrade tripwire: if this optimizer stops copying the
+    // array into its consumers, the projected-value barriers are surplus
+    assert(shingleExprs(bare) > 1, bare.queryExecution.optimizedPlan.toString)
+    assert(barred.orderBy("doc_id", "s").collect().toSeq ==
+      bare.orderBy("doc_id", "s").collect().toSeq)
   }
 
   test("plans inside WholeStageCodegen (no row-at-a-time boundary)") {

@@ -116,6 +116,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.cc.localMax")
   }
 
+  test("a malformed spark.graft.cc.localMax fails naming the key, before " +
+      "the half-edge checkpoint runs") {
+    // evaluating these pairs raises: only a conf check that runs before the
+    // eager checkpoint can surface the key-named error
+    val pairs = Seq((1L, 2L)).toDF("a", "b").withColumn("a",
+      when(col("a") > 0, raise_error(lit("pairs were evaluated"))).otherwise(col("a")))
+    spark.conf.set("spark.graft.cc.localMax", "1M")
+    val e = try intercept[IllegalArgumentException] {
+      ConnectedComponents.resolve(pairs, "a", "b")
+    } finally spark.conf.unset("spark.graft.cc.localMax")
+    assert(e.getMessage == "spark.graft.cc.localMax must be an integer: got '1M'")
+  }
+
   test("null edge endpoints fail loudly on the local path (r22: the " +
       "contract says unsupported — silent skipping could diverge from " +
       "what the distributed joins would do)") {

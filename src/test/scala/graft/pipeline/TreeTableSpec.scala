@@ -84,7 +84,7 @@ class TreeTableSpec extends SparkSpec {
   }
 
   test("translator mapping produces a wide typed row with unit conversion (K20)") {
-    val wide = translate(tree, Seq(
+    val wide = translateOnto(tree, tree.select($"file").distinct(), Seq(
       MappingRule("/entry1/instrument/configuration", "configuration", "f64"),
       MappingRule("/entry1/sample/name", "sample_name", "str"),
       MappingRule("/entry1/detector/distance", "det_distance", "quantity", Some("m"))))

@@ -2,6 +2,9 @@ package graft.probe
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.util.matching.Regex
+
 import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
@@ -16,9 +19,49 @@ import graft.SparkEntry
   * before dumping, so the file holds the FINAL adaptive plan
   * (ReusedExchange nodes, AQE join rewrites) rather than the initial one.
   *
+  * Dumps are written through [[normalize]], so two dumps of the same plan
+  * compare equal with a plain `diff`.
+  *
   * Run: sbt "Test/runMain graft.probe.PlanSnap OUTDIR SUFFIX q1,q2,... [k=v,...]"
   */
 object PlanSnap {
+
+  private val ExprId = """#(\d+)""".r
+  private val CodegenId = """(\[codegen id : |\*\()(\d+)""".r
+  private val PlanId = """\[plan_id=\d+\]""".r
+  private val StageHeader = """^\(\d+\) \w*QueryStage\b.*""".r
+  private val StageArgs = """^Arguments: \d+$""".r
+
+  /** The run-varying ids of a formatted plan, made stable:
+    *   - expression ids `#N` and codegen stage ids (`[codegen id : N]`,
+    *     `*(N)`) are renumbered in first-seen order, so every reference to
+    *     one id still names the same new id;
+    *   - `[plan_id=N]` becomes `[plan_id=_]`;
+    *   - a QueryStage's stage number (its `Arguments: N` line) becomes
+    *     `Arguments: _` — AQE numbers stages in materialization order.
+    * Operator ids `(N)` are kept: they follow the plan's shape. */
+  def normalize(plan: String): String = {
+    def renumber(r: Regex, s: String, seen: mutable.Map[String, Int],
+                 render: (Regex.Match, Int) => String): String =
+      r.replaceAllIn(s, m => Regex.quoteReplacement(
+        render(m, seen.getOrElseUpdate(m.group(m.groupCount), seen.size))))
+    val exprs = mutable.Map.empty[String, Int]
+    val stages = mutable.Map.empty[String, Int]
+    var inQueryStage = false
+    plan.linesWithSeparators.map { raw =>
+      val line = raw.stripLineEnd
+      if (line.startsWith("(")) inQueryStage = StageHeader.matches(line)
+      val out =
+        if (inQueryStage && StageArgs.matches(line)) "Arguments: _"
+        else {
+          val e = renumber(ExprId, line, exprs, (_, i) => s"#$i")
+          val c = renumber(CodegenId, e, stages, (m, i) => s"${m.group(1)}${i + 1}")
+          PlanId.replaceAllIn(c, "[plan_id=_]")
+        }
+      out + raw.substring(line.length)
+    }.mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args(0))
     val execute = args(1).endsWith("!")
@@ -47,7 +90,7 @@ object PlanSnap {
       if (execute) df.queryExecution.toRdd.count()
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), formatted)
+      Files.writeString(outDir.resolve(s"${n}_$suffix.txt"), normalize(formatted))
       println(s"[plansnap] wrote ${n}_$suffix.txt")
     }
     spark.stop()

@@ -674,6 +674,14 @@ class PlanSpec extends SparkSpec {
     finally spark.conf.unset("spark.graft.d05.maxRows")
   }
 
+  test("d05 scale guard: a malformed spark.graft.d05.maxRows fails naming the key") {
+    spark.conf.set("spark.graft.d05.maxRows", "1e6")
+    val e = try intercept[IllegalArgumentException] {
+      SparkEntry.queries("d05")(spark, sf)
+    } finally spark.conf.unset("spark.graft.d05.maxRows")
+    assert(e.getMessage == "spark.graft.d05.maxRows must be an integer: got '1e6'")
+  }
+
   test("d14: prefix dedup hashes a BOUNDED token slice map-side into one " +
       "hash agg — no explode, no join, no text payload through the shuffle") {
     val p = plan("d14")

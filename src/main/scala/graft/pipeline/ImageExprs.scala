@@ -27,7 +27,6 @@ import org.apache.spark.sql.types._
   */
 object ImageExprs {
 
-  private val FloatArray = ArrayType(FloatType, containsNull = false)
   private val DoubleArray = ArrayType(DoubleType, containsNull = false)
   private val Image = ArrayType(FloatType)
 
@@ -49,11 +48,6 @@ object ImageExprs {
       extends Kernel("beamCentroid", Seq(Image, IntegerType, IntegerType), DoubleArray) {
     def call(a: Array[Any]): Any = beamCentroid(img(a(0)), int(a(1)), int(a(2)))
   }
-  case object CircularMask extends Kernel("circularMask",
-      Seq(IntegerType, IntegerType, DoubleType, DoubleType, DoubleType), FloatArray) {
-    def call(a: Array[Any]): Any =
-      circularMask(int(a(0)), int(a(1)), dbl(a(2)), dbl(a(3)), dbl(a(4)))
-  }
   case object BeamAnalysis
       extends Kernel("beamAnalysis", Seq(Image, IntegerType, IntegerType), BeamAnalysisType) {
     def call(a: Array[Any]): Any = beamAnalysis(img(a(0)), int(a(1)), int(a(2)))
@@ -62,9 +56,10 @@ object ImageExprs {
       extends Kernel("fluxSum", Seq(Image, DoubleType, DoubleType), DoubleType) {
     def call(a: Array[Any]): Any = fluxSum(img(a(0)), dbl(a(1)), dbl(a(2)))
   }
-  case object MaskedFluxSum
-      extends Kernel("maskedFluxSum", Seq(Image, DoubleType, DoubleType, Image), DoubleType) {
-    def call(a: Array[Any]): Any = maskedFluxSum(img(a(0)), dbl(a(1)), dbl(a(2)), img(a(3)))
+  case object CircleFluxSum extends Kernel("circleFluxSum", Seq(Image, DoubleType, DoubleType,
+      IntegerType, IntegerType, DoubleType, DoubleType, DoubleType), DoubleType) {
+    def call(a: Array[Any]): Any = circleFluxSum(img(a(0)), dbl(a(1)), dbl(a(2)),
+      int(a(3)), int(a(4)), dbl(a(5)), dbl(a(6)), dbl(a(7)))
   }
   case object NanSum extends Kernel("nanSum", Seq(Image), DoubleType) {
     def call(a: Array[Any]): Any = nanSum(img(a(0)))
@@ -94,25 +89,23 @@ object ImageExprs {
     * when no beam is found. */
   def beamCentroid(img: Column, h: Column, w: Column): Column = build(BeamCentroid, img, h, w)
 
-  /** K5 circular mask of radius `r` around (cy, cx). */
-  def circularMask(h: Column, w: Column, cy: Column, cx: Column, r: Column): Column =
-    build(CircularMask, h, w, cy, cx, r)
-
   /** K6 dynamic beam analysis, a struct shaped as `Model.BeamAnalysis`. */
   def beamAnalysis(img: Column, h: Column, w: Column): Column = build(BeamAnalysis, img, h, w)
 
   /** K7 + K8 `nanSum(fluxImage(img, t, dark))` without the flux image. */
   def fluxSum(img: Column, t: Column, dark: Column): Column = build(FluxSum, img, t, dark)
 
-  /** K7 + K8 `maskedNanSum(fluxImage(img, t, dark), mask)` without the flux
-    * image. */
-  def maskedFluxSum(img: Column, t: Column, dark: Column, mask: Column): Column =
-    build(MaskedFluxSum, img, t, dark, mask)
+  /** K5 + K7 + K8 `maskedNanSum(fluxImage(img, t, dark), circularMask(h, w,
+    * cy, cx, r))` without the flux image or the mask: each pixel's circle
+    * test is made in the sum. */
+  def circleFluxSum(img: Column, t: Column, dark: Column,
+      h: Column, w: Column, cy: Column, cx: Column, r: Column): Column =
+    build(CircleFluxSum, img, t, dark, h, w, cy, cx, r)
 
   /** K8 NaN-skipping sum. */
   def nanSum(img: Column): Column = build(NanSum, img)
 
-  /** K8 NaN-skipping sum of `img * mask`. */
+  /** K8 `img * mask` summed, skipping NaN products. */
   def maskedNanSum(img: Column, mask: Column): Column = build(MaskedNanSum, img, mask)
 
   /** K15 `(float)(v * factor)` per pixel; null pixels stay null. */
@@ -136,10 +129,6 @@ object ImageExprs {
     out
   }
 
-  private def requireSameLength(a: ArrayData, mask: ArrayData): Unit =
-    require(a.numElements() == mask.numElements(),
-      s"image (${a.numElements()} px) and mask (${mask.numElements()} px) dimensions differ")
-
   def beamCentroid(a: ArrayData, h: Int, w: Int): ArrayData = {
     val p = prepared(a)
     val labels = ImageKernels.labelMainFeature(p, h, w)
@@ -151,12 +140,8 @@ object ImageExprs {
     if (cy.isNaN || cx.isNaN) null else UnsafeArrayData.fromPrimitiveArray(Array(cy, cx))
   }
 
-  def circularMask(h: Int, w: Int, cy: Double, cx: Double, r: Double): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(ImageKernels.circularMask(h, w, cy, cx, r))
-
   def beamAnalysis(a: ArrayData, h: Int, w: Int): InternalRow = {
-    // the kernel prepares its input again, which leaves a prepared image as is
-    val b = ImageKernels.dynamicBeamAnalysis(prepared(a), h, w)
+    val b = ImageKernels.preparedBeamAnalysis(prepared(a), h, w)
     new GenericInternalRow(Array[Any](b.comY, b.comX, b.sigmaMinor, b.sigmaMajor,
       b.theta, b.kSigma, b.achievedCoverage, b.regionIntensity, b.totalIntensity,
       UnsafeArrayData.fromPrimitiveArray(b.mask)))
@@ -174,15 +159,25 @@ object ImageExprs {
     s
   }
 
-  def maskedFluxSum(a: ArrayData, t: Double, dark: Double, mask: ArrayData): Double = {
-    requireSameLength(a, mask)
+  /** A flux pixel under the circle adds `f`, as `f * 1f` does in the
+    * oracle; one outside adds nothing, where the oracle adds `f * 0f` (a
+    * signed zero, or a NaN product it skips). */
+  def circleFluxSum(a: ArrayData, t: Double, dark: Double,
+      h: Int, w: Int, cy: Double, cx: Double, r: Double): Double = {
+    require(a.numElements() == h * w,
+      s"image (${a.numElements()} px) and circle ($h x $w px) dimensions differ")
     var s = 0.0
-    var i = 0
-    val n = a.numElements()
-    while (i < n) {
-      val f = (pixel(a, i) / t - dark).toFloat
-      if (!f.isNaN) s += f * pixel(mask, i)
-      i += 1
+    var y = 0
+    while (y < h) {
+      val dy = y - cy
+      var x = 0
+      while (x < w) {
+        val dx = x - cx
+        val f = (pixel(a, y * w + x) / t - dark).toFloat
+        if (!f.isNaN && math.sqrt(dy * dy + dx * dx) <= r) s += f
+        x += 1
+      }
+      y += 1
     }
     s
   }
@@ -200,13 +195,14 @@ object ImageExprs {
   }
 
   def maskedNanSum(a: ArrayData, mask: ArrayData): Double = {
-    requireSameLength(a, mask)
+    require(a.numElements() == mask.numElements(),
+      s"image (${a.numElements()} px) and mask (${mask.numElements()} px) dimensions differ")
     var s = 0.0
     var i = 0
     val n = a.numElements()
     while (i < n) {
-      val v = pixel(a, i)
-      if (!v.isNaN) s += v * pixel(mask, i)
+      val p = pixel(a, i) * pixel(mask, i)
+      if (!p.isNaN) s += p
       i += 1
     }
     s

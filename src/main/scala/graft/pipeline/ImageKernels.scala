@@ -266,7 +266,9 @@ object ImageKernels {
   }
 
   /** K5 circular mask: 1 inside `radius` of (cy, cx)
-    * — `/root/reference/src/processstep_make_beam_mask.py:27-35`. */
+    * — the reference's `processstep_make_beam_mask.py:27-35`. The
+    * pipeline builds no mask image: [[ImageExprs.circleFluxSum]] tests the
+    * same circle per pixel, and this is its oracle (`ImageExprsSpec`). */
   def circularMask(h: Int, w: Int, cy: Double, cx: Double, radius: Double): Array[Float] = {
     val out = new Array[Float](h * w)
     var y = 0
@@ -294,13 +296,17 @@ object ImageKernels {
     * beam region. Returned centroid is the mask-region weighted centroid;
     * `achievedCoverage` = kept / labeled intensity; `totalIntensity` is the
     * prepared whole-image sum. */
-  def dynamicBeamAnalysis(
-      img: Array[Float], h: Int, w: Int,
+  def dynamicBeamAnalysis(img: Array[Float], h: Int, w: Int): BeamAnalysis =
+    preparedBeamAnalysis(prepareImage(img), h, w)
+
+  /** [[dynamicBeamAnalysis]] of a frame [[prepareImage]] has already
+    * prepared, read as it is: preparing is idempotent, so both agree. */
+  def preparedBeamAnalysis(
+      prepared: Array[Float], h: Int, w: Int,
       targetCoverage: Double = 0.997,
       bisectionSteps: Int = 8): BeamAnalysis = {
     val n = h * w
-    require(img.length == n, s"image length ${img.length} != $h x $w")
-    val prepared = prepareImage(img)
+    require(prepared.length == n, s"image length ${prepared.length} != $h x $w")
     val labels = labelMainFeature(prepared, h, w)
     var total = 0.0 // prepared whole-image sum (ITotal_overall)
     var labeled = 0.0 // intensity inside the labeled main feature
@@ -430,7 +436,9 @@ object ImageKernels {
     out
   }
 
-  /** K8 masked NaN-skipping sum — `.py:211-214`. Dimension mismatch fails
+  /** K8 masked NaN-skipping sum, numpy's `nansum(img * mask)` — `.py:211-214`:
+    * a NaN product is skipped, so an infinite pixel under a 0 or a NaN mask
+    * entry drops out instead of poisoning the sum. Dimension mismatch fails
     * loudly (numpy broadcasting would too) instead of truncating or
     * overrunning the mask. */
   def maskedNanSum(img: Array[Float], mask: Array[Float]): Double = {
@@ -439,8 +447,8 @@ object ImageKernels {
     var s = 0.0
     var i = 0
     while (i < img.length) {
-      val v = img(i)
-      if (!v.isNaN) s += v * mask(i)
+      val p = img(i) * mask(i)
+      if (!p.isNaN) s += p
       i += 1
     }
     s

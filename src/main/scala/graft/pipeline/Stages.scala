@@ -53,15 +53,18 @@ object Stages {
 
   /** J1 + K11 + K17: logbook broadcast join, energy, identifiers
     * (`processstep_metadata_update.py`). 'None'/'' dispersant sentinel ->
-    * null key (J4). */
+    * null key (J4). The wavelength goes through the translator's unit
+    * table into angstrom; unknown or null units give a null energy (the
+    * NaN test is needed: Spark orders NaN above every number, so NaN > 0). */
   val metadataUpdate: Stage = (df, ctx) => {
     val lb = ctx.logbook.withColumnRenamed("ymd", "lb_ymd")
+    val angstrom = TreeTable.inUnits(col("incidentWavelength.value"),
+      col("incidentWavelength.units"), "angstrom")
     df.join(broadcast(lb),
         df("ymd") === lb("lb_ymd") && df("batch") === lb("batchnum"), "left")
       .drop("lb_ymd", "batchnum")
       .withColumn("energy_kev",
-        when(col("incidentWavelength.value") > 0,
-          lit(ctx.hcKevAngstrom) / col("incidentWavelength.value")))
+        when(angstrom > 0 && !isnan(angstrom), lit(ctx.hcKevAngstrom) / angstrom))
       .withColumn("collection_identifier",
         concat(col("ymd"), lit("_"), col("batch")))
       .withColumn("background_identifier",
@@ -123,26 +126,25 @@ object Stages {
       when(col("directBeam").isNotNull,
         ImageExprs.beamCentroid(col("directBeam"), col("directH"), col("directW"))))
 
-  /** K5: circular beam mask, radius scaled by distance
+  /** K5: the circular beam mask's geometry, radius scaled by distance
     * (`processstep_make_beam_mask.py:19-35,85-90`); the distance goes
-    * through the translator's unit table (§1.2), unknown units -> NaN. */
+    * through the translator's unit table (§1.2), unknown units -> NaN. The
+    * step emits scalars only: the flux step tests the circle around
+    * `beam_center` per pixel, so no mask image is built. */
   val makeBeamMask: Stage = (df, ctx) => {
     def meters(q: String) = TreeTable.inUnits(col(s"$q.value"), col(s"$q.units"), "m")
     val distance = meters("detX") - meters("sampleX")
     df.withColumn("beam_center_distance_m", distance)
       .withColumn("beam_mask_radius",
         lit(ctx.refBeamDiameterPx / 2.0) * col("beam_center_distance_m") / lit(ctx.refDistanceM))
-      .withColumn("beam_mask",
-        when(col("beam_center").isNotNull && col("beam_center_distance_m") > 0,
-          ImageExprs.circularMask(col("directH"), col("directW"),
-            col("beam_center")(0), col("beam_center")(1), col("beam_mask_radius"))))
   }
 
   /** K6–K10: flux images, dynamic beam analysis, transmissions, scattering
     * probability (`processstep_calc_beam_flux_and_transmissions.py:207-225`).
     *
     * Reference semantics, exactly: `DirectFlux`/`SampleFlux` are the sums
-    * UNDER the circular distance-scaled `beam_mask` (K5, `BeamMaskPath`);
+    * UNDER the circular distance-scaled beam mask (K5, `BeamMaskPath`: radius
+    * `beam_mask_radius` around `beam_center`, on the direct frame's grid);
     * `*_flux_over_image` are the WHOLE-image sums; `Transmission` is the
     * masked ratio, `ImageTransmission` the whole-image ratio, and their
     * quotient is the correction factor (>= 1 for scattering samples). The
@@ -154,15 +156,20 @@ object Stages {
     *
     * The four flux sums read the raw frames and form each flux pixel
     * `(float)(v / t - dark)` on the fly (K7 + K8 fused), so no flux image
-    * is materialized; the per-pixel rounding is the same, so are the sums. */
+    * is materialized; the per-pixel rounding is the same, so are the sums.
+    * The two beam sums test the circle per pixel (K5 fused), so no mask
+    * image is built either. The tight mask leaves `direct_analysis` once the
+    * scattering probability has read it: no mask image outlives the step. */
   val calcFluxAndTransmissions: Stage = (df, _) => {
     val dark = col("darkcurrent")
     def fluxOverImage(img: String, time: String): Column =
       when(col(img).isNotNull && col(time).isNotNull,
         ImageExprs.fluxSum(col(img), col(time), dark))
     def beamFlux(img: String, time: String): Column =
-      when(col(img).isNotNull && col(time).isNotNull && col("beam_mask").isNotNull,
-        ImageExprs.maskedFluxSum(col(img), col(time), dark, col("beam_mask")))
+      when(col(img).isNotNull && col(time).isNotNull &&
+          col("beam_center").isNotNull && col("beam_center_distance_m") > 0,
+        ImageExprs.circleFluxSum(col(img), col(time), dark, col("directH"), col("directW"),
+          col("beam_center")(0), col("beam_center")(1), col("beam_mask_radius")))
     df
       // tight-mask analysis runs on the RAW direct image, as the reference's
       // dynamic_beam_analysis(DirectBeamData) does
@@ -172,8 +179,8 @@ object Stages {
       // whole-image flux sums (reference *FluxOverImage)
       .withColumn("direct_flux_over_image", fluxOverImage("directBeam", "directFrameTime"))
       .withColumn("sample_flux_over_image", fluxOverImage("sampleBeam", "sampleFrameTime"))
-      // beam-masked flux sums (reference DirectFlux/SampleFlux) under the
-      // circular mask built by makeBeamMask — NOT the tight ellipse
+      // beam-masked flux sums (reference DirectFlux/SampleFlux) inside the
+      // circle of makeBeamMask's radius — NOT the tight ellipse
       .withColumn("direct_flux", beamFlux("directBeam", "directFrameTime"))
       .withColumn("sample_flux", beamFlux("sampleBeam", "sampleFrameTime"))
       // K9: transmissions + correction factor
@@ -191,6 +198,7 @@ object Stages {
           ImageExprs.maskedNanSum(col("sampleBeam"), col("direct_analysis.mask"))))
       .withColumn("scattering_probability_estimate",
         (col("__sample_total") - col("__sample_tight")) / col("__sample_total"))
+      .withColumn("direct_analysis", col("direct_analysis").dropFields("mask"))
       .withColumn("sigma_minor", col("direct_analysis.sigmaMinor"))
       .withColumn("sigma_major", col("direct_analysis.sigmaMajor"))
       .withColumn("beam_theta", col("direct_analysis.theta"))

@@ -38,18 +38,17 @@ object TreeTable {
           / size(col("valueArr"))))
 
   /** K20: one declarative translator rule — the HDF5Translator YAML row
-    * (source path, destination column, dtype, destination units). */
+    * (source path, destination column, dtype). A quantity keeps the units
+    * it is stored in; the stages that read it convert ([[inUnits]]). */
   case class MappingRule(
       srcPath: String,
       dstColumn: String,
-      dtype: String, // "f64" | "i32" | "str" | "quantity" | "image" | "image_h" | "image_w"
-      toUnits: Option[String] = None)
+      dtype: String) // "f64" | "i32" | "str" | "quantity" | "image" | "image_h" | "image_w"
 
   /** Fixed unit-conversion table (§1.2 pint equivalent): factor to convert
     * `from` into `to`. Unknown pairs -> NaN (reference warns + degrades). */
   private val conversions: Map[(String, String), Double] = Map(
-    ("m", "m") -> 1.0, ("mm", "m") -> 1e-3, ("cm", "m") -> 1e-2,
-    ("um", "m") -> 1e-6, ("m", "mm") -> 1e3, ("mm", "mm") -> 1.0,
+    ("m", "m") -> 1.0, ("mm", "m") -> 1e-3, ("cm", "m") -> 1e-2, ("um", "m") -> 1e-6,
     ("angstrom", "angstrom") -> 1.0, ("nm", "angstrom") -> 10.0)
 
   /** `value` given in `units`, expressed in `target` through the fixed
@@ -72,7 +71,7 @@ object TreeTable {
     * every file N times at corpus scale. Per rule: K19 mean-if-array
     * coercion for numbers, typed defaults for missing paths and for files
     * absent from the tree (f64 0.0, i32 0, str '', quantity (NaN,
-    * dimensionless)), fixed unit conversions. Image columns (`image`, and
+    * dimensionless)), units as stored. Image columns (`image`, and
     * its `image_h`/`image_w` from the parser's "H,W" `dims` attribute) stay
     * null when missing, which the F2/F6 step gates read as "skip this
     * repetition" (`utilities.py:112-134`). */
@@ -107,14 +106,9 @@ object TreeTable {
         case "i32" => acc.withColumn(rule.dstColumn, coalesce(c, lit(0)))
         case "str" => acc.withColumn(rule.dstColumn, coalesce(c, lit("")))
         case "quantity" =>
-          val v = coalesce(c("value"), lit(Double.NaN))
-          val u = coalesce(c("units"), lit("dimensionless"))
-          val converted = rule.toUnits match {
-            case None => struct(v.as("value"), u.as("units"))
-            case Some(target) =>
-              struct(inUnits(v, u, target).as("value"), lit(target).as("units"))
-          }
-          acc.withColumn(rule.dstColumn, converted)
+          acc.withColumn(rule.dstColumn, struct(
+            coalesce(c("value"), lit(Double.NaN)).as("value"),
+            coalesce(c("units"), lit("dimensionless")).as("units")))
         case _ => acc // image columns: null means missing
       }
     }

@@ -39,6 +39,9 @@ class ImageExprsSpec extends SparkSpec {
     }
   }
 
+  /** Beam circles of radius < 8 centred up to 4 px off the frame, so some
+    * lie partly outside it; every third frame has an infinite pixel in the
+    * corner farthest from its circle, so outside it. */
   private lazy val inputs: Seq[In] = {
     val rnd = new Random(20240115)
     (0 until 24).map { id =>
@@ -47,8 +50,14 @@ class ImageExprsSpec extends SparkSpec {
         case 1 => 0.5f
         case k => (k % 2).toFloat
       })
-      In(id, frame(rnd, beam = id % 6 != 0), H, W, 0.1 + rnd.nextDouble() * 2,
-        rnd.nextDouble() * 3, mask, rnd.nextDouble() * H, rnd.nextDouble() * W,
+      val img = frame(rnd, beam = id % 6 != 0)
+      val (t, dark) = (0.1 + rnd.nextDouble() * 2, rnd.nextDouble() * 3)
+      val (cy, cx) = (rnd.nextDouble() * (H + 8) - 4, rnd.nextDouble() * (W + 8) - 4)
+      if (id % 3 == 1) {
+        val far = (if (cy < H / 2.0) H - 1 else 0) * W + (if (cx < W / 2.0) W - 1 else 0)
+        img(far) = Float.PositiveInfinity
+      }
+      In(id, img, H, W, t, dark, mask, cy, cx,
         rnd.nextDouble() * 8, if (id % 4 == 0) 10.0 else 0.5 + rnd.nextDouble() * 20)
     }
   }
@@ -65,10 +74,10 @@ class ImageExprsSpec extends SparkSpec {
 
   private def natives(df: DataFrame): DataFrame = df.select(col("id"),
     ImageExprs.fluxSum(col("img"), col("t"), col("dark")).as("flux"),
-    ImageExprs.maskedFluxSum(col("img"), col("t"), col("dark"), col("mask")).as("mflux"),
+    ImageExprs.circleFluxSum(col("img"), col("t"), col("dark"),
+      col("h"), col("w"), col("cy"), col("cx"), col("r")).as("cflux"),
     ImageExprs.nanSum(col("img")).as("sum"),
     ImageExprs.maskedNanSum(col("img"), col("mask")).as("msum"),
-    ImageExprs.circularMask(col("h"), col("w"), col("cy"), col("cx"), col("r")).as("circle"),
     ImageExprs.beamCentroid(col("img"), col("h"), col("w")).as("centre"),
     ImageExprs.beamAnalysis(col("img"), col("h"), col("w")).as("ba"),
     ImageExprs.rescale(col("img"), col("n")).as("counts"),
@@ -122,36 +131,42 @@ class ImageExprsSpec extends SparkSpec {
         inputs.foreach { in =>
           val r = rows(in.id)
           val flux = ImageKernels.fluxImage(in.img, in.t, in.dark)
+          val circle = ImageKernels.circularMask(in.h, in.w, in.cy, in.cx, in.r)
           assert(same(r.getDouble(1), ImageKernels.nanSum(flux)), s"flux ${in.id}")
-          assert(same(r.getDouble(2), ImageKernels.maskedNanSum(flux, in.mask)), s"mflux ${in.id}")
+          assert(same(r.getDouble(2), ImageKernels.maskedNanSum(flux, circle)), s"cflux ${in.id}")
           assert(same(r.getDouble(3), ImageKernels.nanSum(in.img)), s"sum ${in.id}")
           assert(same(r.getDouble(4), ImageKernels.maskedNanSum(in.img, in.mask)), s"msum ${in.id}")
-          assert(sameBits(floats(r, 5),
-            ImageKernels.circularMask(in.h, in.w, in.cy, in.cx, in.r).toSeq), s"circle ${in.id}")
 
           val prepared = ImageKernels.prepareImage(in.img)
           val (cy, cx) = ImageKernels.weightedCentroid(prepared,
             ImageKernels.labelMainFeature(prepared, in.h, in.w), in.h, in.w)
-          if (cy.isNaN || cx.isNaN) assert(r.isNullAt(6), s"centre ${in.id}")
+          if (cy.isNaN || cx.isNaN) assert(r.isNullAt(5), s"centre ${in.id}")
           else {
             centred += 1
-            val c = r.getSeq[Double](6)
+            val c = r.getSeq[Double](5)
             assert(same(c(0), cy) && same(c(1), cx), s"centre ${in.id}")
           }
 
           val b = ImageKernels.dynamicBeamAnalysis(in.img, in.h, in.w)
-          val ba = r.getStruct(7)
+          val ba = r.getStruct(6)
           Seq(b.comY, b.comX, b.sigmaMinor, b.sigmaMajor, b.theta, b.kSigma,
             b.achievedCoverage, b.regionIntensity, b.totalIntensity).zipWithIndex.foreach {
             case (v, i) => assert(same(ba.getDouble(i), v), s"analysis field $i ${in.id}")
           }
           assert(sameBits(floats(ba, 9), b.mask.toSeq), s"analysis mask ${in.id}")
 
-          assert(sameBits(floats(r, 8), floats(r, 9)), s"rescale vs transform ${in.id}")
-          assert(sameBits(floats(r, 8), in.img.map(v => (v * in.n).toFloat).toSeq),
+          assert(sameBits(floats(r, 7), floats(r, 8)), s"rescale vs transform ${in.id}")
+          assert(sameBits(floats(r, 7), in.img.map(v => (v * in.n).toFloat).toSeq),
             s"rescale ${in.id}")
         }
         assert(centred > 0 && centred < inputs.length, "both centroid outcomes covered")
+        // a NaN mask entry or an infinite pixel must not make the masked sums
+        // NaN, or the comparisons above would only compare NaN with NaN
+        Seq(2 -> "cflux", 4 -> "msum").foreach { case (i, name) =>
+          val finite = rows.values.map(_.getDouble(i)).count(v => !v.isNaN && !v.isInfinite && v != 0)
+          assert(finite >= inputs.length / 2,
+            s"$name finite and non-zero on $finite of ${inputs.length} rows")
+        }
       }
     }
 
@@ -165,10 +180,10 @@ class ImageExprsSpec extends SparkSpec {
           "array(cast(1 AS float), cast(1 AS float), cast(1 AS float), cast(1 AS float)) AS mask",
           "CASE WHEN id = 0 THEN 0.0d END AS cy", "0.0d AS cx", "1.0d AS r", "3.0d AS n"))
         val rows = natives(df).orderBy("id").collect()
-        (1 to 9).foreach(i => assert(rows(1).isNullAt(i), s"column $i on a null input"))
+        (1 to 8).foreach(i => assert(rows(1).isNullAt(i), s"column $i on a null input"))
         val r = rows(0)
-        assert(sameBits(floats(r, 8), Seq(4.5f, null, -6.75f, Float.NaN)))
-        assert(sameBits(floats(r, 8), floats(r, 9)))
+        assert(sameBits(floats(r, 7), Seq(4.5f, null, -6.75f, Float.NaN)))
+        assert(sameBits(floats(r, 7), floats(r, 8)))
         // a null pixel is a missing pixel in the sums, like NaN
         assert(r.getDouble(3) == 1.5 - 2.25)
         assert(r.getDouble(1) == 0.5 - 1.375)
@@ -180,12 +195,31 @@ class ImageExprsSpec extends SparkSpec {
         val short = frames.withColumn("mask", slice(col("mask"), 1, 7))
         Seq(
           ImageExprs.maskedNanSum(col("img"), col("mask")),
-          ImageExprs.maskedFluxSum(col("img"), col("t"), col("dark"), col("mask"))
+          ImageExprs.circleFluxSum(col("img"), col("t"), col("dark"),
+            col("h"), col("w") + 1, col("cy"), col("cx"), col("r"))
         ).foreach { c =>
           val e = intercept[SparkException](short.select(c).collect())
           assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
             .exists(t => String.valueOf(t.getMessage).contains("dimensions differ")), e)
         }
+      }
+    }
+
+    test(s"$mode: masked sums skip NaN products, as numpy's nansum(img * mask)") {
+      withConf(conf) {
+        // np.nansum(np.array([inf, 1, nan, 2]) * np.array([0, 1, 1, nan])) == 1.0
+        val df = parquet(spark.range(1).selectExpr(
+          "array(cast('Infinity' AS float), cast(1 AS float), cast('NaN' AS float), " +
+            "cast(2 AS float)) AS img",
+          "array(cast(0 AS float), cast(1 AS float), cast(1 AS float), cast('NaN' AS float)) AS mask"))
+        val r = df.select(
+          ImageExprs.maskedNanSum(col("img"), col("mask")),
+          // the 2 x 2 frame under the unit circle around (1, 1): the infinite
+          // pixel (0, 0) lies outside it, the NaN one inside
+          ImageExprs.circleFluxSum(col("img"), lit(1.0), lit(0.0), lit(2), lit(2),
+            lit(1.0), lit(1.0), lit(1.0))).head()
+        assert(r.getDouble(0) == 1.0)
+        assert(r.getDouble(1) == 3.0)
       }
     }
   }

@@ -166,5 +166,9 @@ class ImageKernelsSpec extends AnyFunSuite {
     assert(flux(0) == 4f && flux(1) == 9f)
     assert(ImageKernels.nanSum(flux) == 13.0)
     assert(ImageKernels.maskedNanSum(flux, Array(1f, 0f, 1f)) == 4.0)
+    // NaN products are skipped, as in numpy's nansum(img * mask):
+    // np.nansum(np.array([inf, 1, nan, 2]) * np.array([0, 1, 1, nan])) == 1.0
+    assert(ImageKernels.maskedNanSum(Array(Float.PositiveInfinity, 1f, Float.NaN, 2f),
+      Array(0f, 1f, 1f, Float.NaN)) == 1.0)
   }
 }

@@ -17,6 +17,7 @@ import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableS
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, BroadcastExchangeLike, ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SharedFrames, SparkSpec}
@@ -73,6 +74,18 @@ class PipelineSpec extends SparkSpec {
   test("energy from wavelength (K11): 1.54 A -> ~8.05 keV") {
     val e = processed.select("energy_kev").head().getDouble(0)
     assert(math.abs(e - 8.0509) < 1e-3, s"E=$e")
+    // the wavelength's units are honoured: 0.154 nm is the same 1.54 A, and
+    // an unknown or missing unit gives no energy rather than a wrong one
+    import spark.implicits._
+    val one = Fixtures.repetitions(spark).filter(col("batch") === 1 && col("repetition") === 1)
+      .limit(1).drop("incidentWavelength")
+    val waves = Seq((0, 0.154, "nm"), (1, 1.54, "furlong"), (2, 1.54, null))
+      .toDF("case", "value", "units")
+      .select(col("case"), struct(col("value"), col("units")).as("incidentWavelength"))
+    val got = Stages.metadataUpdate(one.crossJoin(waves), ctx)
+      .select("case", "energy_kev").collect().map(r => r.getInt(0) -> r.get(1)).toMap
+    assert(math.abs(got(0).asInstanceOf[Double] - 8.0509) < 1e-3, s"nm: $got")
+    assert(got(1) == null && got(2) == null, s"unknown/null units: $got")
   }
 
   test("scattering halo: masked vs whole-image transmission split, TCF > 1 applied") {
@@ -349,16 +362,44 @@ class PipelineSpec extends SparkSpec {
 
   /** Every expression the optimized plan evaluates, including the plans of
     * the frames it reads from the cache (the thickness step persists its
-    * input, so the upstream stages sit behind an `InMemoryRelation`). */
+    * input, so the upstream stages sit behind an `InMemoryRelation`), each
+    * cached plan once however many relations read it. */
   private def planExpressions(plan: LogicalPlan): Seq[Expression] = {
     def physical(p: SparkPlan): Seq[Expression] = p.collect {
       case a: AdaptiveSparkPlanExec => physical(a.inputPlan)
       case n => n.expressions
     }.flatten
-    plan.collect {
-      case m: InMemoryRelation => physical(m.cacheBuilder.cachedPlan)
+    val caches = plan.collect { case m: InMemoryRelation => m.cacheBuilder }.distinct
+    (plan.collect {
+      case _: InMemoryRelation => Nil
       case n => n.expressions
-    }.flatten.flatMap(_.collect { case e => e })
+    }.flatten ++ caches.flatMap(c => physical(c.cachedPlan))).flatMap(_.collect { case e => e })
+  }
+
+  test("plan guard: no mask image outlives the flux step; the thickness cache holds 3 images") {
+    val ctx2 = ctx.copy(caches = new SharedFrames.Scope)
+    try {
+      val plan = Stages.run(Fixtures.repetitions(spark), ctx2, Stages.referenceSteps)
+        .queryExecution.optimizedPlan
+      // the thickness step's cache, read by both sides of its join
+      val cached = plan.collect { case m: InMemoryRelation => m }
+      assert(cached.nonEmpty && cached.map(_.cacheBuilder).distinct.size == 1, plan.toString)
+      // every float-array column or struct field of the cached frame
+      def images(t: DataType, path: String): Seq[String] = t match {
+        case ArrayType(FloatType, _) => Seq(path)
+        case st: StructType => st.fields.toSeq.flatMap(f => images(f.dataType, s"$path.${f.name}"))
+        case _ => Nil
+      }
+      val held = cached.head.output.flatMap(a => images(a.dataType, a.name))
+      assert(held.sorted == Seq("directBeam", "mask", "sampleBeam"), held)
+      val analysis = cached.head.output.find(_.name == "direct_analysis")
+        .getOrElse(fail("no direct_analysis")).dataType.asInstanceOf[StructType]
+      assert(analysis.fieldNames.contains("sigmaMinor") && !analysis.fieldNames.contains("mask"))
+      // dropping the field does not evaluate the beam analysis again
+      val kernels = planExpressions(plan).collect { case k: ImageKernelExpr => k.kernel.method }
+      assert(kernels.count(_ == "beamAnalysis") == 1, kernels)
+      assert(!kernels.contains("circularMask"), kernels)
+    } finally ctx2.caches.release()
   }
 
   test("plan guard: image kernels are native expressions, masks join by broadcast") {

@@ -83,15 +83,16 @@ class TreeTableSpec extends SparkSpec {
     } finally spark.conf.set(key, old)
   }
 
-  test("translator mapping produces a wide typed row with unit conversion (K20)") {
+  test("translator mapping keeps quantities in their stored units (K20)") {
     val wide = translateOnto(tree, tree.select($"file").distinct(), Seq(
       MappingRule("/entry1/instrument/configuration", "configuration", "f64"),
       MappingRule("/entry1/sample/name", "sample_name", "str"),
-      MappingRule("/entry1/detector/distance", "det_distance", "quantity", Some("m"))))
+      MappingRule("/entry1/detector/distance", "det_distance", "quantity")))
     val r = wide.filter($"file" === "f1").head()
     assert(r.getDouble(r.fieldIndex("configuration")) == 3.0)
     assert(r.getString(r.fieldIndex("sample_name")) == "caffeine")
-    assert(r.getStruct(r.fieldIndex("det_distance")) == Row(2.5, "m")) // mm -> m
+    // the stages convert (PipelineSpec's make_beam_mask units test)
+    assert(r.getStruct(r.fieldIndex("det_distance")) == Row(2500.0, "mm"))
   }
 
   test("staleGroups picks missing and outdated groups only (F5)") {

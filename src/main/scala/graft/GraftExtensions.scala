@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{DotProductF, Md5Hash32F, Md5Hash60F, MinHashSigF, SimHash64F, SimHashF, TokenCountF}
+import graft.functions.{DotProductF, KernelExpr, TextKernels}
 
 /** SQL surface for the engine's native codegen expressions, injected via
   * `SparkSessionExtensions` — set
@@ -20,14 +20,16 @@ import graft.functions.{DotProductF, Md5Hash32F, Md5Hash60F, MinHashSigF, SimHas
   *
   * Functions:
   *
-  *   - `dot_f(a, b)`        — float-array dot product ([[DotProductF]])
-  *   - `minhash_sig(text)`  — one-pass MinHash signature ([[MinHashSigF]])
-  *   - `simhash32(text)`    — one-pass 32-bit SimHash ([[SimHashF]])
-  *   - `simhash64(text)`    — one-pass 64-bit SimHash as two unsigned
-  *                            32-bit halves `[hi, lo]` ([[SimHash64F]])
-  *   - `md5_32(s)`          — portable 32-bit md5-prefix hash ([[Md5Hash32F]])
-  *   - `md5_60(s)`          — portable 60-bit md5-prefix join-key hash ([[Md5Hash60F]])
-  *   - `token_count(text)`  — zero-allocation whitespace token count ([[TokenCountF]])
+  *   - `dot_f(a, b)` — float-array dot product ([[DotProductF]])
+  *   - every text kernel in [[TextKernels.all]], under its own name, as a
+  *     [[KernelExpr]]: `md5_32(s)` and `md5_60(s)` (portable 32- and 60-bit
+  *     md5-prefix hashes), `token_count(text)` (zero-allocation whitespace
+  *     token count), `minhash_sig(text)` (one-pass MinHash signature),
+  *     `simhash32(text)` and `simhash64(text)` (one-pass 32-bit SimHash and
+  *     64-bit SimHash as two unsigned 32-bit halves `[hi, lo]`)
+  *
+  * A call with the wrong number of arguments fails naming the function
+  * (`md5_32 takes 1 argument, got 2`).
   *
   * This is the integration path for `spark.sql(...)`-only users (BI tools,
   * Thrift/Connect servers, notebook SQL cells) who never touch the Scala
@@ -39,51 +41,19 @@ import graft.functions.{DotProductF, Md5Hash32F, Md5Hash60F, MinHashSigF, SimHas
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, clazz: Class[_]): ExpressionInfo =
-    new ExpressionInfo(clazz.getName, name)
+  private def inject(ext: SparkSessionExtensions, name: String, clazz: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression): Unit =
+    ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(clazz.getName, name),
+      (args: Seq[Expression]) => {
+        require(args.size == arity, s"$name takes $arity argument" +
+          s"${if (arity == 1) "" else "s"}, got ${args.size}")
+        build(args)
+      }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("dot_f"),
-      info("dot_f", classOf[DotProductF]),
-      (args: Seq[Expression]) => {
-        require(args.size == 2, s"dot_f takes 2 arguments, got ${args.size}")
-        DotProductF(args.head, args(1))
-      }))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      info("minhash_sig", classOf[MinHashSigF]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"minhash_sig takes 1 argument, got ${args.size}")
-        MinHashSigF(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("md5_32"),
-      info("md5_32", classOf[Md5Hash32F]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"md5_32 takes 1 argument, got ${args.size}")
-        Md5Hash32F(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("md5_60"),
-      info("md5_60", classOf[Md5Hash60F]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"md5_60 takes 1 argument, got ${args.size}")
-        Md5Hash60F(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("token_count"),
-      info("token_count", classOf[TokenCountF]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"token_count takes 1 argument, got ${args.size}")
-        TokenCountF(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("simhash32"),
-      info("simhash32", classOf[SimHashF]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"simhash32 takes 1 argument, got ${args.size}")
-        SimHashF(args.head)
-      }))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", classOf[SimHash64F]),
-      (args: Seq[Expression]) => {
-        require(args.size == 1, s"simhash64 takes 1 argument, got ${args.size}")
-        SimHash64F(args.head)
-      }))
+    inject(ext, "dot_f", classOf[DotProductF], 2)(a => DotProductF(a.head, a(1)))
+    TextKernels.all.foreach { k =>
+      inject(ext, k.method, classOf[KernelExpr], k.inputTypes.length)(KernelExpr(k, _))
+    }
   }
 }

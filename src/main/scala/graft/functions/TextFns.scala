@@ -19,14 +19,11 @@ object TextFns {
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** `size(tokens(text))` without the regex or the token array — the
-    * native [[TokenCountF]] expression, for counting-ONLY call sites
+    * native [[TextKernels.token_count]] kernel, for counting-ONLY call sites
     * (packing/shard/budget/mixture token sums). Value-identical to the
-    * composed form by the property-tested parity contract on
-    * TokenCountF. Returns int, like `size`. */
-  def tokenCount(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(TokenCountF(expression(text)))
-  }
+    * composed form by its property-tested parity contract. Returns int,
+    * like `size`. */
+  def tokenCount(text: Column): Column = TextKernels.TokenCount(text)
 
   /** Word k-shingles as space-joined strings: one per window of k
     * consecutive tokens. Empty when the document has fewer than k tokens. */
@@ -40,9 +37,6 @@ object TextFns {
         i => concat_ws(" ", slice(toks, i, lit(k)))))
   }
 
-  /** Portable 32-bit hash of a string: first 8 hex chars of md5 as a long.
-    * Identical in DuckDB as ('0x' || substr(md5(s),1,8))::BIGINT (verified).
-    * Seeded variant prefixes the seed so hash families are independent. */
   /** [[md5Hash32]] with a COLUMN key (e.g. the CMS hash-row index): the
     * same portable first-8-hex-chars construction over "<key>:<s>" —
     * DuckDB: ('0x'||substr(md5(key||':'||s),1,8))::BIGINT. Built with
@@ -52,27 +46,24 @@ object TextFns {
   def md5Hash32Keyed(key: Column, s: Column): Column =
     hash32(concat(key.cast("string"), lit(":"), s))
 
+  /** Portable 32-bit hash of a string: first 8 hex chars of md5 as a long.
+    * Identical in DuckDB as ('0x' || substr(md5(s),1,8))::BIGINT (verified).
+    * Seeded variant prefixes the seed so hash families are independent. */
   def md5Hash32(s: Column, seed: Int = 0): Column =
     hash32(if (seed == 0) s else concat(lit(s"$seed:"), s))
 
-  /** The 60-bit corpus-scale JOIN-KEY hash — the native [[Md5Hash60F]]
-    * expression (first 15 md5 hex chars; see its Scaladoc for the
-    * 60-vs-32-vs-64 bit rationale). DuckDB:
+  /** The 60-bit corpus-scale JOIN-KEY hash — the native
+    * [[TextKernels.md5_60]] kernel (first 15 md5 hex chars; see its
+    * Scaladoc for the 60-vs-32-vs-64 bit rationale). DuckDB:
     * ('0x'||substr(md5(s),1,15))::BIGINT. */
-  def md5Hash60(s: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(Md5Hash60F(expression(s)))
-  }
+  def md5Hash60(s: Column): Column = TextKernels.Md5_60(s)
 
-  /** The hash kernel behind both forms: the native codegen [[Md5Hash32F]]
-    * expression (digest bytes 0–3 big-endian, no 32-char hex
-    * materialization + re-parse per call — the composed
-    * `conv(substring(md5(s),1,8),16,10)` chain it replaces, value-
-    * identical by construction and property-tested against it). */
-  private def hash32(s: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(Md5Hash32F(expression(s)))
-  }
+  /** The hash kernel behind both forms: the native [[TextKernels.md5_32]]
+    * kernel (digest bytes 0–3 big-endian, no 32-char hex materialization +
+    * re-parse per call — the composed `conv(substring(md5(s),1,8),16,10)`
+    * chain it replaces, value-identical by construction and property-tested
+    * against it). */
+  private def hash32(s: Column): Column = TextKernels.Md5_32(s)
 
   /** MinHash signature value for one hash family: min over shingles of the
     * seeded portable hash. Null-safe: empty shingle set -> null. */
@@ -80,34 +71,25 @@ object TextFns {
     array_min(transform(shingleCol, s => md5Hash32(s, seed)))
 
   /** Full per-document MinHash signature in one map-side pass — the native
-    * codegen expression [[MinHashSigF]]: array<long> of
+    * [[TextKernels.minhash_sig]] kernel: array<long> of
     * [distinct_shingle_count, band minima 1..6], null when the document
     * has no 3-shingles. Value-identical to the explode + md5Hash32 +
     * groupBy chain (the DuckDB oracle's formulation). */
-  def minhashSig(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(MinHashSigF(expression(text)))
-  }
+  def minhashSig(text: Column): Column = TextKernels.MinhashSig(text)
 
-  /** 32-bit Charikar SimHash in one map-side pass — the native codegen
-    * expression [[SimHashF]]. Value-identical to the explode + md5Hash32 +
-    * 32-conditional-sum groupBy chain (the DuckDB oracle's formulation)
-    * and to [[simHash32]]'s HOF form. */
-  def simhashNative(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(SimHashF(expression(text)))
-  }
+  /** 32-bit Charikar SimHash in one map-side pass — the native
+    * [[TextKernels.simhash32]] kernel. Value-identical to the explode +
+    * md5Hash32 + 32-conditional-sum groupBy chain (the DuckDB oracle's
+    * formulation) and to [[simHash32]]'s HOF form. */
+  def simhashNative(text: Column): Column = TextKernels.Simhash32(text)
 
   /** 64-bit Charikar SimHash as two unsigned 32-bit halves
-    * `[simhash_hi, simhash_lo]` in one map-side pass — the native codegen
-    * expression [[SimHash64F]] (the d08-scale signature; see its Scaladoc
-    * for the band-space rationale). Value-identical to the explode +
-    * two-md5-hex-slice + 64-conditional-sum groupBy chain (the DuckDB
-    * oracle's formulation). */
-  def simhash64Native(text: Column): Column = {
-    import org.apache.spark.sql.GraftColumnBridge._
-    column(SimHash64F(expression(text)))
-  }
+    * `[simhash_hi, simhash_lo]` in one map-side pass — the native
+    * [[TextKernels.simhash64]] kernel (the d08-scale signature; see its
+    * Scaladoc for the band-space rationale). Value-identical to the
+    * explode + two-md5-hex-slice + 64-conditional-sum groupBy chain (the
+    * DuckDB oracle's formulation). */
+  def simhash64Native(text: Column): Column = TextKernels.Simhash64(text)
 
   /** 32-bit SimHash over a token array. For each bit b, sum +1/-1 according
     * to bit b of each token's hash; bit set in the result when the sum is

@@ -5,12 +5,11 @@ import java.security.MessageDigest
 
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The single shared tokenize/hash core behind the map-side signature
-  * expressions ([[MinHashSigF]], [[SimHashF]]): exactly one copy of the
-  * oracle-parity contract — `split(trim(text), "\\s+")` tokenization and
-  * the md5-hex-prefix 32-bit hash ([[TextFns.md5Hash32]]) — so the two
-  * expressions cannot drift apart, and one MessageDigest per thread
-  * instead of a provider lookup per row on the scan hot path. */
+/** The single shared tokenize/hash core behind the [[TextKernels]]: exactly
+  * one copy of the oracle-parity contract — `split(trim(text), "\\s+")`
+  * tokenization and the md5-hex-prefix hashes ([[TextFns.md5Hash32]]) — so
+  * the kernels cannot drift apart, and one MessageDigest per thread instead
+  * of a provider lookup per row on the scan hot path. */
 private[functions] object TextHash {
 
   private val digest = new ThreadLocal[MessageDigest] {
@@ -31,14 +30,10 @@ private[functions] object TextHash {
   def md5_32(s: String): Long =
     md5_32bytes(s.getBytes(StandardCharsets.UTF_8))
 
-  /** [[md5_32]] over a UTF8String WITHOUT the String round-trip: a
-    * UTF8String already IS the UTF-8 bytes md5 consumes, so decoding to
-    * a Java String and re-encoding is two allocations of pure waste on
-    * the scan hot path ([[Md5Hash32F]]'s per-call input). Byte-identical
-    * to the String form by construction. */
-  def md5_32(u: UTF8String): Long = md5_32bytes(u.getBytes)
-
-  private def md5_32bytes(bytes: Array[Byte]): Long = {
+  /** [[md5_32]] over UTF-8 bytes: a UTF8String already IS the bytes md5
+    * consumes, so the `md5_32`/`md5_60` kernels hash it without a Java
+    * String round-trip. */
+  def md5_32bytes(bytes: Array[Byte]): Long = {
     val d = digest.get().digest(bytes)
     ((d(0) & 0xFFL) << 24) | ((d(1) & 0xFFL) << 16) |
       ((d(2) & 0xFFL) << 8) | (d(3) & 0xFFL)
@@ -55,16 +50,8 @@ private[functions] object TextHash {
   def md5_64(s: String): Long =
     md5_64bytes(s.getBytes(StandardCharsets.UTF_8))
 
-  /** First FIFTEEN hex chars of md5(s) as an unsigned 60-bit value in a
-    * Long — the BIGINT-safe wide join key ([[Md5Hash60F]]'s kernel): 60
-    * bits never touch the sign bit, so the identical
-    * `('0x'||substr(md5(s),1,15))::BIGINT` runs in the DuckDB oracle.
-    * Equals the top 60 bits of the packed [[md5_64]] value (15 hex chars
-    * = digest bytes 0–6 plus the high nibble of byte 7 = the 64-bit
-    * prefix shifted right 4). */
-  def md5_60(u: UTF8String): Long = md5_64bytes(u.getBytes) >>> 4
-
-  private def md5_64bytes(bytes: Array[Byte]): Long = {
+  /** [[md5_64]] over UTF-8 bytes. */
+  def md5_64bytes(bytes: Array[Byte]): Long = {
     val d = digest.get().digest(bytes)
     ((d(0) & 0xFFL) << 56) | ((d(1) & 0xFFL) << 48) |
       ((d(2) & 0xFFL) << 40) | ((d(3) & 0xFFL) << 32) |

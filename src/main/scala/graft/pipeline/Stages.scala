@@ -152,7 +152,10 @@ object Stages {
     * intensity with its intensity under the direct beam's TIGHT 0.997-
     * coverage dynamic-analysis mask. All image kernels are null-gated (F2):
     * a repetition missing an image flows to the canStack quarantine
-    * instead of failing the task.
+    * instead of failing the task. So does one whose beam distance is NaN
+    * (a unit outside the table): Spark orders NaN above every number, so
+    * `> 0` alone would pass it, and its empty circle would make
+    * `direct_flux` 0 and the transmission a division by zero.
     *
     * The four flux sums read the raw frames and form each flux pixel
     * `(float)(v / t - dark)` on the fly (K7 + K8 fused), so no flux image
@@ -167,7 +170,8 @@ object Stages {
         ImageExprs.fluxSum(col(img), col(time), dark))
     def beamFlux(img: String, time: String): Column =
       when(col(img).isNotNull && col(time).isNotNull &&
-          col("beam_center").isNotNull && col("beam_center_distance_m") > 0,
+          col("beam_center").isNotNull && col("beam_center_distance_m") > 0 &&
+          !isnan(col("beam_center_distance_m")),
         ImageExprs.circleFluxSum(col(img), col(time), dark, col("directH"), col("directW"),
           col("beam_center")(0), col("beam_center")(1), col("beam_mask_radius")))
     df

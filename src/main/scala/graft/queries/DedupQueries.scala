@@ -95,9 +95,9 @@ object DedupQueries {
 
   private val nBands = 6
   // d04 intersects TextFns.shingles(text, shingleK) against the distinct
-  // counts MinHashSigF emits, and MinHashSigF compiles its shingle width
+  // counts minhash_sig emits, and minhash_sig compiles its shingle width
   // in — the two MUST agree or jaccard denominators silently diverge
-  private val shingleK = graft.functions.MinHashSigF.ShingleK
+  private val shingleK = graft.functions.TextKernels.ShingleK
 
   /** `(doc_id, sarr)`: each document's distinct `shingleK`-shingle array,
     * behind the barrier so `size`, `explode` and the explode's inferred
@@ -120,8 +120,8 @@ object DedupQueries {
     * agreement count the verified frame had discarded — the second most
     * expensive query in the suite, for zero new scans' worth of insight.
     *
-    * Signatures come from the native codegen expression
-    * [[graft.functions.MinHashSigF]]: distinct-shingle count + all 6 band
+    * Signatures come from the native codegen kernel
+    * [[graft.functions.TextKernels.minhash_sig]]: distinct-shingle count + all 6 band
     * minima in ONE map-side pass per document — no shingle explode and no
     * aggregation exchange. The declarative form this replaced
     * (explode(array_distinct(shingles)) -> md5 per shingle ->
@@ -129,7 +129,7 @@ object DedupQueries {
     * than the corpus itself; at 100 TB the signature stage alone would
     * re-shuffle more bytes than the input. Value parity with the DuckDB
     * oracle's explode formulation is exact (documented clause-by-clause on
-    * the expression, property-tested in `MinHashSigFSpec`).
+    * the kernel, property-tested against the explode chain).
     *
     * The verify join then explodes shingles for CANDIDATE documents only
     * (left-semi prune first): candidate density x doc length, not corpus
@@ -288,11 +288,11 @@ object DedupQueries {
       .filter(col("jaccard") >= 0.5)
 
   /** 64-bit Charikar SimHash per document as two unsigned 32-bit halves —
-    * the native codegen expression [[graft.functions.SimHash64F]]: one
+    * the native codegen kernel [[graft.functions.TextKernels.simhash64]]: one
     * map-side pass per document, no token explode and no
     * 64-conditional-sum aggregation exchange (the declarative form
     * re-shuffled the corpus re-keyed one row per word; value parity is
-    * property-tested in `SimHash64FSpec`). The r16 ×1000 probe migrated
+    * property-tested against the explode chain). The r16 ×1000 probe migrated
     * this chain from 32 to 64 bits: d08's band-key space is fixed by the
     * signature width, and 4×8-bit bands (1,024 keys) meant candidate
     * products n²/256 — 4×16-bit bands (262,144 keys) bring occupancy to
@@ -510,7 +510,7 @@ object DedupQueries {
       // exchange both self-join sides already share) and coShinglePairs
       // aggregates it back out as ca/cb. The r21 shape derived the counts
       // from a SECOND full corpus scan + the signature kernel
-      // (MinHashSigF slot 0 — value-parity with size-of-distinct is that
+      // (minhash_sig slot 0 — value-parity with size-of-distinct is that
       // spec's property) and paid two joins to attach them; at 100 TB
       // that was a whole extra corpus pass for numbers the explode
       // already knew. Docs with zero shingles explode to nothing and
@@ -1117,7 +1117,7 @@ object DedupQueries {
   // sims(doc_id, simhash)
   // 64-bit simhash as two overflow-safe 32-bit halves: hv_hi from md5 hex
   // chars 1-8, hv_lo from chars 9-16, vote bits per half — mirrors
-  // SimHash64F exactly (a single 64-bit value would sign-overflow BIGINT
+  // simhash64 exactly (a single 64-bit value would sign-overflow BIGINT
   // on bit 63 in this pow/%-arithmetic formulation).
   private def simhashSqlCtes =
     s"""tk AS (

@@ -10,8 +10,8 @@ import graft.functions.TextFns
   * counterpart of the batch d02 MinHash+LSH pass (SURVEY LLM extension,
   * §2.9 state family).
   *
-  * Signatures are computed map-side by the same codegen `MinHashSigF`
-  * expression the batch path uses (one row in, one signature out — no
+  * Signatures are computed map-side by the same codegen `minhash_sig`
+  * kernel the batch path uses (one row in, one signature out — no
   * shuffle, no shingle explode), then each of the 6 LSH bands becomes a
   * state key: the FIRST document ever seen in a (band, bucket) owns it, and
   * every later arrival is emitted as a candidate pair against that owner —
@@ -100,7 +100,7 @@ object StreamDedup {
                     minShared: Int = 2): DataFrame = {
     val sh = docs.select(col("doc_id").cast("long").as("doc_id"),
       explode(array_distinct(
-        TextFns.shingles(col("text"), graft.functions.MinHashSigF.ShingleK))).as("s"))
+        TextFns.shingles(col("text"), graft.functions.TextKernels.ShingleK))).as("s"))
     val hits =
       sh.join(broadcast(evalShingles.select(col("bench_id"), col("s"))), Seq("s"))
     // the stateful replay-dedup only exists for streams: in batch the

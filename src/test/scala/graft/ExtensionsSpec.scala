@@ -1,15 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.TextFns
+import graft.functions.{TextFns, TextKernels}
 
 /** The pure-SQL surface: `GraftExtensions` must make the native codegen
   * expressions callable through `spark.sql` with values identical to the
   * Column-API wrappers (same Expression class — parity is by construction,
-  * asserted anyway as the registration contract).
+  * asserted anyway as the registration contract) for every function in
+  * `TextKernels.all`.
   */
 class ExtensionsSpec extends AnyFunSuite {
 
@@ -19,25 +20,32 @@ class ExtensionsSpec extends AnyFunSuite {
         .head.getDouble(0)
       assert(d == 11.0)
 
+      // every registered text kernel: SQL == its Column-API helper, and a
+      // new kernel without a helper here fails the key-set check
+      val helpers: Map[String, Column => Column] = Map(
+        "md5_32" -> (c => TextFns.md5Hash32(c)),
+        "md5_60" -> TextFns.md5Hash60,
+        "token_count" -> TextFns.tokenCount,
+        "minhash_sig" -> TextFns.minhashSig,
+        "simhash32" -> TextFns.simhashNative,
+        "simhash64" -> TextFns.simhash64Native)
+      assert(helpers.keySet == TextKernels.all.map(_.method).toSet)
       import s.implicits._
-      val docs = Seq("key agg row scan key agg", "a", "").toDF("text")
+      val docs = Seq("key agg row scan key agg", "a", "", null).toDF("text")
       docs.createOrReplaceTempView("ext_docs")
-      val viaSql = s.sql(
-        "SELECT minhash_sig(text) AS sig, simhash32(text) AS sh, " +
-          "simhash64(text) AS sh64, " +
-          "md5_32(text) AS h, token_count(text) AS tc FROM ext_docs")
+      val names = TextKernels.all.map(_.method)
+      val viaSql = s.sql(names.map(n => s"$n(text) AS $n").mkString("SELECT ", ", ", " FROM ext_docs"))
         .collect()
-      val viaCol = docs.select(
-        TextFns.minhashSig(col("text")).as("sig"),
-        TextFns.simhashNative(col("text")).as("sh"),
-        TextFns.simhash64Native(col("text")).as("sh64"),
-        TextFns.md5Hash32(col("text")).as("h"),
-        TextFns.tokenCount(col("text")).as("tc")).collect()
+      val viaCol = docs.select(names.map(n => helpers(n)(col("text")).as(n)): _*).collect()
       assert(viaSql.map(_.toString).toSeq == viaCol.map(_.toString).toSeq)
 
-      // arity errors must be loud, not silently-null
+      // arity errors must be loud, not silently-null, and name the function
       val e = intercept[Exception](s.sql("SELECT dot_f(array(1.0F))").collect())
-      assert(e.getMessage.contains("dot_f takes 2 arguments"))
+      assert(e.getMessage.contains("dot_f takes 2 arguments, got 1"), e.getMessage)
+      names.foreach { n =>
+        val e = intercept[Exception](s.sql(s"SELECT $n('a', 'b')").collect())
+        assert(e.getMessage.contains(s"$n takes 1 argument, got 2"), e.getMessage)
+      }
     }
   }
 

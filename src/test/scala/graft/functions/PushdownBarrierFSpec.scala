@@ -78,7 +78,7 @@ class PushdownBarrierFSpec extends SparkSpec {
       "array_distinct\\(".r.findAllMatchIn(df.queryExecution.optimizedPlan.toString).size
     val barred = readTwice(graft.queries.DedupQueries.shingleSets(docs))
     val bare = readTwice(docs.select(col("doc_id"), array_distinct(
-      TextFns.shingles(col("text"), MinHashSigF.ShingleK)).as("sarr")))
+      TextFns.shingles(col("text"), TextKernels.ShingleK)).as("sarr")))
     assert(shingleExprs(barred) == 1, barred.queryExecution.optimizedPlan.toString)
     // the engine-upgrade tripwire: if this optimizer stops copying the
     // array into its consumers, the projected-value barriers are surplus

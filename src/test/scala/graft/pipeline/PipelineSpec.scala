@@ -21,6 +21,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, FloatType, StructType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.{SharedFrames, SparkSpec}
+import graft.functions.KernelExpr
 
 /** End-to-end: Gaussian fixtures through the full stage chain + stacker,
   * asserting the derived physics against analytic expectations
@@ -289,6 +290,27 @@ class PipelineSpec extends SparkSpec {
     assert(good.count() == 6 && bad.count() == 6)
   }
 
+  test("a detX unit outside the unit table sends its repetition to the quarantine; the rest stack") {
+    // the NaN distance (Spark orders NaN above every number, so NaN > 0)
+    // must not reach the flux circle: a zero direct_flux would fail the
+    // whole pass with DIVIDE_BY_ZERO under ANSI
+    val odd = col("batch") === 1 && col("configuration") === 1 && col("repetition") === 2
+    val reps = Fixtures.repetitions(spark).withColumn("detX",
+      when(odd, struct(col("detX.value").as("value"), lit("furlong").as("units")))
+        .otherwise(col("detX")))
+    val out = Stages.run(reps, ctx).cache()
+    try {
+      val bad = out.filter(!Stages.canStack)
+        .select("batch", "configuration", "repetition", "transmission").collect()
+      assert(bad.toSeq == Seq(Row(1, 1, 2, null)), bad.mkString(", "))
+      val stacked = Stages.registry("stacker")(out, ctx)
+        .select("batch", "configuration", "repetitions").collect()
+        .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Int](2)).toMap
+      assert(stacked == Map((1, 1) -> Seq(1, 3), (1, 2) -> Seq(1, 2, 3),
+        (2, 1) -> Seq(1, 2, 3), (2, 2) -> Seq(1, 2, 3)), stacked)
+    } finally out.unpersist()
+  }
+
   test("S10: MOUSE_settings.yaml-shaped file parses into the typed carrier") {
     // the reference settings-file shape: comments, quoted paths, flat keys
     val yaml =
@@ -396,7 +418,7 @@ class PipelineSpec extends SparkSpec {
         .getOrElse(fail("no direct_analysis")).dataType.asInstanceOf[StructType]
       assert(analysis.fieldNames.contains("sigmaMinor") && !analysis.fieldNames.contains("mask"))
       // dropping the field does not evaluate the beam analysis again
-      val kernels = planExpressions(plan).collect { case k: ImageKernelExpr => k.kernel.method }
+      val kernels = planExpressions(plan).collect { case k: KernelExpr => k.kernel.method }
       assert(kernels.count(_ == "beamAnalysis") == 1, kernels)
       assert(!kernels.contains("circularMask"), kernels)
     } finally ctx2.caches.release()
@@ -407,7 +429,7 @@ class PipelineSpec extends SparkSpec {
     try {
       val out = Stages.run(Fixtures.repetitions(spark), ctx2, Stages.referenceSteps)
       val exprs = planExpressions(out.queryExecution.optimizedPlan)
-      assert(exprs.exists(_.isInstanceOf[ImageKernelExpr]))
+      assert(exprs.exists(_.isInstanceOf[KernelExpr]))
       assert(!exprs.exists(_.isInstanceOf[ArrayTransform]), "no interpreted transform")
       val udfs = exprs.collect { case u: ScalaUDF => u.udfName }
       assert(udfs.nonEmpty && udfs.forall(_.contains(Stages.CompositionUdfName)),

@@ -23,6 +23,7 @@ import graft.SparkEntry
   * compare equal with a plain `diff`.
   *
   * Run: sbt "Test/runMain graft.probe.PlanSnap OUTDIR SUFFIX q1,q2,... [k=v,...]"
+  * (`all` in place of the list: every `SparkEntry.queries` key, sorted)
   */
 object PlanSnap {
 
@@ -31,6 +32,8 @@ object PlanSnap {
   private val PlanId = """\[plan_id=\d+\]""".r
   private val StageHeader = """^\(\d+\) \w*QueryStage\b.*""".r
   private val StageArgs = """^Arguments: \d+$""".r
+  private val LambdaObj = """\$\$Lambda\S*?@[0-9a-f]+""".r
+  private val RddId = """RDD\[\d+\]""".r
 
   /** The run-varying ids of a formatted plan, made stable:
     *   - expression ids `#N` and codegen stage ids (`[codegen id : N]`,
@@ -38,7 +41,11 @@ object PlanSnap {
     *     one id still names the same new id;
     *   - `[plan_id=N]` becomes `[plan_id=_]`;
     *   - a QueryStage's stage number (its `Arguments: N` line) becomes
-    *     `Arguments: _` — AQE numbers stages in materialization order.
+    *     `Arguments: _` — AQE numbers stages in materialization order;
+    *   - a typed operator's function object (`Foo$$$Lambda$N/0x...@hash`,
+    *     named by class-load order and identity hash) becomes
+    *     `Foo$$$Lambda@_`, and an RDD's id (`MapPartitionsRDD[N]`, counted
+    *     across every query the JVM ran before) becomes `RDD[_]`.
     * Operator ids `(N)` are kept: they follow the plan's shape. */
   def normalize(plan: String): String = {
     def renumber(r: Regex, s: String, seen: mutable.Map[String, Int],
@@ -56,7 +63,9 @@ object PlanSnap {
         else {
           val e = renumber(ExprId, line, exprs, (_, i) => s"#$i")
           val c = renumber(CodegenId, e, stages, (m, i) => s"${m.group(1)}${i + 1}")
-          PlanId.replaceAllIn(c, "[plan_id=_]")
+          val p = PlanId.replaceAllIn(c, "[plan_id=_]")
+          RddId.replaceAllIn(LambdaObj.replaceAllIn(p, Regex.quoteReplacement("$$Lambda@_")),
+            Regex.quoteReplacement("RDD[_]"))
         }
       out + raw.substring(line.length)
     }.mkString
@@ -66,7 +75,8 @@ object PlanSnap {
     val outDir = Paths.get(args(0))
     val execute = args(1).endsWith("!")
     val suffix = args(1).stripSuffix("!")
-    val names = args(2).split(',').toSeq
+    val names =
+      if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted else args(2).split(',').toSeq
     val confs = args.lift(3).toSeq.flatMap(_.split(',')).map { kv =>
       val Array(k, v) = kv.split("=", 2); (k, v)
     }

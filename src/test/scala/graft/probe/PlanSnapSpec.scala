@@ -58,4 +58,18 @@ class PlanSnapSpec extends AnyFunSuite {
     // so does a change of codegen stage membership
     assert(PlanSnap.normalize(plan(0, 1, 62, (1, 1), 1, 0)) != a)
   }
+
+  test("object identities normalize away: a typed operator's function " +
+      "object keeps its defining class, an RDD keeps its kind") {
+    def plan(lambda: String, rdd: Int) =
+      s"(3) MapElements\nArguments: graft.queries.MultimodalQueries$$$$$$Lambda$lambda, " +
+        s"obj#2: scala.Tuple4\n(4) Scan ExistingRDD\nArguments: [doc_id#0L], " +
+        s"MapPartitionsRDD[$rdd] at localCheckpoint at SharedFrames.scala:76\n"
+    val a = PlanSnap.normalize(plan("$5404/0x00007f79313ca3c8@7725289d", 2230))
+    assert(a == PlanSnap.normalize(plan("$5358/0x00007fbc9d5243c8@8fecbbe", 2224)))
+    assert(a == PlanSnap.normalize(plan("/0x00007fbc9d5243c8@8fecbbe", 1)), a)
+    assert(a.contains("Arguments: graft.queries.MultimodalQueries$$$Lambda@_, obj#0: scala.Tuple4"), a)
+    assert(a.contains("MapPartitionsRDD[_] at localCheckpoint at SharedFrames.scala:76"), a)
+    assert(PlanSnap.normalize(plan("$1/0x1@2", 1).replace("Multimodal", "Text")) != a)
+  }
 }

@@ -30,11 +30,4 @@ object GraftSession {
       v.toLongOption.getOrElse(
         throw new IllegalArgumentException(s"$key must be an integer: got '$v'"))
     }
-
-  /** Apply the nanosAsLong + tz conf to an existing session (Verify/Bench
-    * are handed a session by the driver-style mains). */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark
-  }
 }

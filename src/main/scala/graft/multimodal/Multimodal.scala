@@ -197,11 +197,4 @@ object Multimodal {
     media.filter(col("kind") === "video" && col("nFrames") > 0)
       .withColumn("frame_idx",
         explode(sequence(lit(0), col("nFrames") - 1, lit(everyK))))
-
-  /** Scale posture: media tables are partitioned/bucketed by mediaId so
-    * decode stages are embarrassingly parallel and co-partitioned with any
-    * per-media joins; payload bytes stay columnar in parquet (binary) and
-    * are pruned away by any query touching only metadata. */
-  def repartitionForDecode(media: DataFrame, partitions: Int): DataFrame =
-    media.repartition(partitions, col("mediaId"))
 }

@@ -9,6 +9,10 @@ import org.apache.spark.sql.types._
 import graft.functions.Kernel
 
 /** The per-pixel kernels of the SAXS stages as native Catalyst expressions.
+  * There are six: [[beamAnalysis]], the one beam kernel (K2–K6, run once
+  * per direct frame by `determine_beam_center`), the four sums
+  * [[fluxSum]], [[circleFluxSum]], [[nanSum]] and [[maskedNanSum]], and
+  * [[rescale]].
   *
   * Each kernel is a [[graft.functions.Kernel]] run by the engine's one
   * native-expression shape, [[graft.functions.KernelExpr]]: its generated
@@ -26,7 +30,6 @@ import graft.functions.Kernel
   */
 object ImageExprs {
 
-  private val DoubleArray = ArrayType(DoubleType, containsNull = false)
   private val Image = ArrayType(FloatType)
 
   /** The beam-analysis struct, typed as the `Model.BeamAnalysis` encoder. */
@@ -37,10 +40,6 @@ object ImageExprs {
   private def int(v: Any) = v.asInstanceOf[Int]
   private def dbl(v: Any) = v.asInstanceOf[Double]
 
-  case object BeamCentroid
-      extends Kernel(Owner, "beamCentroid", Seq(Image, IntegerType, IntegerType), DoubleArray) {
-    def call(a: Array[Any]): Any = beamCentroid(img(a(0)), int(a(1)), int(a(2)))
-  }
   case object BeamAnalysis extends Kernel(Owner, "beamAnalysis",
       Seq(Image, IntegerType, IntegerType), BeamAnalysisType) {
     def call(a: Array[Any]): Any = beamAnalysis(img(a(0)), int(a(1)), int(a(2)))
@@ -68,11 +67,8 @@ object ImageExprs {
 
   // ------------------------------------------------------ column builders
 
-  /** K2–K4 beam centre `[y, x]` of the prepared image's main feature; null
-    * when no beam is found. */
-  def beamCentroid(img: Column, h: Column, w: Column): Column = BeamCentroid(img, h, w)
-
-  /** K6 dynamic beam analysis, a struct shaped as `Model.BeamAnalysis`. */
+  /** K2–K6 on one frame: prepare, label, K4's beam `center` and K6's
+    * dynamic beam analysis, a struct shaped as `Model.BeamAnalysis`. */
   def beamAnalysis(img: Column, h: Column, w: Column): Column = BeamAnalysis(img, h, w)
 
   /** K7 + K8 `nanSum(fluxImage(img, t, dark))` without the flux image. */
@@ -112,22 +108,12 @@ object ImageExprs {
     out
   }
 
-  def beamCentroid(a: ArrayData, h: Int, w: Int): ArrayData = {
-    val p = prepared(a)
-    val labels = ImageKernels.labelMainFeature(p, h, w)
-    val (cy, cx) = ImageKernels.weightedCentroid(p, labels, h, w)
-    // no beam found (reference raises ValueError, utilities.py:165-166):
-    // a null beam_center routes the row to the canStack quarantine — NaN
-    // coordinates would slip through the isNotNull gate and poison the
-    // stacked statistics instead
-    if (cy.isNaN || cx.isNaN) null else UnsafeArrayData.fromPrimitiveArray(Array(cy, cx))
-  }
-
   def beamAnalysis(a: ArrayData, h: Int, w: Int): InternalRow = {
     val b = ImageKernels.preparedBeamAnalysis(prepared(a), h, w)
     new GenericInternalRow(Array[Any](b.comY, b.comX, b.sigmaMinor, b.sigmaMajor,
       b.theta, b.kSigma, b.achievedCoverage, b.regionIntensity, b.totalIntensity,
-      UnsafeArrayData.fromPrimitiveArray(b.mask)))
+      UnsafeArrayData.fromPrimitiveArray(b.mask),
+      if (b.center == null) null else UnsafeArrayData.fromPrimitiveArray(b.center)))
   }
 
   def fluxSum(a: ArrayData, t: Double, dark: Double): Double = {

@@ -293,9 +293,10 @@ object ImageKernels {
     * bisect k over [0.5, 5.0] (8 steps, midpoint returned) so the kept
     * fraction of the LABELED intensity meets the target, and intersect the
     * final mask with the labels so the ellipse never bleeds outside the
-    * beam region. Returned centroid is the mask-region weighted centroid;
-    * `achievedCoverage` = kept / labeled intensity; `totalIntensity` is the
-    * prepared whole-image sum. */
+    * beam region. `comY`/`comX` is the mask-region weighted centroid,
+    * `center` K4's [[weightedCentroid]] of the labeled region (null when no
+    * beam is found); `achievedCoverage` = kept / labeled intensity;
+    * `totalIntensity` is the prepared whole-image sum. */
   def dynamicBeamAnalysis(img: Array[Float], h: Int, w: Int): BeamAnalysis =
     preparedBeamAnalysis(prepareImage(img), h, w)
 
@@ -318,26 +319,12 @@ object ImageKernels {
     }
     if (labeled <= 0.0) // reference: regionprops m00 <= 0 -> no beam
       return BeamAnalysis(Double.NaN, Double.NaN, Double.NaN, Double.NaN,
-        Double.NaN, Double.NaN, 0.0, 0.0, total, new Array[Float](n))
+        Double.NaN, Double.NaN, 0.0, 0.0, total, new Array[Float](n), null)
 
-    // weighted centroid + covariance over the LABELED region
-    var sy = 0.0; var sx = 0.0
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val idx = y * w + x
-        if (labels(idx) == 1) {
-          val v = prepared(idx).toDouble
-          sy += v * y; sx += v * x
-        }
-        x += 1
-      }
-      y += 1
-    }
-    val cy = sy / labeled; val cx = sx / labeled
+    // weighted centroid (K4's beam centre) + covariance over the LABELED region
+    val (cy, cx) = weightedCentroid(prepared, labels, h, w)
     var cyy = 0.0; var cxx = 0.0; var cxy = 0.0
-    y = 0
+    var y = 0
     while (y < h) {
       var x = 0
       while (x < w) {
@@ -424,7 +411,7 @@ object ImageKernels {
     val (comY, comX) =
       if (region > 0) (msy / region, msx / region) else (cy, cx)
     BeamAnalysis(comY, comX, sigmaMinor, sigmaMajor, theta, k,
-      region / labeled, region, total, mask)
+      region / labeled, region, total, mask, Array(cy, cx))
   }
 
   /** K7 flux image: img/duration - darkcurrent per pixel

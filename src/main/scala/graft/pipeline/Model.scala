@@ -68,8 +68,14 @@ object Model {
       maskW: Int,
       path: String)
 
-  /** Output of the dynamic beam analysis kernel (K6):
-    * `/root/reference/src/processstep_calc_beam_flux_and_transmissions.py:24-145`. */
+  /** Output of the one beam kernel, K2–K6 on the direct frame: K6's dynamic
+    * beam analysis (`processstep_calc_beam_flux_and_transmissions.py:24-145`)
+    * and K4's beam `center` `[y, x]`, the intensity-weighted centroid of the
+    * labelled main feature (`processstep_determine_beam_center.py`). `center`
+    * is null when no beam is found: the reference raises there
+    * (`utilities.py:165-166`), and a null `beam_center` routes the row to
+    * the canStack quarantine, where NaN coordinates would pass its
+    * `isNotNull` gate and poison the stacked statistics. */
   case class BeamAnalysis(
       comY: Double,
       comX: Double,
@@ -80,5 +86,6 @@ object Model {
       achievedCoverage: Double,
       regionIntensity: Double,
       totalIntensity: Double,
-      mask: Array[Float])
+      mask: Array[Float],
+      center: Array[Double])
 }

@@ -25,21 +25,36 @@ import graft.SharedFrames
   * groupBy with a mergeable per-pixel aggregator (no collect_list of
   * images) — and the snapshot write run in the window's partitions;
   * everything else is row-local.
+  *
+  * The direct beam is analysed once: [[determineBeamCenter]] is the only
+  * producer of the K2–K6 beam quantities. It writes the `direct_analysis`
+  * struct (`Model.BeamAnalysis`) and `beam_center` from it; the flux step
+  * and [[calcBeamShapeInfo]] read `direct_analysis`, so a step list that
+  * runs either must run `determine_beam_center` before it, and a list
+  * without it fails at analysis naming `direct_analysis`. Both shipped
+  * lists ([[defaultSteps]], [[referenceSteps]]) run it after
+  * `average_to_counts`, as the reference does.
   */
 object Stages {
 
-  /** Pipeline context: dimension tables + instrument constants
-    * (`MOUSE_settings.yaml` equivalents). `caches` holds the frames stages
-    * persist — stages are lazy transforms, so they can never unpersist
-    * themselves without losing the cache before it is read; the driver
-    * calls `caches.release()` after materializing the pipeline output. */
+  /** Pipeline context: the dimension tables and the frames stages persist.
+    * `logbook` is a `Model.LogbookEntry` frame (`XlsxLogbook.logbook`
+    * builds one from the xlsx); `metadata_update` reads its columns by name.
+    * `caches` holds the frames stages persist — stages are lazy transforms,
+    * so they can never unpersist themselves without losing the cache before
+    * it is read; whoever runs the pipeline calls `caches.release()` after
+    * materializing its output. */
   case class Context(
       logbook: DataFrame,
       masks: DataFrame,
-      refBeamDiameterPx: Double = 10.0,
-      refDistanceM: Double = 1.0,
-      hcKevAngstrom: Double = 12.398419843320026,
       caches: SharedFrames.Scope = new SharedFrames.Scope)
+
+  /** Instrument constants (`MOUSE_settings.yaml` equivalents): the beam
+    * mask's diameter at the reference distance (K5) and h·c for the
+    * wavelength -> energy conversion (K11). */
+  private val RefBeamDiameterPx = 10.0
+  private val RefDistanceM = 1.0
+  private val HcKevAngstrom = 12.398419843320026
 
   type Stage = (DataFrame, Context) => DataFrame
 
@@ -51,11 +66,13 @@ object Stages {
 
   // ------------------------------------------------------------------ steps
 
-  /** J1 + K11 + K17: logbook broadcast join, energy, identifiers
-    * (`processstep_metadata_update.py`). 'None'/'' dispersant sentinel ->
-    * null key (J4). The wavelength goes through the translator's unit
-    * table into angstrom; unknown or null units give a null energy (the
-    * NaN test is needed: Spark orders NaN above every number, so NaN > 0). */
+  /** J1 + K11 + K17: logbook broadcast join, energy, identifiers and the
+    * typed composition (`processstep_metadata_update.py`; the logbook is a
+    * `Model.LogbookEntry` frame, see [[Context]]). 'None'/'' dispersant
+    * sentinel -> null key (J4). The wavelength goes through the
+    * translator's unit table into angstrom; unknown or null units give a
+    * null energy (the NaN test is needed: Spark orders NaN above every
+    * number, so NaN > 0). */
   val metadataUpdate: Stage = (df, ctx) => {
     val lb = ctx.logbook.withColumnRenamed("ymd", "lb_ymd")
     val angstrom = TreeTable.inUnits(col("incidentWavelength.value"),
@@ -64,7 +81,7 @@ object Stages {
         df("ymd") === lb("lb_ymd") && df("batch") === lb("batchnum"), "left")
       .drop("lb_ymd", "batchnum")
       .withColumn("energy_kev",
-        when(angstrom > 0 && !isnan(angstrom), lit(ctx.hcKevAngstrom) / angstrom))
+        when(angstrom > 0 && !isnan(angstrom), lit(HcKevAngstrom) / angstrom))
       .withColumn("collection_identifier",
         concat(col("ymd"), lit("_"), col("batch")))
       .withColumn("background_identifier",
@@ -75,10 +92,7 @@ object Stages {
           concat(col("dbgymd"), lit("_"), col("dbgnumber"))))
       // typed sample components from the logbook's composition formula
       // (logbook2mouse sample modeling; null when blank/unparseable)
-      .transform(d =>
-        if (d.columns.contains("composition"))
-          d.withColumn("composition_components", compositionUdf(col("composition")))
-        else d)
+      .withColumn("composition_components", compositionUdf(col("composition")))
   }
 
   /** J2 + J5: backward as-of mask selection per configuration, carrying the
@@ -119,28 +133,41 @@ object Stages {
         payload.map(col): _*)
   }
 
-  /** K2–K4: beam center of the direct-beam profile
-    * (`processstep_determine_beam_center.py`). F2 gate: needs directBeam. */
+  /** K2–K6: the one beam kernel on the direct-beam profile
+    * (`processstep_determine_beam_center.py`, and the flux step's
+    * `dynamic_beam_analysis(DirectBeamData)` on the same raw frame): one
+    * prepare and one labelling give K4's `beam_center` and the
+    * `direct_analysis` struct the later steps read. F2 gate: needs
+    * directBeam. */
   val determineBeamCenter: Stage = (df, _) =>
-    df.withColumn("beam_center",
-      when(col("directBeam").isNotNull,
-        ImageExprs.beamCentroid(col("directBeam"), col("directH"), col("directW"))))
+    df.withColumn("direct_analysis",
+        when(col("directBeam").isNotNull,
+          ImageExprs.beamAnalysis(col("directBeam"), col("directH"), col("directW"))))
+      .withColumn("beam_center", col("direct_analysis.center"))
+
+  /** K6's beam shape as columns, read from [[determineBeamCenter]]'s
+    * `direct_analysis`. */
+  private def withBeamShape(df: DataFrame): DataFrame =
+    df.withColumn("sigma_minor", col("direct_analysis.sigmaMinor"))
+      .withColumn("sigma_major", col("direct_analysis.sigmaMajor"))
+      .withColumn("beam_theta", col("direct_analysis.theta"))
 
   /** K5: the circular beam mask's geometry, radius scaled by distance
     * (`processstep_make_beam_mask.py:19-35,85-90`); the distance goes
     * through the translator's unit table (§1.2), unknown units -> NaN. The
     * step emits scalars only: the flux step tests the circle around
     * `beam_center` per pixel, so no mask image is built. */
-  val makeBeamMask: Stage = (df, ctx) => {
+  val makeBeamMask: Stage = (df, _) => {
     def meters(q: String) = TreeTable.inUnits(col(s"$q.value"), col(s"$q.units"), "m")
     val distance = meters("detX") - meters("sampleX")
     df.withColumn("beam_center_distance_m", distance)
       .withColumn("beam_mask_radius",
-        lit(ctx.refBeamDiameterPx / 2.0) * col("beam_center_distance_m") / lit(ctx.refDistanceM))
+        lit(RefBeamDiameterPx / 2.0) * col("beam_center_distance_m") / lit(RefDistanceM))
   }
 
-  /** K6–K10: flux images, dynamic beam analysis, transmissions, scattering
-    * probability (`processstep_calc_beam_flux_and_transmissions.py:207-225`).
+  /** K7–K10: flux sums, transmissions, scattering probability, and K6's
+    * beam shape columns
+    * (`processstep_calc_beam_flux_and_transmissions.py:207-225`).
     *
     * Reference semantics, exactly: `DirectFlux`/`SampleFlux` are the sums
     * UNDER the circular distance-scaled beam mask (K5, `BeamMaskPath`: radius
@@ -161,8 +188,10 @@ object Stages {
     * `(float)(v / t - dark)` on the fly (K7 + K8 fused), so no flux image
     * is materialized; the per-pixel rounding is the same, so are the sums.
     * The two beam sums test the circle per pixel (K5 fused), so no mask
-    * image is built either. The tight mask leaves `direct_analysis` once the
-    * scattering probability has read it: no mask image outlives the step. */
+    * image is built either. The dynamic analysis is [[determineBeamCenter]]'s
+    * `direct_analysis`, not computed again; its tight mask leaves the struct
+    * once the scattering probability has read it: no mask image outlives
+    * the step. */
   val calcFluxAndTransmissions: Stage = (df, _) => {
     val dark = col("darkcurrent")
     def fluxOverImage(img: String, time: String): Column =
@@ -175,11 +204,6 @@ object Stages {
         ImageExprs.circleFluxSum(col(img), col(time), dark, col("directH"), col("directW"),
           col("beam_center")(0), col("beam_center")(1), col("beam_mask_radius")))
     df
-      // tight-mask analysis runs on the RAW direct image, as the reference's
-      // dynamic_beam_analysis(DirectBeamData) does
-      .withColumn("direct_analysis",
-        when(col("directBeam").isNotNull,
-          ImageExprs.beamAnalysis(col("directBeam"), col("directH"), col("directW"))))
       // whole-image flux sums (reference *FluxOverImage)
       .withColumn("direct_flux_over_image", fluxOverImage("directBeam", "directFrameTime"))
       .withColumn("sample_flux_over_image", fluxOverImage("sampleBeam", "sampleFrameTime"))
@@ -203,9 +227,7 @@ object Stages {
       .withColumn("scattering_probability_estimate",
         (col("__sample_total") - col("__sample_tight")) / col("__sample_total"))
       .withColumn("direct_analysis", col("direct_analysis").dropFields("mask"))
-      .withColumn("sigma_minor", col("direct_analysis.sigmaMinor"))
-      .withColumn("sigma_major", col("direct_analysis.sigmaMajor"))
-      .withColumn("beam_theta", col("direct_analysis.theta"))
+      .transform(withBeamShape)
       .drop("__sample_total", "__sample_tight")
   }
 
@@ -363,19 +385,10 @@ object Stages {
   }
 
   /** Beam-shape info (`processstep_calc_beam_shape_info.py:31-56`): sigma
-    * minor/major and theta of the direct-beam profile. The flux step already
-    * emits these as a by-product of its beam analysis; run standalone, the
-    * stage computes them from the direct beam without the flux machinery. */
-  val calcBeamShapeInfo: Stage = (df, _) =>
-    if (df.columns.contains("sigma_minor")) df
-    else df
-      .withColumn("__shape",
-        when(col("directBeam").isNotNull,
-          ImageExprs.beamAnalysis(col("directBeam"), col("directH"), col("directW"))))
-      .withColumn("sigma_minor", col("__shape.sigmaMinor"))
-      .withColumn("sigma_major", col("__shape.sigmaMajor"))
-      .withColumn("beam_theta", col("__shape.theta"))
-      .drop("__shape")
+    * minor/major and theta of the direct-beam profile, read from
+    * [[determineBeamCenter]]'s `direct_analysis` with or without the flux
+    * step, which emits the same three columns. */
+  val calcBeamShapeInfo: Stage = (df, _) => withBeamShape(df)
 
   /** S16 (`processstep_cleanup_files.py:20-40`): the reference deletes its
     * step-1 intermediate `.nxs`; this engine never materializes one (the

@@ -29,8 +29,10 @@ import graft.pipeline.TreeTable.TreeRow
   */
 object Hdf5Source {
 
-  // binaryFile's fixed schema — streaming sources must state it explicitly
-  private val binaryFileSchema = StructType(Seq(
+  /** binaryFile's fixed schema, which a streaming read must state
+    * explicitly: [[treeStream]] and [[graft.streaming.Watcher.fileEvents]]
+    * use it. */
+  private[graft] val binaryFileSchema = StructType(Seq(
     StructField("path", StringType),
     StructField("modificationTime", TimestampType),
     StructField("length", LongType),

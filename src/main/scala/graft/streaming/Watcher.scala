@@ -5,7 +5,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.sources.RepetitionScan
+import graft.sources.{Hdf5Source, RepetitionScan}
 
 /** Streaming translation of the reference's filesystem watcher
   * (`/root/reference/src/watcher.py`, SURVEY §2.9 / §3.3):
@@ -126,12 +126,8 @@ object Watcher {
   def fileEvents(spark: SparkSession, dataRoot: String): Dataset[FileEvent] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    // streaming file sources require an explicit schema; binaryFile's is
-    // fixed by the format
-    val binaryFileSchema = org.apache.spark.sql.types.StructType.fromDDL(
-      "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY")
     spark.readStream.format("binaryFile")
-      .schema(binaryFileSchema)
+      .schema(Hdf5Source.binaryFileSchema)
       .option("recursiveFileLookup", "true") // rep dirs nest 2-3 levels deep
       .load(dataRoot)
       .select(col("path"), col("modificationTime"))

@@ -78,7 +78,6 @@ class ImageExprsSpec extends SparkSpec {
       col("h"), col("w"), col("cy"), col("cx"), col("r")).as("cflux"),
     ImageExprs.nanSum(col("img")).as("sum"),
     ImageExprs.maskedNanSum(col("img"), col("mask")).as("msum"),
-    ImageExprs.beamCentroid(col("img"), col("h"), col("w")).as("centre"),
     ImageExprs.beamAnalysis(col("img"), col("h"), col("w")).as("ba"),
     ImageExprs.rescale(col("img"), col("n")).as("counts"),
     transform(col("img"), x => (x * col("n")).cast("float")).as("counts_hof"))
@@ -137,26 +136,27 @@ class ImageExprsSpec extends SparkSpec {
           assert(same(r.getDouble(3), ImageKernels.nanSum(in.img)), s"sum ${in.id}")
           assert(same(r.getDouble(4), ImageKernels.maskedNanSum(in.img, in.mask)), s"msum ${in.id}")
 
-          val prepared = ImageKernels.prepareImage(in.img)
-          val (cy, cx) = ImageKernels.weightedCentroid(prepared,
-            ImageKernels.labelMainFeature(prepared, in.h, in.w), in.h, in.w)
-          if (cy.isNaN || cx.isNaN) assert(r.isNullAt(5), s"centre ${in.id}")
-          else {
-            centred += 1
-            val c = r.getSeq[Double](5)
-            assert(same(c(0), cy) && same(c(1), cx), s"centre ${in.id}")
-          }
-
           val b = ImageKernels.dynamicBeamAnalysis(in.img, in.h, in.w)
-          val ba = r.getStruct(6)
+          val ba = r.getStruct(5)
           Seq(b.comY, b.comX, b.sigmaMinor, b.sigmaMajor, b.theta, b.kSigma,
             b.achievedCoverage, b.regionIntensity, b.totalIntensity).zipWithIndex.foreach {
             case (v, i) => assert(same(ba.getDouble(i), v), s"analysis field $i ${in.id}")
           }
           assert(sameBits(floats(ba, 9), b.mask.toSeq), s"analysis mask ${in.id}")
 
-          assert(sameBits(floats(r, 7), floats(r, 8)), s"rescale vs transform ${in.id}")
-          assert(sameBits(floats(r, 7), in.img.map(v => (v * in.n).toFloat).toSeq),
+          // K4's beam centre against the label + centroid oracle
+          val prepared = ImageKernels.prepareImage(in.img)
+          val (cy, cx) = ImageKernels.weightedCentroid(prepared,
+            ImageKernels.labelMainFeature(prepared, in.h, in.w), in.h, in.w)
+          if (cy.isNaN || cx.isNaN) assert(ba.isNullAt(10), s"centre ${in.id}")
+          else {
+            centred += 1
+            val c = ba.getSeq[Double](10)
+            assert(c.length == 2 && same(c(0), cy) && same(c(1), cx), s"centre ${in.id}")
+          }
+
+          assert(sameBits(floats(r, 6), floats(r, 7)), s"rescale vs transform ${in.id}")
+          assert(sameBits(floats(r, 6), in.img.map(v => (v * in.n).toFloat).toSeq),
             s"rescale ${in.id}")
         }
         assert(centred > 0 && centred < inputs.length, "both centroid outcomes covered")
@@ -180,10 +180,10 @@ class ImageExprsSpec extends SparkSpec {
           "array(cast(1 AS float), cast(1 AS float), cast(1 AS float), cast(1 AS float)) AS mask",
           "CASE WHEN id = 0 THEN 0.0d END AS cy", "0.0d AS cx", "1.0d AS r", "3.0d AS n"))
         val rows = natives(df).orderBy("id").collect()
-        (1 to 8).foreach(i => assert(rows(1).isNullAt(i), s"column $i on a null input"))
+        (1 to 7).foreach(i => assert(rows(1).isNullAt(i), s"column $i on a null input"))
         val r = rows(0)
-        assert(sameBits(floats(r, 7), Seq(4.5f, null, -6.75f, Float.NaN)))
-        assert(sameBits(floats(r, 7), floats(r, 8)))
+        assert(sameBits(floats(r, 6), Seq(4.5f, null, -6.75f, Float.NaN)))
+        assert(sameBits(floats(r, 6), floats(r, 7)))
         // a null pixel is a missing pixel in the sums, like NaN
         assert(r.getDouble(3) == 1.5 - 2.25)
         assert(r.getDouble(1) == 0.5 - 1.375)

@@ -420,8 +420,32 @@ class PipelineSpec extends SparkSpec {
       // dropping the field does not evaluate the beam analysis again
       val kernels = planExpressions(plan).collect { case k: KernelExpr => k.kernel.method }
       assert(kernels.count(_ == "beamAnalysis") == 1, kernels)
-      assert(!kernels.contains("circularMask"), kernels)
+      assert(!kernels.contains("circularMask") && !kernels.contains("beamCentroid"), kernels)
     } finally ctx2.caches.release()
+  }
+
+  test("calc_beam_shape_info reads determine_beam_center's analysis, with or without the flux step") {
+    val ctx2 = ctx.copy(caches = new SharedFrames.Scope)
+    def shapes(steps: Seq[String]): Map[Row, Seq[Long]] =
+      Stages.run(Fixtures.repetitions(spark), ctx2, steps)
+        .select("ymd", "batch", "repetition", "configuration",
+          "sigma_minor", "sigma_major", "beam_theta")
+        .collect().map(r => Row(r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3)) ->
+          (4 to 6).map(i => java.lang.Double.doubleToLongBits(r.getDouble(i)))).toMap
+    try {
+      // the reference list up to its summary table, which keeps no shape
+      val reference = shapes(Stages.referenceSteps.dropRight(1))
+      val standalone =
+        shapes(Seq("average_to_counts", "determine_beam_center", "calc_beam_shape_info"))
+      assert(reference.size == 12 && standalone == reference, (standalone, reference))
+      assert(reference.values.forall(_.forall(b => !java.lang.Double.longBitsToDouble(b).isNaN)))
+    } finally ctx2.caches.release()
+    // the shape step has no fallback: without its producer it fails at
+    // analysis, naming the column it reads
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      Stages.run(Fixtures.repetitions(spark), ctx, Seq("average_to_counts", "calc_beam_shape_info"))
+    }
+    assert(e.getMessage.contains("direct_analysis"), e.getMessage)
   }
 
   test("plan guard: image kernels are native expressions, masks join by broadcast") {
